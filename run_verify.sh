@@ -1,16 +1,7 @@
 #!/bin/bash
 # Local helper: run graft.Verify with the same JVM flags sbt would use.
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
 # Heap override for big-corpus sweeps: the 8x/32x replica sweeps at
 # local[32] exhausted 8g in round 13 (GCLocker retry storm killed the
 # SparkContext mid-sweep); default stays 8g for the gate scales.
-exec java $ADD_OPENS -Xmx${SPARK_GRAFT_XMX:-8g} -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+exec java @"$(dirname "$0")/tools/jdk-add-opens.args" -Xmx${SPARK_GRAFT_XMX:-8g} -cp "$CP" "$@"

@@ -108,19 +108,8 @@ object Bench {
     // shuffle spill) exists to catch.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE on cached plans (see Sessions.local): without it every write
-      // of a persisted frame emits shuffle-partition-count near-empty files.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      // driver-side listing up to 512 partition dirs (see Sessions.local)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local("graft-bench", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     spark.sparkContext.setLogLevel("ERROR")
     // Untimed warmup: absorb JVM/codegen/scan-infrastructure startup so the
     // first measured query isn't charged ~5s of fixed cost.
@@ -138,22 +127,16 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     // Optional comma-separated allowlist (scaling experiments run a
     // headline subset on larger-than-sf0.1 data); default = full catalog.
-    // Unknown names fail loudly — a typo'd subset must not masquerade as a
-    // fast full run — and subset runs are marked as such in the JSON.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(",").map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_QUERIES names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    // Subset runs are marked as such in the JSON.
+    val allowed = graft.queries.Queries.allowlisted("SPARK_GRAFT_BENCH_QUERIES")
     // SPARK_GRAFT_BENCH_32X=1: the 32×-replica sweep — full catalog MINUS
     // the audited [[Excluded32x]] map, so the subset is derived from the
     // reviewed allowlist instead of a hand-typed name list (a typo or a
     // silently-grown exclusion set can no longer shrink the guard).
     val exclude32x: Set[String] =
       if (sys.env.get("SPARK_GRAFT_BENCH_32X").contains("1")) Excluded32x.keySet else Set.empty
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) && !exclude32x.contains(name) }
+    val selected = allowed.toSeq.sortBy(_._1)
+      .filter { case (name, _) => !exclude32x.contains(name) }
     // SPARK_GRAFT_BENCH_SETTLE=<ms>: inter-query settle for the replica-
     // corpus sweeps. Spark's ContextCleaner releases the PREVIOUS query's
     // shuffle files and broadcast state only when a GC surfaces their
@@ -249,7 +232,7 @@ object Bench {
     // driver-side, which cost round 14 its entire per-query PERF
     // comparison); BenchSpec round-trips them through a JSON parser so
     // a format regression fails in `sbt test`, not in the next round.
-    val subset = only.nonEmpty || exclude32x.nonEmpty
+    val subset = sys.env.contains("SPARK_GRAFT_BENCH_QUERIES") || exclude32x.nonEmpty
     println(fullLine(results, sfDir, subset, contended, failed))
     val maxLoad = if (sweep.nonEmpty) sweep.map(_._3).max else 0.0
     println(compactLine(results, sfDir, subset, maxLoad, contended.size, failed.size))

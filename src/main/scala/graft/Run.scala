@@ -128,99 +128,6 @@ object Run {
         }
         println(s"[lifecycle] daily state rows: $n, state bytes: ${du(out2)}")
       } finally spark.stop()
-    case "srpauto" :: dir :: rest =>
-      // Capacity probe: occupancy-targeted SRP near-dup vs the fixed q40
-      // band config on the same embeddings — the scaling comparison
-      // behind SCALING.md (the fixed config is quadratic in n).
-      val tau = rest.headOption.map(_.toDouble).getOrElse(0.95)
-      val spark = Sessions.local("graft-srpauto")
-      try {
-        val emb = graft.core.Tables(spark, dir, "embeddings")
-        val n = emb.count()
-        val (bands, bits) = graft.sim.Similarity.srpParams(n, tau)
-        for ((label, df) <- Seq(
-            s"auto(${bands}x$bits)" -> graft.sim.Similarity.srpNearDupPairs(emb, tau, bands, bits),
-            "fixed(24x8)" -> graft.sim.Similarity.srpNearDupPairs(emb, tau))) {
-          val t0 = System.nanoTime()
-          val rows = df.count()
-          println(f"[srpauto] n=$n $label: $rows pairs in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-      } finally spark.stop()
-    case "semauto" :: dir :: rest =>
-      // Capacity probe: occupancy-scaled SemDeDup (k = ceil(n/targetCell))
-      // vs the fixed q108 k=16 on the same embeddings — the scaling
-      // comparison behind SCALING.md (fixed k is quadratic per cell).
-      val tau = rest.headOption.map(_.toDouble).getOrElse(0.45)
-      val spark = Sessions.local("graft-semauto")
-      try {
-        val emb = graft.core.Tables(spark, dir, "embeddings")
-        val n = emb.count()
-        val k = math.max(1, math.min(2048, math.ceil(n / 128.0).toInt))
-        for ((label, df) <- Seq(
-            s"auto(k=$k)" -> graft.sim.Similarity.semanticDedup(emb, tau),
-            "fixed(k=16)" -> graft.sim.Similarity.semanticDedupK(emb, tau, k = 16))) {
-          val t0 = System.nanoTime()
-          val rows = df.count()
-          println(f"[semauto] n=$n $label: $rows dropped in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-      } finally spark.stop()
-    case "hier" :: dir :: rest =>
-      // Capacity probe: flat vs hierarchical (multi-probe coarse-routed)
-      // IVF assignment at a large-k codebook — the SCALING.md comparison
-      // for the O(n·k) assignment term.
-      val k = rest.headOption.map(_.toInt).getOrElse(1024)
-      val spark = Sessions.local("graft-hier")
-      try {
-        val emb = graft.core.Tables(spark, dir, "embeddings")
-        val model = graft.sim.IvfIndex.train(emb, k = k, iters = 0, sampleN = math.max(2048, k))
-        for ((label, df) <- Seq(
-            "flat" -> graft.sim.IvfIndex.assign(emb, model),
-            "hier(sqrt-k,p=4)" -> graft.sim.IvfIndex.assignHierarchical(emb, model))) {
-          val t0 = System.nanoTime()
-          val cells = df.select("cluster").distinct().count()
-          println(f"[hier] k=$k $label: $cells cells in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-      } finally spark.stop()
-    case "hiertrain" :: dir :: rest =>
-      // Capacity probe: ONE distributed Lloyd round at large k under the
-      // three assigners — flat (n·k·dim), exhaustive hierarchical
-      // (√k + √k·√k routing, bit-equal result) and production
-      // approximate routing (√k + nProbe·√k) — the SCALING.md
-      // comparison for the per-round assignment term inside training.
-      val k = rest.headOption.map(_.toInt).getOrElse(256)
-      val spark = Sessions.local("graft-hiertrain")
-      try {
-        val emb = graft.core.Tables(spark, dir, "embeddings")
-        val init = graft.sim.IvfIndex.train(emb, k = k, iters = 0, sampleN = math.max(2048, k))
-        val assigners: Seq[(String, (org.apache.spark.sql.DataFrame, graft.sim.IvfIndex.Model) => org.apache.spark.sql.DataFrame)] = Seq(
-          "flat" -> (graft.sim.IvfIndex.assign _),
-          "hier-exact" -> (graft.sim.IvfIndex.assignHierarchicalExact _),
-          "hier-p4" -> ((df, m) => graft.sim.IvfIndex.assignHierarchical(df, m, nProbe = 4)))
-        for ((label, assigner) <- assigners) {
-          val t0 = System.nanoTime()
-          graft.sim.IvfIndex.trainDistributed(emb, init, iters = 1, assigner = assigner)
-          println(f"[hiertrain] k=$k $label: 1 round in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-      } finally spark.stop()
-    case "opqdist" :: dir :: rest =>
-      // Capacity probe: ONE OPQ alternation (1 Lloyd round + the
-      // Procrustes stats pass + the d×d polar factor) of the
-      // full-corpus trainer, vs the bounded-sample trainer at the same
-      // iteration budget — the SCALING.md evidence that a distributed
-      // alternation costs a constant number of linear corpus passes.
-      val numSub = rest.headOption.map(_.toInt).getOrElse(8)
-      val spark = Sessions.local("graft-opqdist")
-      try {
-        val emb = graft.core.Tables(spark, dir, "embeddings")
-        var t0 = System.nanoTime()
-        graft.sim.PqIndex.trainOpqDistributed(emb, numSub = numSub, ksub = 16,
-          opqIters = 1, pqIters = 1)
-        println(f"[opqdist] distributed: 1 alternation in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        t0 = System.nanoTime()
-        graft.sim.PqIndex.trainOpq(emb, numSub = numSub, ksub = 16,
-          opqIters = 1, pqIters = 1)
-        println(f"[opqdist] sample-2048: 1 alternation in ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      } finally spark.stop()
     case "curate" :: dir :: rest =>
       // End-to-end ONLINE CURATION demo: the documents table delivered
       // as N batches through StreamingJobs.curateStream (served-ids
@@ -256,98 +163,6 @@ object Run {
             println("[curate] curated table: empty (no batch admitted any document)")
         }
       } finally spark.stop()
-    case "blob-bench" :: benchRest =>
-      // Microbenchmark the per-asset blob write paths (q226 storage leg).
-      // Optional arg = asset count (default 5000; q226's 8×-replica
-      // export shape is ~80000).
-      val dir = java.nio.file.Files.createTempDirectory("blobbench").toFile.getAbsolutePath
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val n = benchRest.headOption.map(_.toInt).getOrElse(5000)
-      val payload = Array.fill[Byte](1500)(7)
-      val nioDir = new java.io.File(dir, "nio"); nioDir.mkdirs()
-      var t0 = System.nanoTime()
-      (0 until n).foreach { i =>
-        java.nio.file.Files.write(java.nio.file.Paths.get(nioDir.getPath, s"$i.png"), payload)
-      }
-      println(f"[blob-bench] nio: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val p = new org.apache.hadoop.fs.Path(s"$dir/had")
-      val fs = p.getFileSystem(conf)
-      fs.setWriteChecksum(false)
-      fs.mkdirs(p)
-      t0 = System.nanoTime()
-      (0 until n).foreach { i =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, s"$i.png"), true)
-        try out.write(payload) finally out.close()
-      }
-      println(f"[blob-bench] hadoop local (checksum off): ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val raw = new org.apache.hadoop.fs.RawLocalFileSystem()
-      raw.initialize(java.net.URI.create("file:///"), conf)
-      val p3 = new org.apache.hadoop.fs.Path(s"$dir/raw"); raw.mkdirs(p3)
-      t0 = System.nanoTime()
-      (0 until n).foreach { i =>
-        val out = raw.create(new org.apache.hadoop.fs.Path(p3, s"$i.png"), true)
-        try out.write(payload) finally out.close()
-      }
-      println(f"[blob-bench] hadoop raw: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      // The writeBlobs NON-LOCAL branch end-to-end through Spark over a
-      // mock:// object-store double (round-13 verdict item 6): per-
-      // partition FS resolution + uncached-instance setup + one create
-      // stream per asset — the plumbing whose "connection setup
-      // amortized per partition" claim this turns into a creates/s
-      // number. RunMockFs no-ops the POSIX permission call: the chmod
-      // PROCESS RawLocalFileSystem otherwise forks per create is the
-      // local-FS artifact already measured by the legs above, and object
-      // stores (the branch's real targets) have no such call.
-      val spark = Sessions.local("graft-blob-bench")
-      try {
-        spark.sparkContext.hadoopConfiguration.set("fs.mock.impl", "graft.RunMockFs")
-        spark.sparkContext.hadoopConfiguration.set("fs.mock.impl.disable.cache", "true")
-        import org.apache.spark.sql.functions.{col, lit}
-        val blobs = spark.range(n).select(col("id"), lit(payload).as("bytes"))
-        // untimed warmup at 1/10 scale: JVM/codegen/scan startup
-        val warmBase = java.nio.file.Files.createTempDirectory("blobbench-warm").toFile.getAbsolutePath
-        graft.core.ArtifactIO.writeBlobs(spark,
-          s"mock://$warmBase/blobs", blobs.limit(math.max(1, n / 10)).toDF(), ".png")
-        val mockBase = java.nio.file.Files.createTempDirectory("blobbench-mock").toFile.getAbsolutePath
-        t0 = System.nanoTime()
-        graft.core.ArtifactIO.writeBlobs(spark, s"mock://$mockBase/blobs", blobs.toDF(), ".png")
-        val mockSec = (System.nanoTime() - t0) / 1e9
-        println(f"[blob-bench] writeBlobs mock:// non-local branch ($n assets): $mockSec%.2fs, ${n / mockSec}%.0f creates/s")
-        val nioBase = java.nio.file.Files.createTempDirectory("blobbench-wnio").toFile.getAbsolutePath
-        t0 = System.nanoTime()
-        graft.core.ArtifactIO.writeBlobs(spark, s"$nioBase/blobs", blobs.toDF(), ".png")
-        val nioSec = (System.nanoTime() - t0) / 1e9
-        println(f"[blob-bench] writeBlobs local NIO fast path ($n assets): $nioSec%.2fs, ${n / nioSec}%.0f creates/s")
-      } finally spark.stop()
-    case "srp-occ" :: dir :: rest =>
-      // Occupancy histogram of q98's pinned-band SRP buckets (design
-      // point 17x8 unless overridden): the evidence behind the
-      // hot-bucket occupancy ceiling — the cap must clear the max
-      // occupancy at every gate scale and bind at 32x, where the
-      // in-bucket candidate self-join would otherwise be quadratic in
-      // occupancy (556 s measured; SCALING.md round-12 addendum).
-      val spark = Sessions.local("graft-srp-occ")
-      try {
-        import org.apache.spark.sql.functions._
-        val (bands, bits) = rest match {
-          case b :: p :: _ => (b.toInt, p.toInt)
-          case _ => graft.sim.Similarity.srpParams(
-            graft.queries.QueriesSim.Q98DesignN, graft.queries.QueriesSim.Q98Tau)
-        }
-        val base = graft.core.Tables(spark, dir, "embeddings").select("vec_id", "embedding")
-        val planted = base.filter(col("vec_id") < 16)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        val planes = graft.sim.Similarity.hyperplanes(bands * bits, 64)
-        val occ = base.unionByName(planted)
-          .select(col("vec_id"), posexplode(
-            org.apache.spark.sql.graft.SrpBandSigs.sigs(col("embedding"), planes, bits))
-            .as(Seq("band", "sig")))
-          .groupBy("band", "sig").count()
-        occ.agg(count(lit(1)).as("buckets"), max("count").as("max_occ"),
-            expr("percentile(count, array(0.5, 0.9, 0.99))").as("p50_90_99"),
-            sum(col("count") * (col("count") - 1) / 2).as("pair_work"))
-          .show(false)
-      } finally spark.stop()
     case "oracle" :: q :: Nil if Queries.oracles.contains(q) =>
       // Print the DuckDB oracle SQL — pipe into duckdb for one-query
       // local verification without a full graft.Verify pass.
@@ -371,18 +186,4 @@ object Run {
     case _ =>
       System.err.println("usage: graft.Run list | graft.Run <query> <sfDir> [outDir]"); sys.exit(2)
   }
-}
-
-/** A `mock://` scheme backed by the local filesystem (the standard
-  * Hadoop-test double, mirroring the test suite's MockSchemeFs) so
-  * `graft.Run blob-bench` can exercise writeBlobs' NON-LOCAL branch
-  * without a real cluster. setPermission is a no-op: without the Hadoop
-  * native library RawLocalFileSystem forks a `chmod` process per create
-  * — a local-FS artifact the blob-bench measures separately, absent on
-  * the object stores this branch actually targets.
-  */
-class RunMockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("mock:///")
-  override def setPermission(p: org.apache.hadoop.fs.Path,
-      permission: org.apache.hadoop.fs.permission.FsPermission): Unit = ()
 }

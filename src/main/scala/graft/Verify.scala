@@ -1,35 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // driver-side listing up to 512 partition dirs (see Sessions.local)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (driver never sets this): same loud-failure
     // contract as Bench's SPARK_GRAFT_BENCH_QUERIES.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES").map(_.split(",").map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_QUERIES names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected = graft.queries.Queries.allowlisted("SPARK_GRAFT_VERIFY_QUERIES")
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {

@@ -126,47 +126,6 @@ object ArtifactIO {
       .filter(n => !markerGated || isCommitted(spark, s"$dir/$n"))
       .map(_.stripPrefix(prefix).toLong).sorted
 
-  /** Version-chain RETENTION — bounds the on-disk copies every
-    * version-chained sink accumulates (aggMaint/joinMaint/boilerMaint
-    * state snapshots grow one full copy per batch; at scale that is
-    * the dominant storage term, not the data). Deletes:
-    *   - committed `<prefix><id>` versions beyond the newest `keep`;
-    *   - UNCOMMITTED version dirs older than the newest committed id —
-    *     crash debris that no replay can ever target again (a
-    *     redelivered batch always carries an id ≥ the newest committed
-    *     one, so an old uncommitted dir is unreachable by contract).
-    * Never touches uncommitted dirs at/after the newest committed id:
-    * that is the in-flight batch a retry will overwrite and commit.
-    *
-    * Safe `keep` for REPLAYABLE sink states is **≥ 2**: the crash
-    * window that matters is version v=b committed but the streaming
-    * checkpoint offset NOT — batch b is then redelivered and must
-    * rebuild from the newest committed version STRICTLY BELOW b (its
-    * predecessor). `keep = 1` run inside that window deletes exactly
-    * that predecessor and the replay would silently restart state
-    * from empty. `keep = 1` is admissible only for chains with no
-    * replay-from-predecessor contract (e.g. full-rebuild artifact
-    * refreshes). [[graft.streaming.StreamingJobs.compactVersions]]
-    * enforces the ≥ 2 floor for the sink states.
-    * Returns the ids deleted (committed ++ debris), for observability.
-    */
-  def retainVersions(spark: SparkSession, dir: String, prefix: String,
-      keep: Int): Seq[Long] = {
-    require(keep >= 1, s"keep must be >= 1, got $keep")
-    val committed = committedVersions(spark, dir, prefix)
-    if (committed.isEmpty) return Seq.empty
-    val newest = committed.last
-    val dropCommitted = committed.dropRight(keep)
-    val debris = list(spark, dir)
-      .filter(_.startsWith(prefix))
-      .filter(n => n.stripPrefix(prefix).nonEmpty && n.stripPrefix(prefix).forall(_.isDigit))
-      .map(_.stripPrefix(prefix).toLong)
-      .filter(id => id < newest && !committed.contains(id))
-    (dropCommitted ++ debris).sorted.map { id =>
-      delete(spark, s"$dir/$prefix$id"); id
-    }
-  }
-
   /** One blob file per row (`<dir>/<id><ext>`), written EXECUTOR-side
     * through the Hadoop [[FileSystem]] API — the per-asset export shape
     * of a multimodal media store (q226's `files` leg). `java.nio` writes
@@ -195,7 +154,7 @@ object ArtifactIO {
           // Local fast path (the atomicCreate pattern): without the
           // Hadoop native library, RawLocalFileSystem.create forks a
           // `chmod` PROCESS per file — measured 6.5 ms/create vs NIO's
-          // 0.03 ms (`graft.Run blob-bench`), a ~20x wall regression on
+          // 0.03 ms (NOTES_r14.md "blob-bench"), a ~20x wall regression on
           // a 5k-asset export. Executors on a real cluster writing to a
           // shared object store never take this branch.
           val base = java.nio.file.Paths.get(new Path(dir).toUri.getPath)
@@ -227,13 +186,6 @@ object ArtifactIO {
         }
       }
     }
-  }
-
-  /** Read one blob whole (small control-plane/media assets only). */
-  def readBytes(spark: SparkSession, path: String): Array[Byte] = {
-    val in = fs(spark, path).open(new Path(path))
-    try in.readAllBytes()
-    finally in.close()
   }
 
   def readString(spark: SparkSession, path: String): String = {

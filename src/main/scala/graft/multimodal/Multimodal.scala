@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §2.C): media payloads are opaque
   * `binary` columns with a typed metadata struct alongside; decode /
@@ -17,11 +16,6 @@ import org.apache.spark.sql.types._
   * plug into.
   */
 object Multimodal {
-  /** Metadata carried next to every payload. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("kind", StringType),
-    StructField("n_bytes", LongType)))
-
   /** Wrap a text table into (id, media: binary, meta) — the ingestion
     * shape for any blob source. At 100 TB, prefer pointers into an object
     * store for large blobs; parquet handles the metadata + small payloads.

@@ -179,13 +179,14 @@ SELECT vec_id_a, vec_id_b, cosine_sim FROM p WHERE cosine_sim >= 0.45 ORDER BY v
     * design point, per-bucket occupancy grows linearly with the corpus
     * and the in-bucket candidate self-join quadratically (556 s at 32×
     * before the cap; SCALING.md). 128 clears the measured max occupancy
-    * at every gate scale with ≥3× headroom (`graft.Run srp-occ`:
-    * sf0.001 max 14, sf0.01 max 12, sf0.1 max 42) — the ceiling binds
-    * NOTHING at the gates, hash-verified unchanged — and bounds total
-    * pair work at ≤ 17·256·128²/2 ≈ 36 M regardless of corpus size
-    * (at 32×, p50 occupancy is 231, so saturated buckets drop instead
-    * of exploding). Production uses srpNearDupPairsAuto, which re-derives
-    * the banding from n and keeps occupancy pinned by construction.
+    * at every gate scale with ≥3× headroom (SCALING.md round-13
+    * "Cliff #2 CLOSED": sf0.001 max 14, sf0.01 max 12, sf0.1 max 42) —
+    * the ceiling binds NOTHING at the gates, hash-verified unchanged —
+    * and bounds total pair work at ≤ 17·256·128²/2 ≈ 36 M regardless of
+    * corpus size (at 32×, p50 occupancy is 231, so saturated buckets
+    * drop instead of exploding). Production uses srpNearDupPairsAuto,
+    * which re-derives the banding from n and keeps occupancy pinned by
+    * construction.
     */
   val Q98MaxBucket = 128
 

@@ -448,12 +448,9 @@ object StreamingJobs {
     graft.core.ArtifactIO.commit(spark, s"$outDir/v=$batchId")
   }
 
-  /** The maintained compaction plan / inventory: highest COMMITTED version. */
+  /** The maintained compaction plan: highest COMMITTED version. */
   def compactionPlan(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/v=${latestVersion(spark, outDir)}/plan")
-
-  def compactionInventory(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/v=${latestVersion(spark, outDir)}/inventory")
 
   private def latestVersion(spark: SparkSession, outDir: String): Long =
     graft.core.ArtifactIO.committedVersions(spark, outDir, "v=").max

@@ -107,6 +107,13 @@ class QueriesSpec extends SparkSpec {
 
   test("every query has a DuckDB oracle") {
     assert(Queries.all.keySet -- Queries.oracles.keySet == Set.empty)
+    // one registry entry per query: a Map literal would drop a duplicate
+    // key silently, the list keeps it for this check to see
+    val names = Queries.registry.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "duplicate registry names")
+    assert(Queries.registry.size == 234)
+    assert(Queries.registry.filter(_.oracleSql.trim.isEmpty).map(_.name).isEmpty)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
   test("every catalog output schema is gate-safe (primitive, no raw decimals)") {

@@ -167,7 +167,8 @@ class SimilaritySpec extends SparkSpec {
   test("q98's ceiling clears the gate fixture's max occupancy with headroom") {
     // The catalog entry's cap (128) must bind NOTHING at gate scales or
     // the hash would shift; this pins the invariant on the spec fixture
-    // the same way `graft.Run srp-occ` measured it on the sf dirs
+    // the same way SCALING.md's round-13 "Cliff #2 CLOSED" section
+    // measured it on the sf dirs
     // (max occupancy 14/12/42 at sf0.001/0.01/0.1).
     val (bands, bits) = Similarity.srpParams(graft.queries.QueriesSim.Q98DesignN,
       graft.queries.QueriesSim.Q98Tau)

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession (local[4]),
-  * UTC, small shuffle partitions.
+/** Shared session for all suites — one JVM-wide SparkSession (local[4])
+  * from the same factory as the entry points.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -12,22 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the entry points (Sessions.local): AQE may re-plan cached frames
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      // driver-side listing up to 512 partition dirs (see Sessions.local)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Sessions.local("graft-test", "4")
 
   /** Deterministic planted-cluster fixture shared by the clustered-
     * regime benchmarks (IvfSpec routing agreement, PqSpec residual

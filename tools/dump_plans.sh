@@ -3,21 +3,14 @@
 # Usage: dump_plans.sh <repoRootWithClasses> <sfDir> <outDir> <suffix> <q1> [q2 ...]
 # Writes <outDir>/<query>_<suffix>.txt for each query.
 set -u
+TOOLS="$(cd "$(dirname "$0")" && pwd)"
 ROOT="$1"; SF="$2"; OUT="$3"; SUF="$4"; shift 4
 mkdir -p "$OUT"
 CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
 for q in "$@"; do
   echo "[dump_plans] $q -> $OUT/${q}_${SUF}.txt"
-  java $ADD_OPENS -Xmx${SPARK_GRAFT_XMX:-8g} -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Run explain "$q" "$SF" \
+  java @"$TOOLS/jdk-add-opens.args" -Xmx${SPARK_GRAFT_XMX:-8g} \
+    -cp "$CP" graft.Run explain "$q" "$SF" \
     > "$OUT/${q}_${SUF}.txt" 2> "/tmp/dump_plans_${q}_${SUF}.stderr" \
     || { echo "[dump_plans] $q FAILED"; tail -5 "/tmp/dump_plans_${q}_${SUF}.stderr"; }
 done

@@ -7,16 +7,8 @@ Q="$1"; SF="${2:-/root/testdata/sf0.1}"; N="${3:-3}"
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 EV="/tmp/evlog_$Q"; rm -rf "$EV"; mkdir -p "$EV"
 CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
 SPARK_GRAFT_EVENTLOG="$EV" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  java $ADD_OPENS -Xmx${SPARK_GRAFT_XMX:-16g} -cp "$CP" \
+  java @"$ROOT/tools/jdk-add-opens.args" -Xmx${SPARK_GRAFT_XMX:-16g} -cp "$CP" \
   graft.Run time "$Q" "$SF" "$N" 2>/dev/null
 for f in "$EV"/*; do
   [ -f "$f" ] || continue
