@@ -16,11 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    on S3A it is copy+delete — NOT atomic. The artifact protocol
   *    therefore never relies on rename for data: versions are written
   *    to their OWN directory and made visible by a commit MARKER file
-  *    ([[commit]]/[[isCommitted]]), and a single-object marker/pointer
-  *    write IS atomic on every listed store (S3 PUT is all-or-nothing).
-  *  - Readers select the newest COMMITTED version, so a crash between
-  *    a version's table writes leaves an uncommitted directory that is
-  *    simply never selected (and is overwritten by the replay).
+  *    (the version-chain protocol, [[CommitLog]]), and a
+  *    single-object marker/pointer write IS atomic on every listed store
+  *    (S3 PUT is all-or-nothing).
   *  - The one rename kept ([[writeAtomicString]], for CURRENT pointers)
   *    is write-temp + rename, atomic everywhere but S3A; on S3 a small
   *    whole-object overwrite PUT is itself atomic, so the fallback
@@ -44,11 +42,6 @@ object ArtifactIO {
     */
   def inParallel(tasks: Seq[() => Unit]): Unit = { inParallelMap(tasks); () }
 
-  /** [[inParallel]] that returns each task's result in input order —
-    * for callers whose independent jobs PRODUCE something (a collected
-    * sidecar audit, a constructed method pipeline whose bounded
-    * training collects run at construction time).
-    */
   /** Typed two/three-task overlaps — the q205/q221-style call sites
     * collect heterogeneous results (a scalar + two selections), and the
     * `inParallelMap[Any]` + `asInstanceOf` plumbing they used was one
@@ -65,6 +58,11 @@ object ArtifactIO {
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
   }
 
+  /** [[inParallel]] that returns each task's result in input order —
+    * for callers whose independent jobs PRODUCE something (a collected
+    * sidecar audit, a constructed method pipeline whose bounded
+    * training collects run at construction time).
+    */
   def inParallelMap[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.size <= 1) tasks.map(_())
     else {
@@ -96,35 +94,21 @@ object ArtifactIO {
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new Path(path), true)
 
-  /** The multi-table version COMMIT marker: written after every table
-    * of `v=<id>` has landed; version discovery filters on it, so a
-    * crash between a version's table writes (the ADVICE-flagged
-    * aggMaintSink window) leaves a directory no reader ever selects.
-    * A single-object create is atomic on HDFS/ABFS/local and on S3
-    * (PUT is all-or-nothing) — the same contract as Spark's own
-    * _SUCCESS marker.
+  /** Version-chain shortcuts ([[CommitLog]]): publish / test a version's
+    * marker; list `dir`'s committed `<prefix><id>` ids ascending (all of
+    * them with `markerGated = false`, for unmarked single-table chains).
     */
-  val CommitMarker = "_COMMITTED"
-
   def commit(spark: SparkSession, versionDir: String): Unit =
-    fs(spark, versionDir).create(new Path(versionDir, CommitMarker), true).close()
+    CommitLog.publish(spark, versionDir)
 
   def isCommitted(spark: SparkSession, versionDir: String): Boolean =
-    exists(spark, s"$versionDir/$CommitMarker")
+    CommitLog.isCommitted(spark, versionDir)
 
-  /** Numeric ids of COMMITTED `<prefix><id>` children of `dir`, sorted
-    * ascending — the shared version-discovery primitive (aggMaintSink,
-    * compactionPlanSink, IvfIndex.refreshArtifact). `markerGated=false`
-    * lists single-table version chains (cdcUpsertSink), whose one
-    * parquet write needs no extra marker.
-    */
   def committedVersions(spark: SparkSession, dir: String, prefix: String,
-      markerGated: Boolean = true): Seq[Long] =
-    list(spark, dir)
-      .filter(_.startsWith(prefix))
-      .filter(n => n.stripPrefix(prefix).nonEmpty && n.stripPrefix(prefix).forall(_.isDigit))
-      .filter(n => !markerGated || isCommitted(spark, s"$dir/$n"))
-      .map(_.stripPrefix(prefix).toLong).sorted
+      markerGated: Boolean = true): Seq[Long] = {
+    val s = CommitLog.Chain(dir, prefix).scan(spark)
+    if (markerGated) s.committed(prefix) else s.all(prefix)
+  }
 
   /** One blob file per row (`<dir>/<id><ext>`), written EXECUTOR-side
     * through the Hadoop [[FileSystem]] API — the per-asset export shape
@@ -137,9 +121,10 @@ object ArtifactIO {
     * ONCE (connection setup amortized over the partition's blobs, the
     * same open() amortization the decode path uses). A blob create is a
     * single-object write — atomic on every listed store (S3 PUT is
-    * all-or-nothing), so a torn task leaves either a missing or a
-    * complete blob, never a partial one visible to `binaryFile` readers
-    * (task retries overwrite idempotently).
+    * all-or-nothing); locally a blob lands by write-temp + atomic move.
+    * Either way a torn, retried or speculative task leaves a missing or
+    * a complete blob, never a partial one visible to `binaryFile`
+    * readers (retries overwrite idempotently).
     *
     * `blobs` must have exactly (id: LONG, bytes: BINARY) columns.
     */
@@ -157,10 +142,17 @@ object ArtifactIO {
           // 0.03 ms (NOTES_r14.md "blob-bench"), a ~20x wall regression on
           // a 5k-asset export. Executors on a real cluster writing to a
           // shared object store never take this branch.
+          // Files.write truncates then writes, so a concurrent attempt's
+          // reader could see a partial blob: write a dot-named temp (file
+          // indexes skip hidden names), then move it over the target
+          import java.nio.file.{Files, StandardCopyOption}
           val base = java.nio.file.Paths.get(new Path(dir).toUri.getPath)
+          val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
           it.foreach { r =>
-            java.nio.file.Files.write(base.resolve(s"${r.getLong(0)}$ext"),
-              r.getAs[Array[Byte]](1))
+            val name = s"${r.getLong(0)}$ext"
+            val tmp = Files.write(base.resolve(s".$name.$attempt.tmp"), r.getAs[Array[Byte]](1))
+            Files.move(tmp, base.resolve(name),
+              StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
           }
         } else {
           // A PRIVATE (non-cached) FileSystem instance: Path.getFileSystem

@@ -3,49 +3,57 @@ package graft.core
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** THE transaction log shared by every versioned substrate in the repo —
+/** THE transaction log shared by every versioned substrate in the repo:
   * the delta-state sink chains ([[graft.streaming.DeltaState]]), the
   * skipping-index sidecars ([[graft.sources.SkippingIndex]]) and the
-  * deletion-vector tables ([[graft.operators.DeletionVectors]]). A real
-  * lakehouse has ONE commit protocol that every writer goes through
-  * (Delta's `_delta_log`, Iceberg's metadata tree); before round 11
-  * this repo had three bespoke version/manifest mechanisms that shared
-  * only the marker-file convention. This object is the single place
-  * where version PUBLICATION, version ALLOCATION (with optimistic
-  * concurrency), and version RETIREMENT (the janitor) are defined.
+  * deletion-vector tables ([[graft.operators.DeletionVectors]]) are
+  * layouts over one version [[Chain]]. A real lakehouse has ONE commit
+  * protocol that every writer goes through (Delta's `_delta_log`,
+  * Iceberg's metadata tree); this object is its single description:
   *
-  * Two publication modes, chosen by who assigns version ids:
-  *
-  *  - REPLAYABLE ([[begin]]/[[publish]]): the producer assigns ids
-  *    deterministically (streaming batch ids) and redelivery of id v
-  *    legitimately OVERWRITES `v`'s directory — exactly-once lands on
-  *    idempotent replay, not on locking. `begin` clears the marker
-  *    before the overwrite so a crash mid-replay leaves an uncommitted
-  *    directory (the torn-version invariant).
-  *
-  *  - EXCLUSIVE ([[claim]]/[[allocate]] + [[publishExclusive]]):
+  *  - LAYOUT: `<prefix><id>/` directories under a table directory. A
+  *    BASE is a snapshot superseding every piece at or below its id; a
+  *    DELTA holds one write's changes. Ids are monotonic across prefixes
+  *    ([[Scan.maxId]]).
+  *  - PUBLICATION: a version is visible only once its [[Marker]] exists,
+  *    and [[Chain.write]] creates the marker only after every table of
+  *    the version has landed — a crash between table writes leaves an
+  *    uncommitted directory no reader selects.
+  *  - REPLAY: producers that assign ids deterministically (streaming
+  *    batch ids) OVERWRITE version v on redelivery — exactly-once lands
+  *    on idempotent replay, not on locking. [[Chain.write]] clears v's
+  *    marker BEFORE the overwrite, so a crash mid-replay also leaves v
+  *    uncommitted (the torn-replay window).
+  *  - VISIBILITY ([[Scan.visible]]): the newest committed base below a
+  *    cutoff plus the committed deltas above it. A fold that published a
+  *    newer base supersedes the folded pieces by version arithmetic
+  *    alone, so a reader racing the fold is consistent either way.
+  *  - RETENTION ([[Chain.retire]]): superseded pieces are deleted only
+  *    after the superseding base commits. A reader that listed the chain
+  *    just before the fold still opens what it listed, so concurrent-
+  *    reader deployments retire one [[janitor]] pass LATER (the
+  *    retention window — Delta's vacuum-after-retention).
+  *  - EXCLUSIVE ids ([[claim]]/[[allocate]] + [[publishExclusive]]):
   *    concurrent ad-hoc writers (two engineers' takedown jobs, a
-  *    compaction racing an append) serialize by ATOMIC CREATE — the
-  *    first writer to create the claim file owns the id; the loser gets
-  *    [[CommitConflict]] and retries at the next id against the now-
-  *    newer state. This is rename-as-commit at directory scale — the
-  *    same single-atomic-operation trick the reference engine uses for
-  *    task output files (`worker.rs:107-114`: write temp, rename into
-  *    place, first one wins). Claim BEFORE writing any data: the claim
-  *    reserves the directory name, so two writers never interleave
-  *    writes into the same version dir.
+  *    compaction racing an append) serialize by ATOMIC CREATE of
+  *    `<prefix><id>._CLAIM` — the first writer to create it owns the id;
+  *    the loser gets [[CommitConflict]] and retries at the next id
+  *    against the now-newer state. This is rename-as-commit at directory
+  *    scale — the same single-atomic-operation trick the reference
+  *    engine uses for task output files (`worker.rs:107-114`: write
+  *    temp, rename into place, first one wins). Claim BEFORE writing any
+  *    data, so two writers never interleave writes into one version dir.
   *
   * Atomicity of the claim, per store: local file systems go through
   * `O_EXCL` ([[java.nio.file.Files.createFile]] — POSIX-atomic); HDFS
   * `create(overwrite = false)` is atomic at the NameNode; S3 needs a
   * conditional PUT (`If-None-Match`), which the S3A connector exposes —
-  * documented, like every [[ArtifactIO]] store note, not assumed.
+  * documented, like every [[ArtifactIO]] store note, not assumed. The
+  * marker is a single-object create: atomic on HDFS/ABFS/local and on S3
+  * (PUT is all-or-nothing), the same contract as Spark's _SUCCESS.
   */
 object CommitLog {
-  /** Version-dir publication marker (shared with [[ArtifactIO]] — every
-    * pre-existing on-disk layout remains valid).
-    */
-  val Marker: String = ArtifactIO.CommitMarker
+  val Marker = "_COMMITTED"
   val ClaimSuffix = "._CLAIM"
 
   /** Thrown when a writer loses an exclusive commit race: its version id
@@ -54,39 +62,119 @@ object CommitLog {
     */
   final class CommitConflict(msg: String) extends RuntimeException(msg)
 
-  // ------------------------------------------------------------------
-  // discovery
-  // ------------------------------------------------------------------
+  /** A version chain under `dir`: one base prefix and the delta prefixes
+    * of a store's layout (protocol in the object doc).
+    */
+  final case class Chain(dir: String, basePrefix: String, deltaPrefixes: Seq[String] = Nil) {
+    val prefixes: Seq[String] = basePrefix +: deltaPrefixes
 
-  /** Committed ids of `<prefix><id>` version dirs under `dir`, ascending. */
-  def committed(spark: SparkSession, dir: String, prefix: String): Seq[Long] =
-    ArtifactIO.committedVersions(spark, dir, prefix)
+    def path(prefix: String, id: Long): String = s"$dir/$prefix$id"
+    def claimPath(prefix: String, id: Long): String = s"${path(prefix, id)}$ClaimSuffix"
+
+    /** One listing of `dir`: every version directory and every claim,
+      * for every prefix.
+      */
+    def scan(spark: SparkSession): Scan = {
+      val parsed = ArtifactIO.list(spark, dir).flatMap(n => prefixes.flatMap(p => parse(p, n)))
+      new Scan(this, spark, parsed.collect { case (p, id, false) => (p, id) },
+        parsed.collect { case (p, id, true) => (p, id) })
+    }
+
+    /** Write version `<prefix><id>`: clear its marker, run the table
+      * writes concurrently ([[ArtifactIO.inParallelMap]]), each given the
+      * version directory, then publish — unless `publish = false` (a
+      * caller that validates first). A failed write rethrows unpublished.
+      */
+    def write[T](spark: SparkSession, prefix: String, id: Long, publish: Boolean = true)(
+        tables: (String => T)*): Seq[T] = {
+      val vdir = path(prefix, id)
+      ArtifactIO.delete(spark, s"$vdir/$Marker")
+      val out = ArtifactIO.inParallelMap(tables.map(t => () => t(vdir)))
+      if (publish) CommitLog.publish(spark, vdir)
+      out
+    }
+
+    /** Delete the committed pieces a base at `floor` supersedes — bases
+      * below it, deltas at or below it — among `among`. Returns the
+      * retired ids, ascending.
+      */
+    def retire(spark: SparkSession, floor: Long, among: Seq[String] = prefixes): Seq[Long] = {
+      val s = scan(spark)
+      val dead = among.flatMap(p => s.committed(p)
+        .filter(v => v < floor || (v == floor && p != basePrefix)).map(p -> _))
+      dead.foreach { case (p, v) => ArtifactIO.delete(spark, path(p, v)) }
+      dead.map(_._2).sorted
+    }
+  }
+
+  /** `<prefix><id>` or `<prefix><id>._CLAIM` → (prefix, id, isClaim). */
+  private def parse(prefix: String, name: String): Option[(String, Long, Boolean)] = {
+    val id = name.stripSuffix(ClaimSuffix).stripPrefix(prefix)
+    if (!name.startsWith(prefix) || id.isEmpty || !id.forall(_.isDigit)) None
+    else Some((prefix, id.toLong, name.endsWith(ClaimSuffix)))
+  }
+
+  /** One listing of a [[Chain]]: its version dirs and claims. Markers
+    * are probed on first use, so a caller that needs none (an unmarked
+    * chain, a claim check) costs one listing.
+    */
+  final class Scan(val chain: Chain, spark: SparkSession, pieces: Seq[(String, Long)],
+      claims: Seq[(String, Long)]) {
+    private lazy val done: Set[(String, Long)] =
+      pieces.filter { case (p, id) => isCommitted(spark, chain.path(p, id)) }.toSet
+    private def ids(of: Iterable[(String, Long)], prefix: String): Seq[Long] =
+      of.collect { case (`prefix`, id) => id }.toSeq.sorted
+
+    /** Every listed version id of `prefix`, marked or not. */
+    def all(prefix: String): Seq[Long] = ids(pieces, prefix)
+    def committed(prefix: String): Seq[Long] = ids(done, prefix)
+    def uncommitted(prefix: String): Seq[Long] = ids(pieces.filterNot(done), prefix)
+    def claimed(prefix: String): Seq[Long] = ids(claims, prefix)
+
+    /** Claims whose version has not committed — writers in flight, or
+      * crashed — ascending by (prefix, id).
+      */
+    def liveClaims: Seq[(String, Long)] =
+      claims.filterNot { case (p, id) => isCommitted(spark, chain.path(p, id)) }.sorted
+
+    /** Highest committed id over every prefix, ignoring the caller's own
+      * piece `except` (a replayed version): the monotonic-id check.
+      */
+    def maxCommitted(except: (String, Long)*): Long =
+      (done.filterNot(except.contains).map(_._2) + -1L).max
+
+    /** Highest committed or claimed id over every prefix (−1 if none):
+      * the allocation floor.
+      */
+    def maxId: Long = (claims.map(_._2) :+ maxCommitted()).max
+
+    /** Committed deltas with `lo < id < hi`, each delta prefix ascending. */
+    def deltasIn(lo: Long, hi: Long): Seq[(String, Long)] =
+      chain.deltaPrefixes.flatMap(p => committed(p).filter(v => v > lo && v < hi).map(p -> _))
+
+    /** THE visibility rule: the newest committed base below `cutoff`
+      * plus the committed deltas above it and below `cutoff`.
+      */
+    def visible(cutoff: Long = Long.MaxValue): Seq[(String, Long)] = {
+      val base = committed(chain.basePrefix).filter(_ < cutoff).lastOption
+      base.map(chain.basePrefix -> _).toSeq ++ deltasIn(base.getOrElse(-1L), cutoff)
+    }
+  }
+
+  def isCommitted(spark: SparkSession, versionDir: String): Boolean =
+    ArtifactIO.exists(spark, s"$versionDir/$Marker")
 
   /** Ids currently CLAIMED (reserved by a writer that may still be
     * in flight) for `prefix` under `dir`.
     */
   def claimed(spark: SparkSession, dir: String, prefix: String): Seq[Long] =
-    ArtifactIO.list(spark, dir)
-      .filter(n => n.startsWith(prefix) && n.endsWith(ClaimSuffix))
-      .map(_.stripPrefix(prefix).stripSuffix(ClaimSuffix))
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).sorted
-
-  // ------------------------------------------------------------------
-  // replayable publication (producer-assigned ids)
-  // ------------------------------------------------------------------
-
-  /** Open version `versionDir` for (re)writing: clears a pre-existing
-    * marker so a crash mid-overwrite leaves the version uncommitted.
-    */
-  def begin(spark: SparkSession, versionDir: String): Unit =
-    ArtifactIO.delete(spark, s"$versionDir/$Marker")
+    Chain(dir, prefix).scan(spark).claimed(prefix)
 
   /** Publish a version: its tables are all on disk; readers may now
     * select it. Idempotent (replay republished its own overwrite).
     */
   def publish(spark: SparkSession, versionDir: String): Unit =
-    ArtifactIO.commit(spark, versionDir)
+    ArtifactIO.fs(spark, versionDir).create(new Path(versionDir, Marker), true).close()
 
   // ------------------------------------------------------------------
   // exclusive publication (optimistic concurrency)
@@ -115,9 +203,9 @@ object CommitLog {
     * table data into the version directory.
     */
   def claim(spark: SparkSession, dir: String, prefix: String, id: Long): Unit = {
-    if (ArtifactIO.isCommitted(spark, s"$dir/$prefix$id"))
+    if (isCommitted(spark, s"$dir/$prefix$id"))
       throw new CommitConflict(s"$prefix$id under $dir is already committed")
-    if (!atomicCreate(spark, s"$dir/$prefix$id$ClaimSuffix"))
+    if (!atomicCreate(spark, Chain(dir, prefix).claimPath(prefix, id)))
       throw new CommitConflict(s"$prefix$id under $dir is claimed by another writer")
     validateClaim(spark, dir, prefix, id)
   }
@@ -127,7 +215,7 @@ object CommitLog {
     * creates the marker THEN deletes the winner's claim, so a racer
     * whose isCommitted check ran before the marker landed can re-create
     * the claim file after it is deleted and believe it owns an already-
-    * committed id — its begin()/overwrite would then trample committed
+    * committed id — its overwrite would then trample committed
     * data. Re-checking AFTER the create is sound: a commit marker can
     * only appear for an id whose claim the committer held, so if the
     * marker exists now, this claim is the stale-racer case — release it
@@ -135,8 +223,8 @@ object CommitLog {
     */
   private[graft] def validateClaim(spark: SparkSession, dir: String,
       prefix: String, id: Long): Unit =
-    if (ArtifactIO.isCommitted(spark, s"$dir/$prefix$id")) {
-      ArtifactIO.delete(spark, s"$dir/$prefix$id$ClaimSuffix")
+    if (isCommitted(spark, s"$dir/$prefix$id")) {
+      ArtifactIO.delete(spark, Chain(dir, prefix).claimPath(prefix, id))
       throw new CommitConflict(
         s"$prefix$id under $dir was committed while being claimed (raced a publishExclusive)")
     }
@@ -150,7 +238,7 @@ object CommitLog {
     */
   def allocate(spark: SparkSession, dir: String, prefix: String,
       floor: Long = -1L): Long = {
-    var id = (committed(spark, dir, prefix) ++ claimed(spark, dir, prefix) :+ floor).max + 1
+    var id = math.max(Chain(dir, prefix).scan(spark).maxId, floor) + 1
     var attempts = 0
     while (attempts < 1000) {
       try { claim(spark, dir, prefix, id); return id }
@@ -167,8 +255,7 @@ object CommitLog {
   def publishExclusive(spark: SparkSession, versionDir: String): Unit = {
     if (!atomicCreate(spark, s"$versionDir/$Marker"))
       throw new CommitConflict(s"$versionDir is already committed by another writer")
-    val p = new Path(versionDir)
-    ArtifactIO.delete(spark, s"${p.getParent}/${p.getName}$ClaimSuffix")
+    ArtifactIO.delete(spark, s"$versionDir$ClaimSuffix")
   }
 
   /** Drop stale claims whose version never committed and whose id is
@@ -176,10 +263,11 @@ object CommitLog {
     * again (allocation always probes above the newest committed id).
     */
   def releaseStaleClaims(spark: SparkSession, dir: String, prefix: String): Seq[Long] = {
-    val newest = committed(spark, dir, prefix).lastOption.getOrElse(-1L)
-    claimed(spark, dir, prefix)
-      .filter(id => id < newest && !ArtifactIO.isCommitted(spark, s"$dir/$prefix$id"))
-      .map { id => ArtifactIO.delete(spark, s"$dir/$prefix$id$ClaimSuffix"); id }
+    val s = Chain(dir, prefix).scan(spark)
+    val newest = s.committed(prefix).lastOption.getOrElse(-1L)
+    s.liveClaims.collect { case (_, id) if id < newest =>
+      ArtifactIO.delete(spark, s.chain.claimPath(prefix, id)); id
+    }
   }
 
   // ------------------------------------------------------------------
@@ -188,61 +276,39 @@ object CommitLog {
 
   final case class JanitorReport(substrate: String, removed: Seq[Long])
 
-  /** Compact/retire versions of the table at `dir`, whatever substrate
-    * it is — the substrate is identified by its own descriptor file
-    * (each substrate writes one at creation so a generic janitor needs
-    * no out-of-band type registry):
-    *
-    *  - `_LAYOUT`   → a delta-state sink chain: fold deltas below the
-    *    newest `keep` reconstruction points into a base snapshot
-    *    ([[graft.streaming.DeltaState.compact]]);
-    *  - `_MANIFEST` → a deletion-vector table: fold DVs + appends into
-    *    rewritten dirty shards under a base id allocated THROUGH THIS
-    *    LOG ([[graft.operators.DeletionVectors.compactApply]]);
-    *  - `_INDEX`    → a skipping index: fold data + sidecar versions
-    *    into one ([[graft.sources.SkippingIndex.compact]]), when more
-    *    than `keep` versions have accumulated.
-    *
-    * Returns what was retired, per substrate semantics. Unrecognized
-    * directories are left untouched (reported as substrate "none").
+  /** Run `fold` under a base id allocated THROUGH THIS LOG above
+    * `floor` — the store's [[Scan.maxId]]: a new base id below an
+    * in-flight writer's claimed id would misorder that writer's version
+    * against the fold. The base claim is released even if `fold` throws.
     */
-  def janitor(spark: SparkSession, dir: String, keep: Int = 2): JanitorReport = {
-    if (ArtifactIO.exists(spark, s"$dir/${graft.streaming.DeltaState.LayoutFile}"))
-      JanitorReport("delta-state", graft.streaming.DeltaState.compact(spark, dir, math.max(keep, 2)))
-    else if (ArtifactIO.exists(spark, s"$dir/${graft.operators.DeletionVectors.ManifestFile}")) {
-      val dv = graft.operators.DeletionVectors
-      // RETENTION-WINDOW GC: physically retire only the sidecars an
-      // EARLIER pass folded — a reader that listed the chain just before
-      // this pass's fold can still open every file it saw (Delta's
-      // vacuum-after-retention; the window is one janitor interval).
-      dv.vacuumSidecars(spark, dir)
-      // the floor clears LIVE CLAIMS too: a new base id below an
-      // in-flight append's claimed id would hide that append's rows
-      // via the version guard the moment it commits
-      val floor = (committed(spark, dir, dv.BasePrefix) ++
-        committed(spark, dir, dv.DvPrefix) ++
-        committed(spark, dir, dv.AppendPrefix) ++
-        claimed(spark, dir, dv.DvPrefix) ++
-        claimed(spark, dir, dv.AppendPrefix) ++
-        dv.shardVersions(spark, dir).collect().map(_.getLong(1)).toSeq :+ -1L).max
-      val newBaseId = allocate(spark, dir, dv.BasePrefix, floor)
-      val removed = dv.compactApply(spark, dir, newBaseId, gc = false)
-      ArtifactIO.delete(spark, s"$dir/${dv.BasePrefix}$newBaseId$ClaimSuffix")
-      JanitorReport("deletion-vectors", removed)
-    } else if (ArtifactIO.exists(spark, s"$dir/${graft.sources.SkippingIndex.IndexFile}")) {
-      val si = graft.sources.SkippingIndex
-      // same retention-window GC: versions a previous pass superseded
-      si.vacuum(spark, dir)
-      val live = si.visibleVersionDirs(spark, dir).size
-      if (live <= keep) JanitorReport("skipping-index", Seq.empty)
-      else {
-        val vs = committed(spark, dir, si.VersionPrefix) ++
-          committed(spark, dir, si.BasePrefix)
-        val newId = allocate(spark, dir, si.BasePrefix, vs.max)
-        val removed = si.compact(spark, dir, newId, gc = false)
-        ArtifactIO.delete(spark, s"$dir/${si.BasePrefix}$newId$ClaimSuffix")
-        JanitorReport("skipping-index", removed)
-      }
-    } else JanitorReport("none", Seq.empty)
+  def foldUnderNewBase(spark: SparkSession, chain: Chain, floor: Long)(
+      fold: Long => Seq[Long]): Seq[Long] = {
+    val id = allocate(spark, chain.dir, chain.basePrefix, floor)
+    try fold(id) finally ArtifactIO.delete(spark, chain.claimPath(chain.basePrefix, id))
   }
+
+  /** The substrates the janitor knows: report name, the descriptor file
+    * each writes at creation, and its fold (`keep` = retention count).
+    */
+  private lazy val stores: Seq[(String, String, (SparkSession, String, Int) => Seq[Long])] = Seq(
+    ("delta-state", graft.streaming.DeltaState.LayoutFile,
+      (s, d, keep) => graft.streaming.DeltaState.compact(s, d, math.max(keep, 2))),
+    ("deletion-vectors", graft.operators.DeletionVectors.ManifestFile,
+      graft.operators.DeletionVectors.janitorPass),
+    ("skipping-index", graft.sources.SkippingIndex.IndexFile,
+      graft.sources.SkippingIndex.janitorPass))
+
+  /** Compact/retire versions of the table at `dir`, whatever substrate
+    * it is, identified by its own descriptor file (so a generic janitor
+    * needs no out-of-band type registry) and folded by that store's rule
+    * ([[graft.streaming.DeltaState.compact]],
+    * [[graft.operators.DeletionVectors.janitorPass]],
+    * [[graft.sources.SkippingIndex.janitorPass]]). Returns what was
+    * retired; unrecognized directories are left untouched ("none").
+    */
+  def janitor(spark: SparkSession, dir: String, keep: Int = 2): JanitorReport =
+    stores.find { case (_, descriptor, _) => ArtifactIO.exists(spark, s"$dir/$descriptor") }
+      .fold(JanitorReport("none", Seq.empty)) { case (name, _, fold) =>
+        JanitorReport(name, fold(spark, dir, keep))
+      }
 }

@@ -19,18 +19,16 @@ import graft.core.{ArtifactIO, CommitLog}
   * kilobytes of sidecar, not a warehouse rewrite, and the masking join
   * broadcasts (the DV set is delete-scale, never data-scale).
   *
-  * On-disk layout under `outDir`:
+  * On-disk layout under `outDir`, a [[CommitLog.Chain]] (publication,
+  * replay and retention protocol: [[CommitLog]]) whose bases are
+  * chosen per shard by the manifest rather than by the chain:
   *  - `base_v=<id>/data/shard=<s>/…` — immutable shard files; v0 is the
   *    initial write, later versions hold only shards rewritten by a
   *    compaction;
   *  - `dv_v=<id>/dv/` — one delete's (shard, pos) rows;
+  *  - `append_v=<id>/data/shard=<s>/…` — one append's rows;
   *  - `_MANIFEST` — `shard|baseVersion` lines: which base version
-  *    serves each shard (atomic single-object rewrite);
-  *  - every version directory is published by [[ArtifactIO.commit]]
-  *    AFTER its tables land — a crash mid-write leaves an uncommitted
-  *    directory no reader selects, and [[deleteAt]] clears a
-  *    pre-existing marker before overwriting (the replay-window
-  *    convention shared with [[graft.streaming.DeltaState]]).
+  *    serves each shard (atomic single-object rewrite).
   *
   * Positions are assigned ONCE at [[writeBase]] (per-shard rank over
   * the caller's ordering columns) and are NEVER reassigned — a
@@ -52,6 +50,9 @@ object DeletionVectors {
     */
   val PosShift = 40
 
+  private def chain(outDir: String) =
+    CommitLog.Chain(outDir, BasePrefix, Seq(DvPrefix, AppendPrefix))
+
   /** Initial immutable write: `df` must carry a long `shard` column;
     * assigns `pos` per shard by `orderCols` (a per-shard window —
     * per-file ordering, what a real format's writer gets for free at
@@ -64,14 +65,13 @@ object DeletionVectors {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("shard").orderBy(orderCols.map(col): _*)
     val withPos = df.withColumn("pos", row_number().over(w).cast("long"))
-    val dir = s"$outDir/${BasePrefix}0"
-    CommitLog.begin(spark, dir)
-    // an EMPTY base writes unpartitioned so the directory keeps a
-    // readable schema (partitionBy on zero rows writes no files at all);
-    // later appends anchor on it via the manifest derivation
-    if (df.isEmpty) withPos.write.mode("overwrite").parquet(s"$dir/data")
-    else withPos.write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
-    CommitLog.publish(spark, dir)
+    chain(outDir).write(spark, BasePrefix, 0L) { dir =>
+      // an EMPTY base writes unpartitioned so the directory keeps a
+      // readable schema (partitionBy on zero rows writes no files at all);
+      // later appends anchor on it via the manifest derivation
+      if (df.isEmpty) withPos.write.mode("overwrite").parquet(s"$dir/data")
+      else withPos.write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
+    }
     // |shards|-row driver collect: the manifest is metadata-scale
     val shards = withPos.select(col("shard").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -106,7 +106,8 @@ object DeletionVectors {
         }
       }
     val known = fileEntries.map(_._1).toSet
-    val novel = ArtifactIO.committedVersions(spark, outDir, AppendPrefix)
+    val scan = chain(outDir).scan(spark)
+    val novel = scan.committed(AppendPrefix)
       .flatMap { id =>
         ArtifactIO.list(spark, s"$outDir/$AppendPrefix$id/data")
           .filter(_.startsWith("shard="))
@@ -121,7 +122,7 @@ object DeletionVectors {
         else {
           // writeBase ran on an EMPTY DataFrame: no per-shard entries,
           // but base_v=<min> still anchors the derived ones (schema-only)
-          val bases = ArtifactIO.committedVersions(spark, outDir, BasePrefix)
+          val bases = scan.committed(BasePrefix)
           require(bases.nonEmpty,
             s"table at $outDir has no manifest entries and no committed base version — " +
               "writeBase must run before appends")
@@ -156,37 +157,31 @@ object DeletionVectors {
   def clone(spark: SparkSession, srcDir: String, dstDir: String): Unit = {
     ArtifactIO.delete(spark, dstDir)
     ArtifactIO.mkdirs(spark, dstDir)
-    val m = manifest(spark, srcDir).map { case (s, v, root) => (s, v, root) }
+    val m = manifest(spark, srcDir)
     ArtifactIO.writeAtomicString(spark, s"$dstDir/$ManifestFile",
       m.map(manifestLine(dstDir)).mkString("\n"))
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = ArtifactIO.fs(spark, srcDir)
-    (committedDvs(spark, srcDir).map(v => s"$DvPrefix$v") ++
-      ArtifactIO.committedVersions(spark, srcDir, AppendPrefix).map(v => s"$AppendPrefix$v"))
+    chain(srcDir).scan(spark).deltasIn(-1L, Long.MaxValue).map { case (p, v) => s"$p$v" }
       .foreach { d =>
         org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$srcDir/$d"),
           fs, new org.apache.hadoop.fs.Path(s"$dstDir/$d"), false, conf)
       }
   }
 
-  private def committedDvs(spark: SparkSession, outDir: String): Seq[Long] =
-    ArtifactIO.committedVersions(spark, outDir, DvPrefix)
-
-  /** Committed DV union in `(floor, below)`. Sidecars at or below
-    * `floor` (the manifest's max base version) are provably FOLDED —
-    * a compaction's base id exceeds every sidecar id live at fold time
-    * and rewrites every shard those sidecars touch, and no later
-    * sidecar can land at or below it ([[readBefore]]/[[appendRows]]
-    * monotonicity) — so skipping them is free correctness-wise and
-    * makes retention-retained debris cost zero read IO.
+  /** The manifest's newest base version: sidecars at or below it are
+    * provably FOLDED — a compaction's base id exceeds every sidecar id
+    * live at fold time and rewrites every shard those sidecars touch,
+    * and no later sidecar can land at or below it ([[readBefore]]/
+    * [[appendRows]] monotonicity) — so skipping them is free
+    * correctness-wise and makes retention-retained debris cost zero read
+    * IO. The chain's visibility rule takes it as the delta floor.
     */
-  private def dvUnion(spark: SparkSession, outDir: String,
-      below: Long = Long.MaxValue, floor: Long = -1L): Option[DataFrame] = {
-    val vs = committedDvs(spark, outDir).filter(v => v < below && v > floor)
-    if (vs.isEmpty) None
-    else Some(vs.map(v => spark.read.parquet(s"$outDir/$DvPrefix$v/dv"))
-      .reduce(_ unionByName _))
-  }
+  private def manifestFloor(m: Seq[(Long, Long, String)]): Long = (m.map(_._2) :+ -1L).max
+
+  private def dvUnion(spark: SparkSession, outDir: String, ids: Seq[Long]): Option[DataFrame] =
+    if (ids.isEmpty) None
+    else Some(ids.map(v => spark.read.parquet(s"$outDir/$DvPrefix$v/dv")).reduce(_ unionByName _))
 
   /** The live table: each shard read from the base version its manifest
     * entry names (cluster `IN` → PartitionFilters), PLUS every committed
@@ -232,13 +227,10 @@ object DeletionVectors {
   private def readWithCutoff(spark: SparkSession, outDir: String, below: Long,
       guarded: Boolean = true): DataFrame = {
     val m = manifest(spark, outDir)
-    // sidecars at or below the manifest floor are folded (retention
-    // debris awaiting vacuum) — free to skip, see [[dvUnion]]
-    val floor = (m.map(_._2) :+ -1L).max
-    val unfolded = committedDvs(spark, outDir).count(_ > floor) +
-      ArtifactIO.committedVersions(spark, outDir, AppendPrefix).count(_ > floor)
-    require(!guarded || unfolded <= maxUnfoldedVersions,
-      s"$unfolded unfolded sidecar versions under $outDir exceed " +
+    val scan = chain(outDir).scan(spark)
+    val unfolded = scan.deltasIn(manifestFloor(m), Long.MaxValue)
+    require(!guarded || unfolded.size <= maxUnfoldedVersions,
+      s"${unfolded.size} unfolded sidecar versions under $outDir exceed " +
         s"graft.dv.maxUnfoldedVersions=$maxUnfoldedVersions — run CommitLog.janitor " +
         "to fold the chain (or raise the property for a one-off read)")
     val byVersion = m.groupBy(e => (e._3, e._2)).toSeq.sortBy(_._1)
@@ -250,12 +242,12 @@ object DeletionVectors {
       }.reduce(_ unionByName _)
       else {
         // empty-base table, no appends yet: serve the (schema-only) base
-        val bases = ArtifactIO.committedVersions(spark, outDir, BasePrefix)
+        val bases = scan.committed(BasePrefix)
         require(bases.nonEmpty, s"no manifest entries and no committed base under $outDir")
         spark.read.parquet(s"$outDir/$BasePrefix${bases.min}/data")
       }
-    val withAppends = ArtifactIO.committedVersions(spark, outDir, AppendPrefix)
-      .filter(id => id < below && id > floor)
+    val live = unfolded.filter(_._2 < below)
+    val withAppends = live.collect { case (AppendPrefix, id) => id }
       .foldLeft(base) { (acc, id) =>
         // version guard: include only shards still served by an OLDER base
         val visibleShards = m.filter(_._2 < id).map(_._1)
@@ -264,7 +256,7 @@ object DeletionVectors {
           spark.read.parquet(s"$outDir/$AppendPrefix$id/data")
             .filter(col("shard").isin(visibleShards: _*)))
       }
-    dvUnion(spark, outDir, below, floor) match {
+    dvUnion(spark, outDir, live.collect { case (DvPrefix, id) => id }) match {
       case Some(dv) =>
         withAppends.join(broadcast(dv.select(col("shard"), col("pos"))),
           Seq("shard", "pos"), "left_anti")
@@ -291,17 +283,15 @@ object DeletionVectors {
       .partitionBy("shard").orderBy(orderCols.map(col): _*)
     val withPos = df.withColumn("pos",
       lit(appendId << PosShift) + row_number().over(w).cast("long"))
-    val dir = s"$outDir/$AppendPrefix$appendId"
-    CommitLog.begin(spark, dir)
-    withPos.write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
-    val n = spark.read.parquet(s"$dir/data").count()
     // Shards this batch INTRODUCES need no manifest write here: the
     // manifest derivation lists every committed append's shard=
     // directories at read time (see [[manifest]]) — the marker create
-    // below is the whole commit, so no shared-file read-modify-write
-    // can race another writer
-    if (commit) CommitLog.publish(spark, dir)
-    n
+    // is the whole commit, so no shared-file read-modify-write can race
+    // another writer
+    chain(outDir).write(spark, AppendPrefix, appendId, commit) { dir =>
+      withPos.write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
+      spark.read.parquet(s"$dir/data").count()
+    }.head
   }
 
   /** MERGE-ON-READ UPSERT (the lakehouse MERGE INTO shape): live rows
@@ -321,27 +311,27 @@ object DeletionVectors {
   def upsert(spark: SparkSession, outDir: String, batch: DataFrame,
       keyCols: Seq[String], orderCols: Seq[String], v: Long,
       commit: Boolean = true): (Long, Long) = {
-    val predecessor = readBefore(spark, outDir, v)
     // NOT overlapped with the append (unlike the read-only audit collects
     // elsewhere): the DV-before-append commit order is part of the pinned
     // crash-window story — parallelizing would add a new torn state
     // (append committed, mask missing: duplicates under read) the spec'd
     // sequence never produces. Job-latency win would be ~0.1 s; skipped.
-    val nDel = writeDv(spark, outDir, v,
-      predecessor.join(batch.select(keyCols.map(col): _*), keyCols, "left_semi")
-        .select(col("shard"), col("pos")), commit)
+    val nDel = writeDv(spark, outDir, v, commit)(
+      _.join(batch.select(keyCols.map(col): _*), keyCols, "left_semi"))
     val nApp = appendRows(spark, outDir, batch, orderCols, v, commit)
     (nDel, nApp)
   }
 
-  private def writeDv(spark: SparkSession, outDir: String, dvId: Long,
-      rows: DataFrame, commit: Boolean = true): Long = {
-    val dir = s"$outDir/$DvPrefix$dvId"
-    CommitLog.begin(spark, dir)
-    rows.write.mode("overwrite").parquet(s"$dir/dv")
-    val n = spark.read.parquet(s"$dir/dv").count()
-    if (commit) CommitLog.publish(spark, dir)
-    n
+  /** Write deletion vector `dvId`: the positions of the rows live before
+    * it ([[readBefore]]) that `matching` keeps. Returns their count.
+    */
+  private def writeDv(spark: SparkSession, outDir: String, dvId: Long, commit: Boolean = true)(
+      matching: DataFrame => DataFrame): Long = {
+    val rows = matching(readBefore(spark, outDir, dvId)).select(col("shard"), col("pos"))
+    chain(outDir).write(spark, DvPrefix, dvId, commit) { dir =>
+      rows.write.mode("overwrite").parquet(s"$dir/dv")
+      spark.read.parquet(s"$dir/dv").count()
+    }.head
   }
 
   /** Delete the rows live BEFORE version `dvId` matching `pred`; rows
@@ -353,8 +343,7 @@ object DeletionVectors {
     */
   def deleteWhere(spark: SparkSession, outDir: String, pred: Column,
       dvId: Long): Long =
-    writeDv(spark, outDir, dvId,
-      readBefore(spark, outDir, dvId).filter(pred).select(col("shard"), col("pos")))
+    writeDv(spark, outDir, dvId)(_.filter(pred))
 
   /** Delete the live rows matching `keys` on `joinCols` (the GDPR /
     * takedown-list shape: the delete set arrives as keys, not a
@@ -362,9 +351,7 @@ object DeletionVectors {
     */
   def deleteMatching(spark: SparkSession, outDir: String, keys: DataFrame,
       joinCols: Seq[String], dvId: Long): Long =
-    writeDv(spark, outDir, dvId,
-      readBefore(spark, outDir, dvId).join(keys, joinCols, "left_semi")
-        .select(col("shard"), col("pos")))
+    writeDv(spark, outDir, dvId)(_.join(keys, joinCols, "left_semi"))
 
   /** Fold the deletion vectors AND appends in: rewrite ONLY the shards
     * that carry deletions or appended rows into `base_v=newBaseId`
@@ -376,39 +363,36 @@ object DeletionVectors {
     * DVs + appends itself), and after the flip the version guard in
     * [[read]] hides every folded append (base version > append id)
     * while leftover DVs anti-join positions that are already gone —
-    * so GC has no read-VISIBILITY effect whenever it runs. Physical
-    * file existence is another matter: `gc = true` deletes the folded
-    * sidecars immediately, and a reader that LISTED the chain before
-    * the fold would open deleted paths — concurrent-reader deployments
-    * use `gc = false` and retire sidecars one retention window later
-    * via [[vacuumSidecars]] (what [[graft.core.CommitLog.janitor]]
-    * does). The manifest rewrite here is the only post-writeBase
+    * so GC has no read-VISIBILITY effect whenever it runs. `gc = true`
+    * retires the folded sidecars immediately; concurrent-reader
+    * deployments pass `gc = false` and [[vacuumSidecars]] one retention
+    * window later. The manifest rewrite here is the only post-writeBase
     * manifest mutation (appends derive their entries at read time), and
     * it runs under the janitor's log-allocated base id — run one
     * janitor at a time. Returns the rewritten shard ids.
     */
   def compactApply(spark: SparkSession, outDir: String, newBaseId: Long,
       gc: Boolean = true): Seq[Long] = {
-    val dvs = committedDvs(spark, outDir)
-    val apps = ArtifactIO.committedVersions(spark, outDir, AppendPrefix)
+    val m0 = manifest(spark, outDir)
+    val c = chain(outDir)
+    val scan = c.scan(spark)
     // read()'s version guard (appends visible only where base < append id)
     // is pure id arithmetic — a non-monotonic newBaseId would silently
     // hide unfolded appends or double-count folded ones, so validate here
-    val maxSeen = (dvs ++ apps ++ manifest(spark, outDir).map(_._2) :+ -1L).max
+    val maxSeen = math.max(scan.maxCommitted(BasePrefix -> newBaseId), manifestFloor(m0))
     require(newBaseId > maxSeen,
       s"newBaseId $newBaseId must exceed every committed DV/append id and base version (max $maxSeen)")
-    val m0 = manifest(spark, outDir)
-    // sidecars at or below the floor were folded by an earlier pass
-    // (retention debris awaiting vacuum) — they contribute no dirt
-    val floor = (m0.map(_._2) :+ -1L).max
+    // sidecars at or below the manifest floor were folded by an earlier
+    // pass (retention debris awaiting vacuum) — they contribute no dirt
+    val unfolded = scan.deltasIn(manifestFloor(m0), Long.MaxValue)
     // |shards|-bounded driver collects (metadata scale) — all read-only
     // probes of committed sidecars, so overlapped (guide §2.6): one task
     // for the DV union plus one per unfolded append version
     val dirtyTasks: Seq[() => Set[Long]] =
-      (() => dvUnion(spark, outDir, floor = floor)
+      (() => dvUnion(spark, outDir, unfolded.collect { case (DvPrefix, id) => id })
         .map(_.select(col("shard").cast("long"))
           .distinct().collect().map(_.getLong(0)).toSet).getOrElse(Set.empty)) +:
-      apps.filter(_ > floor).map { id => () =>
+      unfolded.collect { case (AppendPrefix, id) => id }.map { id => () =>
         val visible = m0.filter(_._2 < id).map(_._1).toSet
         spark.read.parquet(s"$outDir/$AppendPrefix$id/data")
           .select(col("shard").cast("long")).distinct()
@@ -416,22 +400,19 @@ object DeletionVectors {
       }
     val dirty = ArtifactIO.inParallelMap(dirtyTasks).reduce(_ ++ _).toSeq.sorted
     if (dirty.isEmpty) return Seq.empty
-    val dir = s"$outDir/$BasePrefix$newBaseId"
-    ArtifactIO.delete(spark, dir) // crashed previous attempt
-    // unguarded: this IS the fold the chain-length guard points at
-    readWithCutoff(spark, outDir, Long.MaxValue, guarded = false)
-      .filter(col("shard").isin(dirty: _*))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
-    CommitLog.publish(spark, dir)
+    ArtifactIO.delete(spark, c.path(BasePrefix, newBaseId)) // crashed previous attempt
+    c.write(spark, BasePrefix, newBaseId) { dir =>
+      // unguarded: this IS the fold the chain-length guard points at
+      readWithCutoff(spark, outDir, Long.MaxValue, guarded = false)
+        .filter(col("shard").isin(dirty: _*))
+        .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
+    }
     val m = m0.map { case (s, v, root) =>
       if (dirty.contains(s)) (s, newBaseId, outDir) else (s, v, root)
     }
     ArtifactIO.writeAtomicString(spark, s"$outDir/$ManifestFile",
       m.map(manifestLine(outDir)).mkString("\n"))
-    if (gc) {
-      dvs.foreach(v => ArtifactIO.delete(spark, s"$outDir/$DvPrefix$v"))
-      apps.foreach(v => ArtifactIO.delete(spark, s"$outDir/$AppendPrefix$v"))
-    }
+    if (gc) c.retire(spark, newBaseId, Seq(DvPrefix, AppendPrefix))
     dirty
   }
 
@@ -480,20 +461,15 @@ object DeletionVectors {
     * publishExclusive's marker-then-delete gap).
     */
   private def lowerClaims(spark: SparkSession, outDir: String, below: Long): Seq[String] =
-    Seq(DvPrefix, AppendPrefix, BasePrefix).flatMap { p =>
-      CommitLog.claimed(spark, outDir, p).filter(_ < below)
-        .filterNot(id => ArtifactIO.isCommitted(spark, s"$outDir/$p$id"))
-        .map(id => s"$p$id")
-    }
+    chain(outDir).scan(spark).liveClaims.collect { case (p, id) if id < below => s"$p$id" }
 
   /** Everything a `readBefore(below)` snapshot depends on: the committed
-    * sidecar ids it folds and the manifest bytes. Equal tokens ⇒ equal
+    * sidecars below it and the manifest bytes. Equal tokens ⇒ equal
     * snapshots.
     */
   private def snapshotToken(spark: SparkSession, outDir: String,
-      below: Long): (Seq[Long], Seq[Long], String) =
-    (committedDvs(spark, outDir).filter(_ < below),
-      ArtifactIO.committedVersions(spark, outDir, AppendPrefix).filter(_ < below),
+      below: Long): (Seq[(String, Long)], String) =
+    (chain(outDir).scan(spark).deltasIn(-1L, below),
       ArtifactIO.readString(spark, s"$outDir/$ManifestFile"))
 
   private def awaitLowerClaims(spark: SparkSession, outDir: String, id: Long): Unit = {
@@ -513,20 +489,21 @@ object DeletionVectors {
 
   /** The optimistic-concurrency harness shared by the *Concurrent
     * wrappers: allocate → wait out lower claims → snapshot → run `body`
-    * (which writes its version dirs UNCOMMITTED and returns them) →
-    * revalidate → publish-or-discard, retrying a discarded attempt at a
-    * fresh id. `body` gets the claimed id; returns (id, body result).
+    * (which writes its versions of `prefixes` UNCOMMITTED) → revalidate
+    * → publish-or-discard, retrying a discarded attempt at a fresh id.
+    * `body` gets the claimed id; returns (id, body result).
     */
-  private def commitValidated[T](spark: SparkSession, outDir: String)
-      (body: Long => (Seq[String], T)): (Long, T) = {
+  private def commitValidated[T](spark: SparkSession, outDir: String, prefixes: String*)
+      (body: Long => T): (Long, T) = {
     var attempts = 0
     while (attempts < 8) {
       val id = CommitLog.allocate(spark, outDir, DvPrefix, versionFloor(spark, outDir))
+      val dirs = prefixes.map(chain(outDir).path(_, id))
       val ok =
         try {
           awaitLowerClaims(spark, outDir, id)
           val snap = snapshotToken(spark, outDir, id)
-          val (dirs, result) = body(id)
+          val result = body(id)
           if (snapshotToken(spark, outDir, id) == snap &&
               lowerClaims(spark, outDir, id).isEmpty) {
             // DV marker before append marker: a reader in the gap sees
@@ -538,7 +515,7 @@ object DeletionVectors {
             dirs.foreach(d => ArtifactIO.delete(spark, d))
             None
           }
-        } finally releaseClaim(spark, outDir, DvPrefix, id)
+        } finally ArtifactIO.delete(spark, chain(outDir).claimPath(DvPrefix, id))
       ok match {
         case Some(result) => return (id, result)
         case None => attempts += 1
@@ -549,61 +526,48 @@ object DeletionVectors {
   }
 
   /** Physically delete sidecars an earlier [[compactApply]] already
-    * folded (committed DV/append ids strictly below the newest manifest
-    * base version — invisible to [[read]] since that fold). Run one
-    * retention window after the fold, the way [[CommitLog.janitor]]
-    * does at the start of each pass, so a reader that listed the chain
-    * just before the fold never opens a deleted path. Returns the
-    * retired ids.
+    * folded (at or below the manifest floor, already invisible). Bases
+    * are never retired here: the manifest may still serve clean shards
+    * from any of them. Returns the retired ids.
     */
-  def vacuumSidecars(spark: SparkSession, outDir: String): Seq[Long] = {
-    val floor = (manifest(spark, outDir).map(_._2) :+ -1L).max
-    val dead = committedDvs(spark, outDir).filter(_ < floor).map((DvPrefix, _)) ++
-      ArtifactIO.committedVersions(spark, outDir, AppendPrefix).filter(_ < floor)
-        .map((AppendPrefix, _))
-    dead.foreach { case (p, v) => ArtifactIO.delete(spark, s"$outDir/$p$v") }
-    dead.map(_._2).sorted
-  }
+  def vacuumSidecars(spark: SparkSession, outDir: String): Seq[Long] =
+    chain(outDir).retire(spark, manifestFloor(manifest(spark, outDir)), Seq(DvPrefix, AppendPrefix))
 
-  /** Highest id any versioned piece of the table carries — the
-    * allocation floor that keeps ids monotonic ACROSS prefixes (a DV
-    * claimed at id 7 must also exceed append 6 and base 5).
+  /** Highest id any versioned piece of the table carries, claims
+    * included — the allocation floor that keeps ids monotonic ACROSS
+    * prefixes (a DV claimed at id 7 must also exceed append 6 and
+    * base 5). The manifest counts too: a clone's entries name the
+    * source's bases, which its own chain does not list.
     */
   private def versionFloor(spark: SparkSession, outDir: String): Long =
-    (committedDvs(spark, outDir) ++
-      ArtifactIO.committedVersions(spark, outDir, AppendPrefix) ++
-      (Seq(DvPrefix, AppendPrefix, BasePrefix)
-        .flatMap(p => CommitLog.claimed(spark, outDir, p))) ++
-      manifest(spark, outDir).map(_._2) :+ -1L).max
+    math.max(chain(outDir).scan(spark).maxId, manifestFloor(manifest(spark, outDir)))
 
-  private def releaseClaim(spark: SparkSession, outDir: String, prefix: String,
-      id: Long): Unit =
-    ArtifactIO.delete(spark, s"$outDir/$prefix$id${CommitLog.ClaimSuffix}")
+  /** The janitor's pass: vacuum what the previous pass folded, then
+    * fold under a log-allocated base id with GC deferred. No debris
+    * sweep: a concurrent upsert claims only `dv_v=<id>`, so its in-flight
+    * `append_v=<id>` would look like debris below the new base.
+    */
+  private[graft] def janitorPass(spark: SparkSession, outDir: String, keep: Int): Seq[Long] = {
+    vacuumSidecars(spark, outDir)
+    CommitLog.foldUnderNewBase(spark, chain(outDir), versionFloor(spark, outDir))(
+      compactApply(spark, outDir, _, gc = false))
+  }
 
   /** [[deleteWhere]] with commit-log id allocation and commit-time
     * snapshot validation. Returns (version id, positions deleted).
     */
   def deleteWhereConcurrent(spark: SparkSession, outDir: String,
       pred: Column): (Long, Long) =
-    commitValidated(spark, outDir) { id =>
-      val n = writeDv(spark, outDir, id,
-        readBefore(spark, outDir, id).filter(pred).select(col("shard"), col("pos")),
-        commit = false)
-      (Seq(s"$outDir/$DvPrefix$id"), n)
-    }
+    commitValidated(spark, outDir, DvPrefix)(id =>
+      writeDv(spark, outDir, id, commit = false)(_.filter(pred)))
 
   /** [[deleteMatching]] with commit-log id allocation and commit-time
     * snapshot validation.
     */
   def deleteMatchingConcurrent(spark: SparkSession, outDir: String,
       keys: DataFrame, joinCols: Seq[String]): (Long, Long) =
-    commitValidated(spark, outDir) { id =>
-      val n = writeDv(spark, outDir, id,
-        readBefore(spark, outDir, id).join(keys, joinCols, "left_semi")
-          .select(col("shard"), col("pos")),
-        commit = false)
-      (Seq(s"$outDir/$DvPrefix$id"), n)
-    }
+    commitValidated(spark, outDir, DvPrefix)(id =>
+      writeDv(spark, outDir, id, commit = false)(_.join(keys, joinCols, "left_semi")))
 
   /** [[upsert]] with commit-log id allocation and commit-time snapshot
     * validation (the id claims BOTH the DV and the append slot — one
@@ -613,10 +577,8 @@ object DeletionVectors {
     */
   def upsertConcurrent(spark: SparkSession, outDir: String, batch: DataFrame,
       keyCols: Seq[String], orderCols: Seq[String]): (Long, Long, Long) = {
-    val (id, (nDel, nApp)) = commitValidated(spark, outDir) { id =>
-      val counts = upsert(spark, outDir, batch, keyCols, orderCols, id, commit = false)
-      (Seq(s"$outDir/$DvPrefix$id", s"$outDir/$AppendPrefix$id"), counts)
-    }
+    val (id, (nDel, nApp)) = commitValidated(spark, outDir, DvPrefix, AppendPrefix)(
+      upsert(spark, outDir, batch, keyCols, orderCols, _, commit = false))
     (id, nDel, nApp)
   }
 }

@@ -25,25 +25,20 @@ import graft.functions.PortableHash
   * `cluster IN (…)`, which Spark turns into PartitionFilters — files
   * outside the selection are never opened.
   *
-  * STORAGE is versioned through the shared [[CommitLog]] (round 11 —
-  * before that, appends wrote `mode("append")` straight into the live
-  * cluster directories, so a RETRIED append duplicated data rows while
-  * its sidecars overwrote, and nothing marked a torn build):
+  * STORAGE is a [[CommitLog.Chain]] (round 11 — before that, appends
+  * wrote `mode("append")` straight into the live cluster directories,
+  * so a RETRIED append duplicated data rows while its sidecars
+  * overwrote, and nothing marked a torn build; publication, replay,
+  * visibility and retention protocol: [[CommitLog]]):
   *
   *  - `base_v=<id>/{data,stats,bloom}` — a snapshot superseding every
   *    version ≤ id (the initial [[build]] is `base_v=0`);
   *  - `v=<id>/{data,stats,bloom}`      — one append batch's delta;
   *  - `_INDEX`                          — the column descriptor
   *    (cluster/range/bloom columns), so a generic janitor can
-  *    [[compact]] without knowing the table;
-  *  - every version dir is published by the commit marker AFTER its
-  *    three tables land — a torn write is invisible, and a REPLAYED
-  *    append overwrites its own version dir instead of duplicating
-  *    rows (the same replayable-publication contract as
-  *    [[graft.streaming.DeltaState]]).
+  *    [[compact]] without knowing the table.
   *
-  * Readers fold the newest committed base with the committed deltas
-  * above it. All three sidecar aggregates are MERGEABLE sketches
+  * All three sidecar aggregates are MERGEABLE sketches
   * (count → sum, zone map → min/max, bloom → bit-or), so the fold is
   * metadata-scale and ingestion never recomputes global statistics
   * (the Iceberg "metadata is mergeable manifests" property).
@@ -83,6 +78,8 @@ object SkippingIndex {
   val BasePrefix = "base_v="
   val IndexFile = "_INDEX"
 
+  private def chain(outDir: String) = CommitLog.Chain(outDir, BasePrefix, Seq(VersionPrefix))
+
   /** Bit position of probe `j` (0/1) for hash column `h` (values in
     * [0, 2^31): both probes stay in Long range — a·h < 2^62).
     */
@@ -104,12 +101,8 @@ object SkippingIndex {
     * generic janitor.
     */
   def build(df: DataFrame, outDir: String, clusterCol: String,
-      rangeCols: Seq[String], bloomCol: String): Unit = {
-    val spark = df.sparkSession
-    ArtifactIO.writeAtomicString(spark, s"$outDir/$IndexFile",
-      s"$clusterCol|${rangeCols.mkString(",")}|$bloomCol")
-    writeVersion(df, s"$outDir/${BasePrefix}0", clusterCol, rangeCols, bloomCol)
-  }
+      rangeCols: Seq[String], bloomCol: String): Unit =
+    initialize(df, outDir, clusterCol, rangeCols, bloomCol, withData = true)
 
   /** Sidecars-ONLY build: statistics over a table whose data lives
     * ELSEWHERE (Iceberg's "metadata over existing files" — at
@@ -122,12 +115,14 @@ object SkippingIndex {
     * [[compact]] on such an index folds the mergeable sidecars only.
     */
   def buildStats(df: DataFrame, outDir: String, clusterCol: String,
-      rangeCols: Seq[String], bloomCol: String): Unit = {
-    val spark = df.sparkSession
-    ArtifactIO.writeAtomicString(spark, s"$outDir/$IndexFile",
+      rangeCols: Seq[String], bloomCol: String): Unit =
+    initialize(df, outDir, clusterCol, rangeCols, bloomCol, withData = false)
+
+  private def initialize(df: DataFrame, outDir: String, clusterCol: String,
+      rangeCols: Seq[String], bloomCol: String, withData: Boolean): Unit = {
+    ArtifactIO.writeAtomicString(df.sparkSession, s"$outDir/$IndexFile",
       s"$clusterCol|${rangeCols.mkString(",")}|$bloomCol")
-    writeVersion(df, s"$outDir/${BasePrefix}0", clusterCol, rangeCols, bloomCol,
-      withData = false)
+    writeVersion(df, outDir, BasePrefix, 0L, clusterCol, rangeCols, bloomCol, withData)
   }
 
   /** Append a batch's sidecar aggregates to a stats-only index (the
@@ -135,40 +130,32 @@ object SkippingIndex {
     * contract as [[append]]).
     */
   def appendStats(df: DataFrame, outDir: String, clusterCol: String,
-      rangeCols: Seq[String], bloomCol: String, appendId: Long): Unit = {
-    val spark = df.sparkSession
-    val others = (committedBases(spark, outDir) ++
-      committedDeltas(spark, outDir).filter(_ != appendId) :+ -1L).max
-    require(appendId > others,
-      s"appendId $appendId must exceed every other committed version (max $others)")
-    writeVersion(df, s"$outDir/$VersionPrefix$appendId", clusterCol, rangeCols, bloomCol,
-      withData = false)
-  }
+      rangeCols: Seq[String], bloomCol: String, appendId: Long): Unit =
+    appendVersion(df, outDir, clusterCol, rangeCols, bloomCol, appendId, withData = false)
 
   /** Append a batch as delta version `appendId`: one O(batch) data
     * write plus the batch's own mergeable sidecar aggregates, all in
     * the version's OWN directory — the live base files are never
     * touched, and a RETRIED append overwrites its own version instead
-    * of duplicating rows (pre-round-11 `mode("append")` did exactly
-    * that). The caller's cluster assignment must be ingestion-stable
-    * (same cluster function as [[build]]); `appendId` must exceed every
-    * OTHER committed version (validated — replay of its own id is the
-    * one legitimate reuse).
+    * of duplicating rows. The caller's cluster assignment must be
+    * ingestion-stable (same cluster function as [[build]]); `appendId`
+    * must exceed every OTHER committed version (validated — replay of
+    * its own id is the one legitimate reuse).
     */
   def append(df: DataFrame, outDir: String, clusterCol: String,
-      rangeCols: Seq[String], bloomCol: String, appendId: Long): Unit = {
-    val spark = df.sparkSession
-    val others = (committedBases(spark, outDir) ++
-      committedDeltas(spark, outDir).filter(_ != appendId) :+ -1L).max
+      rangeCols: Seq[String], bloomCol: String, appendId: Long): Unit =
+    appendVersion(df, outDir, clusterCol, rangeCols, bloomCol, appendId, withData = true)
+
+  private def appendVersion(df: DataFrame, outDir: String, clusterCol: String,
+      rangeCols: Seq[String], bloomCol: String, appendId: Long, withData: Boolean): Unit = {
+    val others = chain(outDir).scan(df.sparkSession).maxCommitted(VersionPrefix -> appendId)
     require(appendId > others,
       s"appendId $appendId must exceed every other committed version (max $others)")
-    writeVersion(df, s"$outDir/$VersionPrefix$appendId", clusterCol, rangeCols, bloomCol)
+    writeVersion(df, outDir, VersionPrefix, appendId, clusterCol, rangeCols, bloomCol, withData)
   }
 
-  private def writeVersion(df: DataFrame, vdir: String, clusterCol: String,
-      rangeCols: Seq[String], bloomCol: String, withData: Boolean = true): Unit = {
-    val spark = df.sparkSession
-    CommitLog.begin(spark, vdir) // torn-replay window: marker off before overwrite
+  private def writeVersion(df: DataFrame, outDir: String, prefix: String, id: Long,
+      clusterCol: String, rangeCols: Seq[String], bloomCol: String, withData: Boolean): Unit = {
     // 2-3 consumers below (data copy, stats, bloom): materialize the
     // input once instead of re-running its DAG per write. Skipped when
     // the caller already persisted it (unpersisting here would drop the
@@ -186,36 +173,20 @@ object SkippingIndex {
       .select(col("cluster"), (col("bp") / WordBits).cast("long").as("word"),
         expr(s"shiftleft(cast(1 as bigint), cast(bp % $WordBits as int))").as("m"))
       .groupBy("cluster", "word").agg(bit_or(col("m")).as("mask"))
-    // data + the two sidecars are independent writes under one marker —
-    // overlap them (guide §2.6 via ArtifactIO.inParallel); publish still
-    // happens only after all three land
-    val writes = Seq(
-      () => stats.write.mode("overwrite").parquet(s"$vdir/stats"),
-      () => bloom.write.mode("overwrite").parquet(s"$vdir/bloom")) ++
-      (if (withData) Seq(() =>
+    val writes = Seq[String => Unit](
+      vdir => stats.write.mode("overwrite").parquet(s"$vdir/stats"),
+      vdir => bloom.write.mode("overwrite").parquet(s"$vdir/bloom")) ++
+      (if (withData) Seq((vdir: String) =>
         df.write.mode("overwrite").partitionBy(clusterCol).parquet(s"$vdir/data"))
        else Seq.empty)
-    try ArtifactIO.inParallel(writes)
+    try chain(outDir).write(df.sparkSession, prefix, id)(writes: _*)
     finally if (ownCache) df.unpersist()
-    CommitLog.publish(spark, vdir)
   }
 
-  private def committedBases(spark: SparkSession, outDir: String): Seq[Long] =
-    CommitLog.committed(spark, outDir, BasePrefix)
-
-  private def committedDeltas(spark: SparkSession, outDir: String): Seq[Long] =
-    CommitLog.committed(spark, outDir, VersionPrefix)
-
-  /** The version directories a reader folds: the newest committed base
-    * plus every committed delta above it — a compaction that published
-    * a newer base supersedes the folded pieces by version arithmetic,
-    * so a reader racing the janitor's GC is consistent either way.
-    */
+  /** The version directories a reader folds ([[CommitLog.Scan.visible]]). */
   def visibleVersionDirs(spark: SparkSession, outDir: String): Seq[String] = {
-    val base = committedBases(spark, outDir).lastOption
-    val deltas = committedDeltas(spark, outDir).filter(v => base.forall(v > _))
-    (base.map(v => s"$outDir/$BasePrefix$v").toSeq ++
-      deltas.map(v => s"$outDir/$VersionPrefix$v"))
+    val c = chain(outDir)
+    c.scan(spark).visible().map { case (p, v) => c.path(p, v) }
   }
 
   /** Number of storage versions folded at read time (1 after a build;
@@ -285,24 +256,17 @@ object SkippingIndex {
 
   /** Fold every visible version into one snapshot `base_v=<newId>` (the
     * small-file / OPTIMIZE compaction): data rewritten clustered, fresh
-    * single-version sidecars. Column descriptor comes from `_INDEX`, so
-    * the generic janitor ([[CommitLog.janitor]]) needs no table-specific
-    * knowledge. Returns the superseded version ids.
-    *
-    * GC of the superseded directories is decoupled: with `gc = true`
-    * (the single-writer-no-concurrent-readers convenience) they are
-    * deleted immediately AFTER the new base commits — note a reader that
-    * captured [[visibleVersionDirs]] BEFORE the commit would then open
-    * deleted directories, so concurrent-reader deployments must use
-    * `gc = false` and retire superseded versions in a LATER [[vacuum]]
-    * pass (the retention window — what [[CommitLog.janitor]] does, and
-    * why Delta/Iceberg keep superseded files for a retention period).
+    * single-version sidecars, columns from `_INDEX`. Returns the
+    * superseded version ids. `gc = true` (the single-writer-no-
+    * concurrent-readers convenience) retires them at once; concurrent-
+    * reader deployments pass `gc = false` and [[vacuum]] one retention
+    * window later.
     */
   def compact(spark: SparkSession, outDir: String, newId: Long,
       gc: Boolean = true): Seq[Long] = {
-    val bases = committedBases(spark, outDir)
-    val deltas = committedDeltas(spark, outDir)
-    require((bases ++ deltas :+ -1L).max < newId,
+    val c = chain(outDir)
+    val s = c.scan(spark)
+    require(s.maxCommitted() < newId,
       s"compaction id $newId must exceed every committed version")
     val Array(clusterCol, rangeCsv, bloomCol) =
       ArtifactIO.readString(spark, s"$outDir/$IndexFile").split("\\|", -1)
@@ -314,43 +278,43 @@ object SkippingIndex {
         // partition-dir readback can widen/narrow the cluster column type;
         // pin it so every generation's layout stays union-compatible
         .withColumn(clusterCol, col(clusterCol).cast("long"))
-      writeVersion(union, s"$outDir/$BasePrefix$newId", clusterCol, rangeCols, bloomCol)
+      writeVersion(union, outDir, BasePrefix, newId, clusterCol, rangeCols, bloomCol,
+        withData = true)
     } else {
       // stats-only index ([[buildStats]]): fold the mergeable sidecars
       // themselves — count → sum / zone → min-max / bloom → bit-or —
       // at metadata scale, no data to rewrite
-      val vdir = s"$outDir/$BasePrefix$newId"
-      CommitLog.begin(spark, vdir)
-      stats(spark, outDir).write.mode("overwrite").parquet(s"$vdir/stats")
-      sideUnion(spark, outDir, "bloom")
-        .groupBy("cluster", "word").agg(bit_or(col("mask")).as("mask"))
-        .write.mode("overwrite").parquet(s"$vdir/bloom")
-      CommitLog.publish(spark, vdir)
+      c.write(spark, BasePrefix, newId)(
+        vdir => stats(spark, outDir).write.mode("overwrite").parquet(s"$vdir/stats"),
+        vdir => sideUnion(spark, outDir, "bloom")
+          .groupBy("cluster", "word").agg(bit_or(col("mask")).as("mask"))
+          .write.mode("overwrite").parquet(s"$vdir/bloom"))
     }
-    val superseded = bases.filter(_ < newId) ++ deltas.filter(_ < newId)
-    if (gc) {
-      bases.filter(_ < newId).foreach(v => ArtifactIO.delete(spark, s"$outDir/$BasePrefix$v"))
-      deltas.filter(_ < newId).foreach(v => ArtifactIO.delete(spark, s"$outDir/$VersionPrefix$v"))
-    }
-    superseded.sorted
+    val superseded = (s.committed(BasePrefix) ++ s.committed(VersionPrefix)).sorted
+    if (gc) c.retire(spark, newId)
+    superseded
   }
 
-  /** Physically delete version directories an earlier [[compact]]
-    * already superseded (every committed base/delta strictly below the
-    * newest committed base — invisible to [[visibleVersionDirs]] by
-    * version arithmetic since that fold). Run one retention window
-    * after the fold (the janitor runs it at the START of each pass), so
-    * a reader that captured its directory listing just before the fold
-    * never opens a deleted path. Returns the retired version ids.
+  /** Physically delete what an earlier [[compact]] superseded (the
+    * pieces below the newest committed base, already invisible). Returns
+    * the retired version ids.
     */
-  def vacuum(spark: SparkSession, outDir: String): Seq[Long] =
-    committedBases(spark, outDir).lastOption.toSeq.flatMap { newest =>
-      val deadB = committedBases(spark, outDir).filter(_ < newest)
-      val deadD = committedDeltas(spark, outDir).filter(_ < newest)
-      deadB.foreach(v => ArtifactIO.delete(spark, s"$outDir/$BasePrefix$v"))
-      deadD.foreach(v => ArtifactIO.delete(spark, s"$outDir/$VersionPrefix$v"))
-      (deadB ++ deadD).sorted
-    }
+  def vacuum(spark: SparkSession, outDir: String): Seq[Long] = {
+    val c = chain(outDir)
+    c.scan(spark).committed(BasePrefix).lastOption.toSeq.flatMap(c.retire(spark, _))
+  }
+
+  /** The janitor's pass: vacuum what the previous pass superseded, then,
+    * past `keep` visible versions, fold under a log-allocated base id
+    * with GC deferred.
+    */
+  private[graft] def janitorPass(spark: SparkSession, outDir: String, keep: Int): Seq[Long] = {
+    val c = chain(outDir)
+    vacuum(spark, outDir)
+    if (sideVersionCount(spark, outDir) <= keep) Seq.empty
+    else CommitLog.foldUnderNewBase(spark, c, c.scan(spark).maxId)(
+      compact(spark, outDir, _, gc = false))
+  }
 
   // ------------------------------------------------------------------
   // PARTITION-SPEC EVOLUTION (the Iceberg table-evolution contract):
@@ -373,8 +337,7 @@ object SkippingIndex {
 
   /** The live layout generations of a multi-spec table, oldest first. */
   def liveSpecs(spark: SparkSession, outDir: String): Seq[Long] =
-    ArtifactIO.list(spark, outDir).filter(_.startsWith("spec="))
-      .map(_.stripPrefix("spec=").toLong).sorted
+    ArtifactIO.committedVersions(spark, outDir, "spec=", markerGated = false)
 
   /** Range read ACROSS every live layout generation: each spec prunes
     * from its OWN |files|-row zone-map sidecar, each admitted set

@@ -16,25 +16,20 @@ import graft.core.{ArtifactIO, CommitLog}
   * between a sink that writes megabytes per batch and one that
   * rewrites the warehouse.
   *
-  * On-disk layout under `outDir`:
+  * On-disk layout under `outDir`, a [[CommitLog.Chain]] (publication,
+  * replay and visibility protocol: [[CommitLog]]):
   *  - `v=<batchId>/<table>/…`        — the batch's delta, one subdir per
   *    state table (a sink may write only the tables its side touches);
   *  - `base_v=<id>/<table>/…`        — a compacted snapshot of the state
   *    AS OF version `id` INCLUSIVE (supersedes every delta ≤ id);
   *  - `_LAYOUT`                      — the table descriptors (name, merge
   *    kind, keys), written once so a generic janitor can compact without
-  *    knowing the sink type;
-  *  - every version/base directory is published by
-  *    [[ArtifactIO.CommitMarker]] AFTER its tables land — a crash
-  *    between writes leaves an uncommitted directory no reader selects.
+  *    knowing the sink type.
   *
   * Replay contract (unchanged from the full-copy era): a redelivered
   * batch recomputes its delta against the state AS OF versions < its
-  * id ([[asOf]] with a cutoff) and overwrites its own delta directory.
-  * [[writeDelta]] clears the version's commit marker BEFORE the
-  * overwrite, so a crash mid-replay also leaves an uncommitted
-  * version — the torn-version invariant holds inside the replay
-  * window too (the round-9 ADVICE finding).
+  * id ([[asOf]] with a cutoff) and overwrites its own delta directory
+  * through the chain's version write (no torn replay).
   *
   * Merge kinds — how a table's base + delta rows collapse to state:
   *  - [[Lww]]: keyed snapshot, newest VERSION wins per key (upsert
@@ -59,6 +54,8 @@ object DeltaState {
   val LayoutFile = "_LAYOUT"
   private val layoutWriteLock = new Object
 
+  private def chain(outDir: String) = CommitLog.Chain(outDir, BasePrefix, Seq(DeltaPrefix))
+
   /** Schema sidecar per table (`_SCHEMA_<table>`), written once on the
     * first delta: every chain read previously paid a parquet
     * schema-INFERENCE job per piece (footer reads submitted as a Spark
@@ -82,12 +79,16 @@ object DeltaState {
     }
   }
 
-  private def writeSchemaOnce(spark: SparkSession, outDir: String, name: String,
-      df: DataFrame): Unit = layoutWriteLock.synchronized {
-    if (!ArtifactIO.exists(spark, schemaPath(outDir, name)))
-      ArtifactIO.writeAtomicString(spark, schemaPath(outDir, name),
-        allNullable(df.schema).json)
-  }
+  /** Check-then-write under a JVM lock: two version commits of ONE chain
+    * may themselves run concurrently (ArtifactIO.inParallel callers), and
+    * racing renames onto the same `_LAYOUT`/`_SCHEMA_` destination throw
+    * on local FS. Content is identical either way — the lock just
+    * serializes the lay.
+    */
+  private def writeOnce(spark: SparkSession, path: String, content: => String): Unit =
+    layoutWriteLock.synchronized {
+      if (!ArtifactIO.exists(spark, path)) ArtifactIO.writeAtomicString(spark, path, content)
+    }
 
   private def readTable(spark: SparkSession, outDir: String, name: String,
       paths: Seq[String]): DataFrame = {
@@ -101,44 +102,33 @@ object DeltaState {
     reader.parquet(paths: _*)
   }
 
-  /** Write one batch's delta tables as version `batchId` and publish
-    * them with the commit marker. Clears a pre-existing marker FIRST
-    * (replay overwrite window — see the object doc). The layout file
-    * is written on the first batch so [[compact]] stays generic.
+  /** Write one batch's delta tables as version `batchId` of the chain
+    * (sibling tables overlap; the marker publishes after all of them).
+    * The layout file is written on the first batch so [[compact]] stays
+    * generic.
     */
   def writeDelta(spark: SparkSession, outDir: String, batchId: Long,
       layout: Seq[Table], tables: Seq[(String, DataFrame)]): Unit = {
-    val vdir = s"$outDir/$DeltaPrefix$batchId"
-    CommitLog.begin(spark, vdir)
-    // sibling delta tables are independent writes under one marker —
-    // overlap them (ArtifactIO.inParallel; the marker still publishes
-    // only after every table has landed)
-    ArtifactIO.inParallel(tables.map { case (name, df) =>
-      () => {
-        writeSchemaOnce(spark, outDir, name, df)
+    writeOnce(spark, s"$outDir/$LayoutFile", layoutString(layout))
+    chain(outDir).write(spark, DeltaPrefix, batchId)(tables.map { case (name, df) =>
+      (vdir: String) => {
+        writeOnce(spark, schemaPath(outDir, name), allNullable(df.schema).json)
         df.write.mode("overwrite").parquet(s"$vdir/$name")
       }
-    })
-    // check-then-write under a JVM lock: two version commits of ONE chain
-    // may themselves run concurrently (ArtifactIO.inParallel callers), and
-    // racing renames onto the same _LAYOUT destination throw on local FS.
-    // Content is identical either way — the lock just serializes the lay.
-    layoutWriteLock.synchronized {
-      if (!ArtifactIO.exists(spark, s"$outDir/$LayoutFile"))
-        ArtifactIO.writeAtomicString(spark, s"$outDir/$LayoutFile", layoutString(layout))
-    }
-    CommitLog.publish(spark, vdir)
+    }: _*)
   }
 
   /** The state of `table` as of versions STRICTLY BELOW `cutoffExclusive`
-    * (None = current state): newest committed base below the cutoff,
-    * merged with the committed deltas between it and the cutoff. None
-    * when no committed piece carries the table (e.g. the right snapshot
+    * (None = current state): the chain's visible pieces, merged. None
+    * when no visible piece carries the table (e.g. the right snapshot
     * before any right-side batch).
     */
   def asOf(spark: SparkSession, outDir: String, table: Table,
       cutoffExclusive: Option[Long] = None): Option[DataFrame] = {
-    val pieces = piecesFor(spark, outDir, table.name, cutoffExclusive)
+    val c = chain(outDir)
+    val pieces = c.scan(spark).visible(cutoffExclusive.getOrElse(Long.MaxValue))
+      .map { case (p, v) => v -> s"${c.path(p, v)}/${table.name}" }
+      .filter { case (_, p) => ArtifactIO.exists(spark, p) }
     if (pieces.isEmpty) None
     else {
       val u = pieces.map { case (v, path) =>
@@ -148,12 +138,11 @@ object DeltaState {
     }
   }
 
-  /** Highest committed version id (base or delta) — the "current"
-    * version readers see. None when nothing is committed.
+  /** Highest committed version id — the "current" version readers see.
+    * None when nothing is committed.
     */
   def latest(spark: SparkSession, outDir: String): Option[Long] =
-    (ArtifactIO.committedVersions(spark, outDir, BasePrefix) ++
-      ArtifactIO.committedVersions(spark, outDir, DeltaPrefix)).sorted.lastOption
+    chain(outDir).scan(spark).visible().lastOption.map(_._2)
 
   /** CHANGE DATA FEED between two versions — the delta-log's second
     * dividend after time travel: the per-key row-level changes
@@ -188,8 +177,8 @@ object DeltaState {
     */
   def changesBetween(spark: SparkSession, outDir: String, table: Table,
       fromV: Long, toV: Long): Option[DataFrame] = {
-    val bases = ArtifactIO.committedVersions(spark, outDir, BasePrefix)
-    val deltas = ArtifactIO.committedVersions(spark, outDir, DeltaPrefix)
+    val s = chain(outDir).scan(spark)
+    val (bases, deltas) = (s.committed(BasePrefix), s.committed(DeltaPrefix))
     val post0 = asOf(spark, outDir, table, Some(toV + 1))
     if (post0.isEmpty) return None
     val havePieceAtOrBelowFrom = (bases ++ deltas).exists(_ <= fromV)
@@ -236,17 +225,6 @@ object DeltaState {
       valCols.flatMap(c => Seq(col(s"pre_$c"), col(s"post_$c"))): _*))
   }
 
-  private def piecesFor(spark: SparkSession, outDir: String, name: String,
-      cutoff: Option[Long]): Seq[(Long, String)] = {
-    val base = ArtifactIO.committedVersions(spark, outDir, BasePrefix)
-      .filter(v => cutoff.forall(v < _)).lastOption
-    val deltas = ArtifactIO.committedVersions(spark, outDir, DeltaPrefix)
-      .filter(v => cutoff.forall(v < _) && base.forall(v > _))
-    (base.map(v => v -> s"$outDir/$BasePrefix$v/$name").toSeq ++
-      deltas.map(v => v -> s"$outDir/$DeltaPrefix$v/$name"))
-      .filter { case (_, p) => ArtifactIO.exists(spark, p) }
-  }
-
   private def applyKind(kind: Kind, u: DataFrame): DataFrame = {
     val orig = u.columns.filterNot(_ == "__dsv").toSeq
     val out = kind match {
@@ -278,39 +256,28 @@ object DeltaState {
     out.select(orig.map(col): _*)
   }
 
-  /** Fold old versions into a base snapshot and delete the superseded
-    * pieces, keeping the newest `keep` reconstruction points (the
-    * second-newest becomes the base for keep = 2). `keep >= 2` BY
-    * CONTRACT: a batch whose version committed but whose checkpoint
-    * offset didn't is redelivered and rebuilds from the state below its
-    * own id — keep = 1 would fold/delete exactly that predecessor.
-    * Also removes crash debris: uncommitted version/base directories
-    * older than the newest committed id (unreachable by any replay);
-    * an uncommitted directory AT/AFTER the newest committed id is the
-    * in-flight batch a retry will overwrite — never touched.
-    *
-    * Crash-safe without coordination: the base is written to its own
-    * directory and published by the commit marker BEFORE any delete;
-    * readers that race the compaction see either chain, both of which
-    * reconstruct the identical state (deltas ≤ base id are superseded,
-    * not required). Returns the deleted ids, for observability.
+  /** Fold old versions into a base snapshot and retire the superseded
+    * pieces right after it publishes, keeping the newest `keep`
+    * reconstruction points (the second-newest becomes the base for
+    * keep = 2). `keep >= 2` BY CONTRACT: a batch whose version committed
+    * but whose checkpoint offset didn't is redelivered and rebuilds from
+    * the state below its own id — keep = 1 would fold/delete exactly
+    * that predecessor. Also removes crash debris: uncommitted directories
+    * below the newest committed id. Only this store sweeps debris — its
+    * ids come from one producer, so nothing below the newest committed
+    * id can still be in flight (an uncommitted directory at or after it
+    * is the batch a retry will overwrite). Returns the deleted ids.
     */
   def compact(spark: SparkSession, outDir: String, keep: Int = 2): Seq[Long] = {
     require(keep >= 2,
       s"sink-state retention needs keep >= 2 (replay-predecessor window), got $keep")
-    val bases = ArtifactIO.committedVersions(spark, outDir, BasePrefix)
-    val deltas = ArtifactIO.committedVersions(spark, outDir, DeltaPrefix)
-    val all = (bases ++ deltas).distinct.sorted
+    val c = chain(outDir)
+    val s = c.scan(spark)
+    val bases = s.committed(BasePrefix)
+    val all = (bases ++ s.committed(DeltaPrefix)).distinct.sorted
     val newest = all.lastOption
-    def debrisOf(prefix: String): Seq[Long] =
-      ArtifactIO.list(spark, outDir)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix))
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .filter(id => newest.exists(id < _) &&
-          !ArtifactIO.isCommitted(spark, s"$outDir/$prefix$id"))
-        .map { id => ArtifactIO.delete(spark, s"$outDir/$prefix$id"); id }
-    val debris = debrisOf(DeltaPrefix) ++ debrisOf(BasePrefix)
+    val debris = c.prefixes.flatMap(p => s.uncommitted(p).filter(id => newest.exists(id < _))
+      .map { id => ArtifactIO.delete(spark, c.path(p, id)); id })
     val layout = readLayout(spark, outDir)
     val folded =
       if (all.size < keep || layout.isEmpty) Seq.empty
@@ -318,20 +285,12 @@ object DeltaState {
         val target = all(all.size - keep)
         if (bases.contains(target) && all.head == target) Seq.empty // already folded
         else {
-          val baseDir = s"$outDir/$BasePrefix$target"
-          ArtifactIO.delete(spark, baseDir) // crashed previous attempt
-          // sibling table folds are independent writes under one base
-          // marker — overlap them (guide §2.6), publish still after all
-          ArtifactIO.inParallel(layout.get.map { t =>
-            () => asOf(spark, outDir, t, Some(target + 1)).foreach(
+          ArtifactIO.delete(spark, c.path(BasePrefix, target)) // crashed previous attempt
+          c.write(spark, BasePrefix, target)(layout.get.map { t =>
+            (baseDir: String) => asOf(spark, outDir, t, Some(target + 1)).foreach(
               _.write.mode("overwrite").parquet(s"$baseDir/${t.name}"))
-          })
-          CommitLog.publish(spark, baseDir)
-          deltas.filter(_ <= target).map { id =>
-            ArtifactIO.delete(spark, s"$outDir/$DeltaPrefix$id"); id
-          } ++ bases.filter(_ < target).map { id =>
-            ArtifactIO.delete(spark, s"$outDir/$BasePrefix$id"); id
-          }
+          }: _*)
+          c.retire(spark, target)
         }
       }
     (debris ++ folded).distinct.sorted

@@ -408,8 +408,7 @@ object StreamingJobs {
       smallBytes: Long = 8192L)(batch0: DataFrame, batchId: Long): Unit = {
     val batch = batch0.select("lang", "doc_id", "size_bytes")
     val spark = batch.sparkSession
-    // committed versions only: inventory/ and plan/ are two writes, so
-    // an uncommitted (crashed-between) version must never be selected
+    // committed versions only: inventory/ and plan/ are two writes
     val prev = graft.core.ArtifactIO
       .committedVersions(spark, outDir, "v=")
       .filter(_ < batchId).lastOption
@@ -439,13 +438,12 @@ object StreamingJobs {
           .unionByName(replanned)
       case None => replanned
     }
-    // materialize before overwrite: plan/inv read v=prev, write v=batchId;
-    // the version becomes VISIBLE only at the commit marker after both
-    // tables land — a crash between the writes leaves a directory that
-    // version discovery never selects (and the replay overwrites).
-    inv.write.mode("overwrite").parquet(s"$outDir/v=$batchId/inventory")
-    plan.write.mode("overwrite").parquet(s"$outDir/v=$batchId/plan")
-    graft.core.ArtifactIO.commit(spark, s"$outDir/v=$batchId")
+    // plan/inv read v=prev and land as v=batchId, a version-chain write:
+    // a replay clears the marker before overwriting, so a crash or
+    // failure mid-write never leaves a committed version missing a table
+    graft.core.CommitLog.Chain(outDir, "v=").write(spark, "v=", batchId)(
+      vdir => inv.write.mode("overwrite").parquet(s"$vdir/inventory"),
+      vdir => plan.write.mode("overwrite").parquet(s"$vdir/plan"))
   }
 
   /** The maintained compaction plan: highest COMMITTED version. */
@@ -584,8 +582,8 @@ object StreamingJobs {
     * commutative and IDEMPOTENT, which buys this sink a stronger
     * replay story than the ± delta sinks: a redelivered batch merged
     * twice changes nothing, so at-least-once delivery needs no
-    * dedup — the version chain (`v=<batchId>` + commit marker, the
-    * aggMaintSink contract) exists for crash atomicity and predecessor
+    * dedup — the version chain ([[DeltaState]], the aggMaintSink
+    * contract) exists for crash atomicity and predecessor
     * selection, not for correctness of re-merges. State per group is m
     * bytes FOREVER — the distinct-counting stream job that never grows
     * state, vs exact streaming countDistinct whose state is the
@@ -640,15 +638,11 @@ object StreamingJobs {
     * in a LATER batch contributes nothing (the q100 exact-ingest
     * machinery; at scale both state tables are doc_id-/h-keyed narrow
     * longs, bucketed so the anti-join is a pruned keyed probe). The
-    * two tables are delta-chained as `v=<batchId>/{df, ids}` behind
-    * the [[graft.core.ArtifactIO]] commit marker (written AFTER both —
-    * a crash between the writes leaves an uncommitted version no
-    * reader selects; on a REPLAY [[DeltaState.writeDelta]] deletes the
-    * pre-existing marker before overwriting, so the invariant holds in
-    * the replay window too), with the standard replay contract: a
-    * REDELIVERED batch recomputes its delta against the predecessor
-    * state and overwrites its own version — a crash/retry never
-    * double-counts either table.
+    * two tables are delta-chained as `v=<batchId>/{df, ids}`
+    * ([[DeltaState]]; crash and replay windows per
+    * [[graft.core.CommitLog]]): a REDELIVERED batch recomputes its delta
+    * against the predecessor state and overwrites its own version — a
+    * crash/retry never double-counts either table.
     *
     * The view at `minDocs` is the accumulated boilerplate set; cleaning
     * any batch against it via [[graft.dedup.Dedup.applyBoilerplate]]
@@ -731,20 +725,13 @@ object StreamingJobs {
     * read-merge fan-in and the on-disk total (O(state) + the recent
     * deltas, instead of an unbounded delta tail). Call it from the
     * maintenance cadence (e.g. every N batches from the foreachBatch
-    * body, or a janitor job) — the base is published by its commit
-    * marker BEFORE any delete, so compaction is invisible to readers.
-    *
-    * `keep` is floored at 2 BY CONTRACT, not convention: a batch whose
-    * version committed but whose checkpoint offset didn't is
-    * redelivered and recomputes its delta from the state below its own
-    * id — keep = 1 run inside that window would fold/delete exactly
-    * that predecessor state (see [[DeltaState.compact]]).
+    * body, or a janitor job) — the base publishes BEFORE any delete,
+    * so compaction is invisible to readers. `keep` is floored at 2 BY
+    * CONTRACT, not convention (the replay predecessor; see
+    * [[DeltaState.compact]], which enforces it).
     */
-  def compactVersions(spark: SparkSession, outDir: String, keep: Int = 2): Seq[Long] = {
-    require(keep >= 2,
-      s"sink-state retention needs keep >= 2 (replay-predecessor window), got $keep")
+  def compactVersions(spark: SparkSession, outDir: String, keep: Int = 2): Seq[Long] =
     DeltaState.compact(spark, outDir, keep)
-  }
 
   /** ONLINE CURATION — the streaming composition of the batch cleaning
     * pipeline, one foreachBatch body:
@@ -871,11 +858,9 @@ object StreamingJobs {
     * rk, each contributing value v. The state is the pair of keyed
     * snapshots plus the view, delta-chained ([[DeltaState]]) as
     * `v=<batchId>/{left|right, agg}` (each version carries only its
-    * side's rows) behind [[graft.core.ArtifactIO]]'s commit marker
-    * (the marker is what makes a crash between the writes invisible),
-    * and the same replay contract as aggMaintSink: a redelivered batch
-    * recomputes its delta against the predecessor state and overwrites
-    * its own version.
+    * side's rows), with the same replay contract as aggMaintSink: a
+    * redelivered batch recomputes its delta against the predecessor
+    * state and overwrites its own version.
     *
     * Delta math — O(|batch| + touched keys' detail rows + touched
     * groups), never a recompute:
@@ -1165,7 +1150,8 @@ object StreamingJobs {
   def annIndexCompact(indexDir: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val parts = graft.core.ArtifactIO.list(spark, indexDir).filter(_.startsWith("part="))
-    val numeric = parts.map(_.stripPrefix("part=")).filter(_.forall(_.isDigit)).map(_.toLong)
+    val numeric =
+      graft.core.ArtifactIO.committedVersions(spark, indexDir, "part=", markerGated = false)
     if (numeric.isEmpty) return
     val newest = s"part=${numeric.max}"
     val toMerge = parts.filterNot(_ == newest)

@@ -321,6 +321,49 @@ class CommitLogSpec extends SparkSpec {
     } finally System.clearProperty("graft.dv.claimWaitMs")
   }
 
+  test("janitor during an unpublished concurrent upsert leaves its dv/append dirs; the retried upsert converges") {
+    import spark.implicits._
+    def nchars(dir: String): Map[Long, Long] =
+      DeletionVectors.read(spark, dir).select("doc_id", "n_chars")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = freshDvTable()
+    // committed history, so the janitor folds and publishes a base ABOVE
+    // the in-flight writer's id
+    val (committedId, _) = DeletionVectors.deleteWhereConcurrent(spark, dir, col("n_chars") < 150)
+    val pre = nchars(dir)
+    val batch = graft.core.Tables(spark, sf("sf0.001"), "documents")
+      .filter(col("doc_id") % 9 === 4)
+      .select(col("doc_id"), lit(-7L).as("n_chars"))
+      .unionByName(Seq((pre.keys.max + 1, -9L)).toDF("doc_id", "n_chars"))
+      .withColumn("shard", pmod(col("doc_id"), lit(8)))
+    val intended = pre ++ batch.select("doc_id", "n_chars")
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    // the k = 2 crash window: claimed, both dirs written, neither published
+    val id = committedId + 1
+    CommitLog.claim(spark, dir, DeletionVectors.DvPrefix, id)
+    DeletionVectors.upsert(spark, dir, batch, Seq("doc_id"), Seq("doc_id"), id, commit = false)
+    val inFlight = Seq(DeletionVectors.DvPrefix, DeletionVectors.AppendPrefix).map(p => s"$dir/$p$id")
+    val report = CommitLog.janitor(spark, dir)
+    assert(report.substrate == "deletion-vectors" && report.removed.nonEmpty,
+      "fixture degenerate: the janitor folded nothing")
+    inFlight.foreach(d => assert(ArtifactIO.exists(spark, d), s"janitor deleted the in-flight $d"))
+    assert(nchars(dir) == pre, "uncommitted upsert leaked into a read")
+    System.setProperty("graft.dv.claimWaitMs", "300")
+    try {
+      // the writer died holding its claim: the retry names it, the
+      // operator releases it, the retry then applies
+      val e = intercept[CommitLog.CommitConflict] {
+        DeletionVectors.upsertConcurrent(spark, dir, batch, Seq("doc_id"), Seq("doc_id"))
+      }
+      assert(e.getMessage.contains(s"${DeletionVectors.DvPrefix}$id"), e.getMessage)
+      ArtifactIO.delete(spark, s"$dir/${DeletionVectors.DvPrefix}$id${CommitLog.ClaimSuffix}")
+      DeletionVectors.upsertConcurrent(spark, dir, batch, Seq("doc_id"), Seq("doc_id"))
+    } finally System.clearProperty("graft.dv.claimWaitMs")
+    val healed = nchars(dir)
+    assert(healed == intended, "retried upsert did not converge to the intended state")
+    assert(healed.size == DeletionVectors.read(spark, dir).count(), "retry left a duplicate doc_id")
+  }
+
   test("janitor dispatches by descriptor: skipping index folds when versions exceed keep") {
     val d = graft.core.Tables(spark, sf("sf0.001"), "documents")
       .select(col("doc_id"), col("n_chars"))
@@ -338,6 +381,34 @@ class CommitLogSpec extends SparkSpec {
     assert(n == d.count())
     val report = CommitLog.janitor(spark, dir, keep = 2)
     assert(report.substrate == "skipping-index" && report.removed == Seq(0L, 1L, 2L))
+    assert(SkippingIndex.sideVersionCount(spark, dir) == 1L && allRows() == n)
+  }
+
+  test("a janitor fold that throws releases its base claim; an append at that id then succeeds") {
+    val d = graft.core.Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("n_chars"))
+      .withColumn("cluster", expr("doc_id div 16"))
+    val dir = tmp("graft-cl-skip-fail")
+    SkippingIndex.build(d.filter(col("doc_id") % 3 === 0), dir, "cluster", Seq("doc_id"), "doc_id")
+    SkippingIndex.append(d.filter(col("doc_id") % 3 === 1), dir, "cluster", Seq("doc_id"), "doc_id", 1L)
+    SkippingIndex.append(d.filter(col("doc_id") % 3 === 2), dir, "cluster", Seq("doc_id"), "doc_id", 2L)
+    val indexFile = s"$dir/${SkippingIndex.IndexFile}"
+    val descriptor = ArtifactIO.readString(spark, indexFile)
+    // the fold fails after the janitor allocated base id 3
+    ArtifactIO.writeAtomicString(spark, indexFile, "corrupt")
+    intercept[MatchError](CommitLog.janitor(spark, dir, keep = 2))
+    assert(CommitLog.claimed(spark, dir, SkippingIndex.BasePrefix).isEmpty,
+      "the failed fold leaked its base claim")
+    ArtifactIO.writeAtomicString(spark, indexFile, descriptor)
+    // 3 is also the producer's next id
+    val extra = d.filter(col("doc_id") % 3 === 0).withColumn("doc_id", col("doc_id") + 1000000L)
+    SkippingIndex.append(extra, dir, "cluster", Seq("doc_id"), "doc_id", 3L)
+    def allRows() = SkippingIndex.readClusters(spark, dir,
+      SkippingIndex.stats(spark, dir).select(col("cluster").cast("long"))
+        .collect().map(_.getLong(0)).toSeq).count()
+    val n = d.count() + extra.count()
+    assert(allRows() == n)
+    assert(CommitLog.janitor(spark, dir, keep = 2).removed == Seq(0L, 1L, 2L, 3L))
     assert(SkippingIndex.sideVersionCount(spark, dir) == 1L && allRows() == n)
   }
 

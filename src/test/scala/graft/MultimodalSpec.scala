@@ -272,6 +272,27 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  test("writeBlobs' local path replaces blobs whole: a rewrite with different bytes reads back intact, no temp files remain") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-blob-local").toFile.getAbsolutePath + "/blobs"
+    def payloads(reps: Int) = spark.range(0, 6).select(col("id"),
+      expr(s"cast(repeat(concat('blob-', cast(id as string), ';'), $reps) as binary)").as("bytes"))
+    def readBack(): Map[Long, Seq[Byte]] =
+      spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(dir)
+        .select(regexp_extract(col("path"), "(\\d+)\\.bin$", 1).cast("long"), col("content"))
+        .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    def want(reps: Int) = payloads(reps).collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    graft.core.ArtifactIO.writeBlobs(spark, dir, payloads(50), ".bin")
+    assert(readBack() == want(50))
+    // the retried / re-run export rewrites every blob with SHORTER bytes:
+    // each file must hold exactly the new payload, never a mix
+    graft.core.ArtifactIO.writeBlobs(spark, dir, payloads(3), ".bin")
+    assert(readBack() == want(3), "a rewritten blob must read back whole")
+    val names = new java.io.File(dir).list().toSeq.sorted
+    assert(names == (0 until 6).map(i => s"$i.bin").sorted,
+      s"the blob directory must hold exactly the blobs, no temp files: $names")
+  }
+
   test("q226 storage boundary: the decode stages scan the WRITTEN tables, not in-plan renders") {
     val df = graft.queries.QueriesBinary.q226_png_storage(spark, sf("sf0.001"))
     // both storage legs present as FILE SCANS rooted in the written store

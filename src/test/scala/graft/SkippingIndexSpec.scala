@@ -301,4 +301,24 @@ class SkippingIndexSpec extends SparkSpec {
     // idempotent: nothing left to retire
     assert(SkippingIndex.vacuum(spark, root).isEmpty)
   }
+
+  test("a retried compact at an already-published base id is refused; the published base still reads") {
+    val d = graft.core.Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("n_chars"))
+      .withColumn("cluster", expr("doc_id div 16"))
+    val root = java.nio.file.Files.createTempDirectory("graft-skip-recompact").toFile.getAbsolutePath
+    SkippingIndex.build(d.filter(col("doc_id") % 2 === 0), root, "cluster", Seq("doc_id"), "doc_id")
+    SkippingIndex.append(d.filter(col("doc_id") % 2 =!= 0), root, "cluster", Seq("doc_id"), "doc_id", 1L)
+    val n = d.count()
+    assert(SkippingIndex.compact(spark, root, 10L, gc = false) == Seq(0L, 1L))
+    // a retried OPTIMIZE job at the same id would read base_v=10 while
+    // overwriting it — the id check must refuse before anything is touched
+    val e = intercept[IllegalArgumentException](SkippingIndex.compact(spark, root, 10L))
+    assert(e.getMessage.contains("compaction id 10 must exceed every committed version"))
+    assert(SkippingIndex.visibleVersionDirs(spark, root) == Seq(s"$root/base_v=10"))
+    assert(new java.io.File(s"$root/base_v=0").exists, "the refused compact retired history")
+    val sel = SkippingIndex.stats(spark, root).select(col("cluster").cast("long"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(SkippingIndex.readClusters(spark, root, sel).count() == n)
+  }
 }

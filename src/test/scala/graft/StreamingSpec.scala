@@ -444,6 +444,44 @@ class StreamingSpec extends SparkSpec {
     assert(plan() == maintained, "replaying a batch changed the plan — sink is not idempotent")
   }
 
+  test("compaction plan: a replay failing mid-write leaves the served version whole; a clean replay converges to the never-failed twin") {
+    val docs = graft.core.Tables(spark, sf("sf0.001"), "documents")
+      .select(col("lang"), col("doc_id"), octet_length(col("text")).cast("long").as("size_bytes"))
+    def part(b: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
+    val out = java.nio.file.Files.createTempDirectory("graft-cmp-torn").toString
+    val twin = java.nio.file.Files.createTempDirectory("graft-cmp-twin").toString
+    (0 until 2).foreach { b =>
+      StreamingJobs.compactionPlanSink(out)(part(b), b.toLong)
+      StreamingJobs.compactionPlanSink(twin)(part(b), b.toLong)
+    }
+    def rows(dir: String, table: String) = spark.read.parquet(s"$dir/$table").collect().toSet
+    def plan(dir: String) = StreamingJobs.compactionPlan(spark, dir).collect().toSet
+    // redeliver the committed batch 1 with an input that fails while the
+    // version's tables are being overwritten
+    val boom = udf((n: Long) => {
+      if (n >= 0) throw new IllegalStateException("injected write failure")
+      n
+    })
+    val e = intercept[Exception] {
+      StreamingJobs.compactionPlanSink(out)(part(1).withColumn("size_bytes", boom(col("size_bytes"))), 1L)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected write failure")),
+      s"the sink must fail on the injected error, got $e")
+    // the served version is committed and every one of its tables reads back
+    val served = graft.core.ArtifactIO.committedVersions(spark, out, "v=").max
+    val servedPlan = rows(s"$out/v=$served", "plan")
+    assert(rows(s"$out/v=$served", "inventory").nonEmpty, s"served version $served lost its inventory")
+    assert(plan(out) == servedPlan)
+    // the clean replay plus the next batch equal the never-failed twin
+    StreamingJobs.compactionPlanSink(out)(part(1), 1L)
+    StreamingJobs.compactionPlanSink(out)(part(2), 2L)
+    StreamingJobs.compactionPlanSink(twin)(part(2), 2L)
+    assert(plan(out) == plan(twin), "replayed plan diverged from the twin")
+    assert(rows(s"$out/v=2", "inventory") == rows(s"$twin/v=2", "inventory"),
+      "replayed inventory diverged from the twin")
+  }
+
   test("stream-stream interval join equals the batch formulation") {
     val q = StreamingJobs.followUpPairs(StreamingJobs.readEvents(spark, eventsDir), 30)
       .writeStream.outputMode("append").format("memory").queryName("pairs").start()
@@ -781,9 +819,10 @@ class StreamingSpec extends SparkSpec {
 
     // CRASH WINDOW 1 (batch 2): boiler state + raw committed, curated
     // write never happens
-    val novel2 = StreamingJobs.boilerMaintIngest(s"$out/boiler", 5)(part(2), 2L)
-      .select("doc_id", "text")
+    val admitted2 = StreamingJobs.boilerMaintIngest(s"$out/boiler", 5)(part(2), 2L)
+    val novel2 = admitted2.select("doc_id", "text")
     StreamingJobs.idempotentParquetSink(s"$out/raw")(novel2, 2L)
+    admitted2.unpersist()
     // torn-window read paths: the curated table is EXACTLY the
     // pre-crash prefix (never a partial batch), raw is ahead by the
     // crashed batch's dir (its consumer recleanCurated is replay-safe)
@@ -800,7 +839,7 @@ class StreamingSpec extends SparkSpec {
 
     // CRASH WINDOW 2 (batch 3): ONLY the boiler state commits — crash
     // before even the raw write
-    StreamingJobs.boilerMaintIngest(s"$out/boiler", 5)(part(3), 3L)
+    StreamingJobs.boilerMaintIngest(s"$out/boiler", 5)(part(3), 3L).unpersist()
     assert(curated(out) == curated(ref) && raw(out) == raw(ref),
       "state-only crash window must leave raw/curated untouched")
     val nOut3 = StreamingJobs.curateStream(out, gate = gate)(part(3), 3L)
