@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,9 +11,14 @@ import graft.text.Text
   *
   * Scale design (100 TB): nothing here ever materializes the O(n²) pair
   * space. Exact dedup shuffles on a content digest (bytes ≈ 32/row, not
-  * the payload); near-dedup generates candidates by shuffling on shingle
-  * or band keys (inverted-index / LSH style, cf. V-SMART-Join, VLDB'12)
-  * and only then exact-verifies the candidate pairs.
+  * the payload). Near-dedup is one set-similarity join, [[Dedup.pairs]],
+  * in V-SMART-Join's shape (VLDB'12): sim = f(|a|, |b|, |a∩b|), with the
+  * unilateral |a| carried on every (doc_id, n, h) shingle row and the
+  * conjunctive |a∩b| counted by one hash-partitioned pair aggregate.
+  * Candidates come from the shingle inverted index (full, df-capped or
+  * prefix-filtered) or from MinHash band keys, and are exact-verified on
+  * the full shingle sets. The public pair operators are one-line
+  * wrappers over it.
   */
 object Dedup {
   /** Exact dedup keeping the smallest `idCol` per identical `textCol`.
@@ -37,19 +42,24 @@ object Dedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
 
-  /** Distinct (doc_id, shingle-hash) pairs for `n`-token shingles.
+  /** Distinct (doc_id, n, h) rows for `shingleN`-token shingles: one row
+    * per distinct shingle hash h of a document, carrying the document's
+    * set size n — taken per row from the distinct shingle array before
+    * the explode, so no aggregate computes it. A document with fewer than
+    * `shingleN` tokens yields no rows.
     *
     * Uses engine-native xxhash64 (codegen'd) — the shingle hash is never
     * observable in output here: joins compare hash equality and only the
-    * exact Jaccard ratio surfaces, so cross-engine portability is not
-    * required (unlike q21/q25 where PortableHash IS the output). Full
-    * 64 bits: intersection counts join on hash equality, and a 2^31
-    * reduction would produce hundreds of real collisions at sf0.1 scale.
+    * exact ratio surfaces, so cross-engine portability is not required
+    * (unlike q21/q25 where PortableHash IS the output). Full 64 bits:
+    * intersection counts join on hash equality, and a 2^31 reduction
+    * would produce hundreds of real collisions at sf0.1 scale.
     */
-  def shingleHashes(docs: DataFrame, n: Int): DataFrame =
+  def shingleHashes(docs: DataFrame, shingleN: Int): DataFrame =
     docs
-      .select(col("doc_id"), explode(Text.shingles(Text.tokens(col("text")), n)).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
+      .select(col("doc_id"), Text.shingles(Text.tokens(col("text")), shingleN).as("s"))
+      .select(col("doc_id"), size(col("s")).cast("long").as("n"), explode(col("s")).as("s"))
+      .select(col("doc_id"), col("n"), xxhash64(col("s")).as("h"))
 
   /** MinHash signatures as one wide row per doc: `numHashes` independent
     * codegen'd `min` aggregates over the affine permutations of the
@@ -108,25 +118,13 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard over shingle sets for the given candidate pairs.
-    * Output is independent of every hash above (SURVEY.md §7.4 trap 7):
-    * LSH only filters candidates; this decides membership.
+  /** Exact Jaccard over shingle sets for caller-supplied candidate pairs
+    * (doc_id_a, doc_id_b) — the [[pairs]] verify tail, used by the LSH
+    * paths. Output is independent of every hash above (SURVEY.md §7.4
+    * trap 7): LSH only filters candidates; this decides membership.
     */
-  def exactJaccard(candidates: DataFrame, shingles: DataFrame): DataFrame = {
-    val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sa = shingles.select(col("doc_id").as("doc_id_a"), col("h"))
-    val sb = shingles.select(col("doc_id").as("doc_id_b"), col("h"))
-    val common = candidates
-      .join(sa, "doc_id_a")
-      .join(sb, Seq("doc_id_b", "h"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("n", "na"), "doc_id_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("n", "nb"), "doc_id_b")
-      .select(col("doc_id_a"), col("doc_id_b"),
-        (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-  }
+  def exactJaccard(candidates: DataFrame, shingles: DataFrame): DataFrame =
+    score(verify(candidates, shingles, shingles), Jaccard)
 
   /** Full MinHash+LSH near-dedup: candidates via banding, membership via
     * exact Jaccard ≥ threshold. With 128 hashes in bands of 4, a pair at
@@ -144,199 +142,134 @@ object Dedup {
     exactJaccard(cands, sh).filter(col("jaccard") >= threshold)
   }
 
-  /** Exact n-gram Jaccard near-dup via inverted-index join on shingle
-    * hashes — exact for ANY threshold > 0 (every pair with J > 0 shares a
-    * shingle and is found by the join). Preferred over LSH when the
-    * threshold is low; shuffle is O(total shingles + colliding pairs).
+  /** Exact shingle Jaccard pairs (a < b) ≥ `threshold` over the full
+    * inverted index: [[pairs]] with no candidate filter. Exact for any
+    * threshold > 0 (every pair with J > 0 shares a shingle); preferred
+    * where the threshold is low.
     */
   def ngramJaccardPairs(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame =
-    jaccardPairsFromShingles(shingleHashes(docs, shingleN).persist(), threshold)
+    pairs(shingleHashes(docs, shingleN), Jaccard, threshold)
 
-  /** df-CAPPED exact n-gram Jaccard: [[ngramJaccardPairs]] with shingles
-    * whose document frequency exceeds `maxDf` dropped BEFORE the
-    * inverted-index self-join — sizes, intersections, and the Jaccard
-    * ratio are all computed over the surviving (non-boilerplate) shingle
-    * universe, so the semantics are coherent and the oracle replays the
-    * same bound. This is the absolute per-shingle pair-work ceiling (the
-    * q124 df-ceiling / q54 decontamination treatment applied to the pair
-    * family): total candidate pairs ≤ maxDf/2 · |postings| — LINEAR in
-    * the corpus regardless of duplicate-family sizes, where the uncapped
-    * join is quadratic in the hottest shingle's df. The df count
-    * shuffles on `h`, the key the pair join needs anyway. With maxDf
-    * above the corpus's max df the cap binds nothing and the output is
-    * identical to the uncapped twin (the q98 headroom pattern;
-    * SCALING.md).
+  /** [[ngramJaccardPairs]] over the shingles whose document frequency is
+    * at most `maxDf`: [[pairs]] with the [[DfCap]] filter. Sizes,
+    * intersections and the ratio are all taken over the surviving
+    * universe, so the oracle replays the same bound; total pair work is
+    * ≤ maxDf/2 · |postings|, linear in the corpus. With `maxDf` above the
+    * corpus's max df the output equals the uncapped twin's (SCALING.md).
     */
   def ngramJaccardPairsCapped(docs: DataFrame, shingleN: Int, threshold: Double,
-      maxDf: Int): DataFrame = {
-    val sh0 = shingleHashes(docs, shingleN).persist()
-    // (doc_id, h) rows are distinct, so count per h == document frequency
-    val keep = sh0.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("h")
-    jaccardPairsFromShingles(sh0.join(keep, Seq("h"), "left_semi").persist(), threshold)
-  }
+      maxDf: Int): DataFrame =
+    pairs(shingleHashes(docs, shingleN), Jaccard, threshold, DfCap(maxDf))
 
-  /** Shared tail of the exact-Jaccard pair family: pairs ≥ threshold
-    * from a DISTINCT (doc_id, h) shingle table (persisted by callers —
-    * it feeds sizes and both sides of the inverted-index join).
+  /** Exact shingle Jaccard pairs (a < b) ≥ `threshold` via the symmetric
+    * prefix filter: [[pairs]] with [[Prefix]]. The regime a large dedup
+    * runs (τ ≥ ~0.5); needs 0 < τ < 1.
     */
-  private def jaccardPairsFromShingles(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sa = sh.select(col("doc_id").as("doc_id_a"), col("h"))
-    val sb = sh.select(col("doc_id").as("doc_id_b"), col("h"))
-    // (doc, h) rows are distinct, so the inverted-index join emits exactly
-    // one row per SHARED shingle — the intersection size falls out of a
-    // single groupBy; no second verification join needed.
-    val common = sa.join(sb, "h")
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("n", "na"), "doc_id_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("n", "nb"), "doc_id_b")
-      .select(col("doc_id_a"), col("doc_id_b"),
-        (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+  def ngramJaccardPairsPrefix(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame =
+    pairs(shingleHashes(docs, shingleN), Jaccard, threshold, Prefix)
 
-  /** Exact n-gram Jaccard via PREFIX FILTERING (AllPairs/PPJoin family) —
-    * the exact set-similarity join that survives scale when the threshold
-    * is high (the regime a 100 TB dedup actually runs: τ ≥ ~0.5).
-    *
-    * Principle: order every doc's shingles by a global total order
-    * (document frequency asc, hash asc — rarest first). If J(a,b) ≥ τ
-    * then c = |a∩b| ≥ ⌈τ·|a|⌉ and ≥ ⌈τ·|b|⌉ (proof: c(1+τ) ≥ τ(|a|+|b|)
-    * and |b| ≥ c ⟹ c ≥ τ|a| + τ(|b|−c) ≥ τ|a|), and by pigeonhole on
-    * the o-th largest common element, the first |s|−o+1 shingles of EACH
-    * doc must contain a COMMON element. So the inverted index is built
-    * over only each doc's (1−τ)·|s|+1 rarest shingles: posting lists
-    * shrink to the rare tail of the df distribution and candidate pairs
-    * collapse, while exactness is preserved — every candidate is then
-    * verified against the FULL shingle sets. Versus [[ngramJaccardPairs]]
-    * (index over every shingle, O(Σ_h df(h)²) enumerated pairs), the
-    * per-bucket quadratic term runs over prefix df only. The ceiling is
-    * computed with a 1e-9 slack so FP error can only LENGTHEN a prefix
-    * (extra candidates), never shorten it (lost pairs).
-    */
-  def ngramJaccardPairsPrefix(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold < 1.0, s"prefix filter needs 0 < tau < 1, got $threshold")
-    val sh = shingleHashes(docs, shingleN).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val dfreq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    def ceilTau(n: org.apache.spark.sql.Column) =
-      greatest(lit(1L), ceil(n * lit(threshold) - lit(1e-9)).cast("long"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "h")
-    val prefixes = sh.join(dfreq, "h").join(sizes, "doc_id")
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") <= col("n") - ceilTau(col("n")) + lit(1L))
-      .select(col("doc_id"), col("h"), col("n"))
-    val pa = prefixes.select(col("doc_id").as("doc_id_a"), col("h"), col("n").as("na"))
-    val pb = prefixes.select(col("doc_id").as("doc_id_b"), col("h"), col("n").as("nb"))
-    val cands = pa.join(pb, "h")
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      // length filter: c ≤ min(na,nb) and c ≥ ⌈τ·max⌉ ⟹ sizes within τ
-      .filter(col("nb") >= ceilTau(col("na")) && col("na") >= ceilTau(col("nb")))
-      .select("doc_id_a", "doc_id_b")
-      .distinct()
-    exactJaccard(cands, sh).filter(col("jaccard") >= threshold)
-  }
-
-  /** ASYMMETRIC prefix-filtered exact Jaccard join — near-dup screening
-    * of a new batch AGAINST an existing corpus (the ingest-time
-    * companion of [[ngramJaccardPairsPrefix]]): pairs (existing, new)
-    * with shingle Jaccard ≥ τ, never existing×existing or new×new.
-    *
-    * The prefix principle is per-document, so it transfers unchanged —
-    * the only requirement is that BOTH sides' prefixes are taken under
-    * one COMMON global shingle order (df over the union here; any fixed
-    * total order preserves exactness, df just makes prefixes rare). The
-    * inverted index is built over the EXISTING side's prefixes only as
-    * deep as the new side probes it: candidates are (prefixA ⋈ prefixB)
-    * on the shingle hash + the size-compatibility filter, then the FULL
-    * sets verify. At 100 TB the corpus-side df and prefix index are
-    * incrementally maintained artifacts (df only grows, which can only
-    * LENGTHEN prefixes → candidates are a superset → still exact) — the
-    * per-batch cost is probing with the new docs' prefixes.
-    *
-    * Caller contract: the two sides' doc_id spaces are disjoint.
+  /** Near-dup screening of a new batch against an existing corpus:
+    * (existing_id, new_id, jaccard) ≥ `threshold`, never existing×existing
+    * or new×new — [[pairs]] with [[Prefix]] on the cross sides. Both
+    * sides' prefixes follow one df order taken over the union. Caller
+    * contract: the two sides' doc_id spaces are disjoint.
     */
   def crossJaccardPrefix(existing: DataFrame, batch: DataFrame,
-      shingleN: Int, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold < 1.0, s"prefix filter needs 0 < tau < 1, got $threshold")
-    val shA = shingleHashes(existing, shingleN)
-    val shB = shingleHashes(batch, shingleN)
-    val sh = shA.unionByName(shB).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val dfreq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    def ceilTau(n: org.apache.spark.sql.Column) =
-      greatest(lit(1L), ceil(n * lit(threshold) - lit(1e-9)).cast("long"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "h")
-    val prefixes = sh.join(dfreq, "h").join(sizes, "doc_id")
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") <= col("n") - ceilTau(col("n")) + lit(1L))
-      .select(col("doc_id"), col("h"), col("n"))
-    val aIds = existing.select(col("doc_id")).distinct()
-    val bIds = batch.select(col("doc_id")).distinct()
-    val pa = prefixes.join(aIds, "doc_id")
-      .select(col("doc_id").as("existing_id"), col("h"), col("n").as("na"))
-    val pb = prefixes.join(bIds, "doc_id")
-      .select(col("doc_id").as("new_id"), col("h"), col("n").as("nb"))
-    val cands = pa.join(pb, "h")
-      .filter(col("nb") >= ceilTau(col("na")) && col("na") >= ceilTau(col("nb")))
-      .select(col("existing_id").as("doc_id_a"), col("new_id").as("doc_id_b"))
-      .distinct()
-    exactJaccard(cands, sh).filter(col("jaccard") >= threshold)
+      shingleN: Int, threshold: Double): DataFrame =
+    pairs(shingleHashes(existing, shingleN), Jaccard, threshold, Prefix,
+      Some(shingleHashes(batch, shingleN)))
       .select(col("doc_id_a").as("existing_id"), col("doc_id_b").as("new_id"), col("jaccard"))
+
+  /** Exact shingle containment pairs (|a∩b| / |a| ≥ `threshold`, a ≠ b)
+    * via the one-sided prefix filter: [[pairs]] with [[Prefix]] and the
+    * [[Containment]] measure, whose prefix is taken on a's side only.
+    */
+  def containmentPrefix(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame =
+    pairs(shingleHashes(docs, shingleN), Containment, threshold, Prefix)
+
+  /** A set-similarity measure sim = f(|a|, |b|, |a∩b|), named as its
+    * output column. `selfPair` orders the pairs of a self join (a < b
+    * for the symmetric measure, a ≠ b for the asymmetric one);
+    * `oneSided` says only a's size bounds |a∩b| from below, so only a's
+    * side can take a prefix.
+    */
+  private[graft] final case class Measure(name: String, f: (Column, Column, Column) => Column,
+      selfPair: (Column, Column) => Column, oneSided: Boolean)
+  private[graft] val Jaccard =
+    Measure("jaccard", (na, nb, c) => c.cast("double") / (na + nb - c), _ < _, oneSided = false)
+  private[graft] val Containment =
+    Measure("containment", (na, _, c) => c.cast("double") / na, _ =!= _, oneSided = true)
+
+  /** Candidate filter of [[pairs]]: the full inverted index, the index
+    * over the shingles of df ≤ maxDf (self sides only), or the prefix
+    * filter.
+    */
+  private[graft] sealed trait Candidates
+  private[graft] case object FullIndex extends Candidates
+  private[graft] final case class DfCap(maxDf: Int) extends Candidates
+  private[graft] case object Prefix extends Candidates
+
+  /** The one exact set-similarity join: (doc_id_a, doc_id_b, <measure>)
+    * for every pair with sim ≥ `tau`, over (doc_id, n, h) rows from
+    * [[shingleHashes]]. Sides are self (`b` empty: `a` against itself,
+    * pairs ordered by the measure) or cross (`a` × `b`, disjoint ids).
+    *
+    * Shape (V-SMART-Join, VLDB'12): the unilateral |a| rides on every
+    * row, so the pair aggregate groups by (a, na, b, nb) and applies f
+    * directly — no size table is ever joined back onto the pair table.
+    *  - [[FullIndex]]: the shingle self-join emits one row per SHARED
+    *    shingle, so c falls out of the pair aggregate with no verify join.
+    *  - [[DfCap]]: the same after dropping shingles of df > maxDf; n is
+    *    recounted over the survivors (one doc_id window, before the join).
+    *  - [[Prefix]] (AllPairs/PPJoin): order each set by (df, h), rarest
+    *    first. If sim ≥ τ then c ≥ ⌈τ·|a|⌉ (for Jaccard also ≥ ⌈τ·|b|⌉),
+    *    so by pigeonhole the first |a| − ⌈τ·|a|⌉ + 1 shingles of a share
+    *    an element with b — with b's prefix too when the measure is
+    *    symmetric, with all of b when one-sided. Candidates from the
+    *    prefix join that pass the length filter are verified on the FULL
+    *    sets. The ceiling carries a 1e-9 slack so FP error can only
+    *    LENGTHEN a prefix (extra candidates), never shorten it (lost
+    *    pairs).
+    */
+  private[graft] def pairs(a: DataFrame, m: Measure, tau: Double, cands: Candidates = FullIndex,
+      b: Option[DataFrame] = None): DataFrame = {
+    // Nothing is persisted: recomputing the shingle rows per branch costs
+    // less than a cache job, and leaves no table pinned after the query.
+    val sb = b.getOrElse(a)
+    val pairOk = if (b.isEmpty) m.selfPair(col("doc_id_a"), col("doc_id_b")) else lit(true)
+    lazy val dfreq = b.fold(a)(a.unionByName(_)).groupBy("h").agg(count(lit(1)).as("df"))
+    val common = cands match {
+      case FullIndex => side(a, "a").join(side(sb, "b"), "h").filter(pairOk)
+      case DfCap(maxDf) =>
+        val kept = a.join(dfreq.filter(col("df") <= maxDf), Seq("h"), "left_semi")
+          .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
+        side(kept, "a").join(side(kept, "b"), "h").filter(pairOk)
+      case Prefix =>
+        require(tau > 0.0 && tau < 1.0, s"prefix filter needs 0 < tau < 1, got $tau")
+        def ceilTau(n: Column) = greatest(lit(1L), ceil(n * lit(tau) - lit(1e-9)).cast("long"))
+        def prefix(t: DataFrame) = t.join(dfreq, "h")
+          .withColumn("__r", row_number().over(Window.partitionBy("doc_id").orderBy("df", "h")))
+          .filter(col("__r") <= col("n") - ceilTau(col("n")) + lit(1L))
+        // length filter: nb ≥ c ≥ ⌈τ·na⌉, and symmetrically for Jaccard
+        val found = side(prefix(a), "a").join(side(if (m.oneSided) sb else prefix(sb), "b"), "h")
+          .filter(pairOk && col("nb") >= ceilTau(col("na")) &&
+            (lit(m.oneSided) || col("na") >= ceilTau(col("nb"))))
+          .select("doc_id_a", "doc_id_b").distinct()
+        verify(found, a, sb)
+    }
+    score(common, m).filter(col(m.name) >= tau)
   }
 
-  /** Exact shingle CONTAINMENT pairs (|a∩b| / |a| ≥ τ, a ≠ b) via
-    * ONE-SIDED prefix filtering — the scale path for the asymmetric
-    * measure (a document embedded in a larger one), where symmetric
-    * Jaccard pruning does not apply.
-    *
-    * Containment bounds only the CONTAINED side: c = |a∩b| ≥ ⌈τ·|a|⌉
-    * says nothing about |b|, so only a's side can take a prefix — at
-    * most |a| − ⌈τ·|a|⌉ of a's shingles are outside b, hence the first
-    * |a| − ⌈τ·|a|⌉ + 1 under ANY fixed global order contain a common
-    * element (pigeonhole), while b must stay fully indexed. The global
-    * order is df asc (rarest first), so a's probes hit the df tail and
-    * avoid boilerplate hot keys unless a consists of nothing else —
-    * the intrinsic worst case of exact containment, which no pruning
-    * can remove (cf. the df-capped APPROXIMATE screen in the q54
-    * decontamination family). Candidates are verified on the FULL sets;
-    * the ceiling carries the same downward FP slack as the Jaccard
-    * prefix filters (extra candidates possible, lost pairs impossible).
-    */
-  def containmentPrefix(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold < 1.0, s"prefix filter needs 0 < tau < 1, got $threshold")
-    val sh = shingleHashes(docs, shingleN).persist()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val dfreq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    def ceilTau(n: org.apache.spark.sql.Column) =
-      greatest(lit(1L), ceil(n * lit(threshold) - lit(1e-9)).cast("long"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "h")
-    val prefixes = sh.join(dfreq, "h").join(sizes, "doc_id")
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") <= col("n") - ceilTau(col("n")) + lit(1L))
-      .select(col("doc_id").as("doc_id_a"), col("h"))
-    val index = sh.select(col("doc_id").as("doc_id_b"), col("h"))
-    val cands = prefixes.join(index, "h")
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .select("doc_id_a", "doc_id_b")
-      .distinct()
-    val sa = sh.select(col("doc_id").as("doc_id_a"), col("h"))
-    val sb = sh.select(col("doc_id").as("doc_id_b"), col("h"))
-    val common = cands
-      .join(sa, "doc_id_a")
-      .join(sb, Seq("doc_id_b", "h"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("n", "na"), "doc_id_a")
-      .select(col("doc_id_a"), col("doc_id_b"),
-        (col("c").cast("double") / col("na")).as("containment"))
-      .filter(col("containment") >= threshold)
-  }
+  private def side(sh: DataFrame, s: String): DataFrame =
+    sh.select(col("doc_id").as(s"doc_id_$s"), col("n").as(s"n$s"), col("h"))
+
+  /** One row per shingle each candidate pair (doc_id_a, doc_id_b) shares. */
+  private def verify(cands: DataFrame, sa: DataFrame, sb: DataFrame): DataFrame =
+    cands.join(side(sa, "a"), "doc_id_a").join(side(sb, "b"), Seq("doc_id_b", "h"))
+
+  private def score(common: DataFrame, m: Measure): DataFrame =
+    common.groupBy("doc_id_a", "na", "doc_id_b", "nb").agg(count(lit(1)).as("c"))
+      .select(col("doc_id_a"), col("doc_id_b"), m.f(col("na"), col("nb"), col("c")).as(m.name))
 
   /** ExactSubstr-style span REMOVAL (Lee et al. 2022 — deduplicate the
     * SPAN, not the document): every `w`-token window whose hash occurs

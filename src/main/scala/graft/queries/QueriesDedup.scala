@@ -381,31 +381,25 @@ SELECT doc_id, count(*) AS n_triangles FROM n GROUP BY doc_id ORDER BY doc_id"""
   /** Asymmetric near-dup: shingle CONTAINMENT |A∩B| / |A| — the measure
     * that catches a document embedded inside a larger one, where
     * symmetric Jaccard stays low (the quote-a-whole-article case Jaccard
-    * dedup misses). Same inverted-index candidate join as q19 (any pair
-    * with overlap shares a shingle), emitted per ordered direction; the
-    * ratio is exact-integer arithmetic.
+    * dedup misses). The full-index set-similarity join with the
+    * containment measure (Dedup.pairs): any pair with overlap shares a
+    * shingle, emitted per ordered direction; the ratio is exact-integer
+    * arithmetic.
     */
-  def q72_containment(s: SparkSession, dir: String): DataFrame = {
-    // Respread before shingling: the single-row-group fixture file scans
-    // as ONE split, and this query fans the shingle frame into BOTH
-    // sides of a self-join before any shuffle can restore parallelism
-    // (measured 3.5s -> 2.0s at sf0.1; no-op on well-split inputs).
-    val sh = graft.operators.Respread.ifCoarse(docs(s, dir))
-      .select(col("doc_id"), explode(Text.shingles(Text.tokens(col("text")), 3)).as("sh"))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.select(col("sh"), col("doc_id").as("doc_id_a"))
-    val b = sh.select(col("sh"), col("doc_id").as("doc_id_b"))
-    val common = a.join(b, Seq("sh"))
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_a"), Seq("doc_id_a"))
-      .filter(col("c").cast("double") / col("n") >= 0.5)
-      .select(col("doc_id_a"), col("doc_id_b"),
-        round(col("c").cast("double") / col("n"), 6).as("containment"))
+  def q72_containment(s: SparkSession, dir: String): DataFrame =
+    containmentPairs(s, dir, Dedup.FullIndex)
+
+  /** Trigram containment ≥ 0.5 through the pair join with `cands`.
+    * Respread before shingling: the single-row-group fixture file scans
+    * as ONE split, and this join fans the shingle frame into BOTH sides
+    * of a self-join before any shuffle can restore parallelism (measured
+    * 3.5s -> 2.0s at sf0.1; no-op on well-split inputs).
+    */
+  private def containmentPairs(s: SparkSession, dir: String, cands: Dedup.Candidates): DataFrame =
+    Dedup.pairs(Dedup.shingleHashes(graft.operators.Respread.ifCoarse(docs(s, dir)), 3),
+        Dedup.Containment, 0.5, cands)
+      .select(col("doc_id_a"), col("doc_id_b"), round(col("containment"), 6).as("containment"))
       .orderBy("doc_id_a", "doc_id_b")
-  }
 
   val q72Sql: String =
     raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),
@@ -431,27 +425,8 @@ ORDER BY doc_id_a, doc_id_b"""
     * ceiling·|postings|/2 — the shape a 100 TB embedded-document scan
     * actually runs.
     */
-  def q234_containment_capped(s: SparkSession, dir: String): DataFrame = {
-    val sh = graft.operators.Respread.ifCoarse(docs(s, dir))
-      .select(col("doc_id"), explode(Text.shingles(Text.tokens(col("text")), 3)).as("sh"))
-    // shingles are distinct per doc, so count per shingle == doc frequency
-    val keep = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= PairDfCeiling).select("sh")
-    val kept = sh.join(keep, Seq("sh"), "left_semi").persist()
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = kept.select(col("sh"), col("doc_id").as("doc_id_a"))
-    val b = kept.select(col("sh"), col("doc_id").as("doc_id_b"))
-    val common = a.join(b, Seq("sh"))
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_id_a"), Seq("doc_id_a"))
-      .filter(col("c").cast("double") / col("n") >= 0.5)
-      .select(col("doc_id_a"), col("doc_id_b"),
-        round(col("c").cast("double") / col("n"), 6).as("containment"))
-      .orderBy("doc_id_a", "doc_id_b")
-  }
+  def q234_containment_capped(s: SparkSession, dir: String): DataFrame =
+    containmentPairs(s, dir, Dedup.DfCap(PairDfCeiling))
 
   val q234Sql: String =
     raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),

@@ -153,6 +153,53 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("pair operators: no aggregate on doc_id alone and no join after the pair aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    val tagged = docs.withColumn("m", pmod(col("doc_id"), lit(4)))
+    val existing = tagged.filter(col("m") =!= 3).select("doc_id", "text")
+    val batch = tagged.filter(col("m") === 3).select("doc_id", "text")
+    // set sizes ride on the shingle rows: no per-document size aggregate
+    def docSizeAgg(a: Aggregate) = a.groupingExpressions match {
+      case Seq(e) => e.references.nonEmpty && e.references.forall(_.name.startsWith("doc_id"))
+      case _ => false
+    }
+    // true when some root-to-leaf path meets a join before any aggregate
+    def joinAboveAgg(p: LogicalPlan): Boolean = p match {
+      case _: Aggregate => false
+      case _: Join => true
+      case other => other.children.exists(joinAboveAgg)
+    }
+    for ((name, df) <- Seq(
+        "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(docs, 3, 0.5),
+        "ngramJaccardPairsPrefix" -> Dedup.ngramJaccardPairsPrefix(docs, 3, 0.5),
+        "crossJaccardPrefix" -> Dedup.crossJaccardPrefix(existing, batch, 3, 0.5),
+        "containmentPrefix" -> Dedup.containmentPrefix(docs, 3, 0.5))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case a: Aggregate if docSizeAgg(a) => a }.isEmpty,
+        s"$name aggregates per document:\n$plan")
+      assert(plan.collectFirst { case a: Aggregate => a }.nonEmpty && !joinAboveAgg(plan),
+        s"$name joins after the pair aggregate:\n$plan")
+    }
+  }
+
+  test("shingleHashes: per-row set size n counts each distinct shingle once") {
+    val sh = Dedup.shingleHashes(docs, 3)
+    val wrong = sh.groupBy("doc_id", "n").agg(count(lit(1)).as("c"))
+      .filter(col("c") =!= col("n"))
+    assert(wrong.count() == 0, s"n differs from the row count: ${wrong.take(3).toSeq}")
+    assert(sh.select("doc_id", "n").distinct().count() == sh.select("doc_id").distinct().count())
+    val crafted = Seq(
+      (1L, "a b"),          // fewer than 3 tokens: no rows
+      (2L, "x y z x y z"),  // trigram "x y z" twice: n = 3, not 4
+      (3L, ""),             // empty text: no rows
+      (4L, "x y z")).toDF("doc_id", "text")
+    val rows = Dedup.shingleHashes(crafted, 3).select("doc_id", "n").as[(Long, Long)].collect()
+    assert(rows.toSeq.sorted == Seq((2L, 3L), (2L, 3L), (2L, 3L), (4L, 1L)))
+    val pairs = Dedup.ngramJaccardPairs(crafted, 3, 0.1)
+      .select("doc_id_a", "doc_id_b", "jaccard").as[(Long, Long, Double)].collect().toSeq
+    assert(pairs == Seq((2L, 4L, 1.0 / 3)), s"crafted pairs: $pairs")
+  }
+
   test("exact dedup is idempotent") {
     val once = Dedup.exactKeepFirst(docs, "text", "doc_id")
     val twice = Dedup.exactKeepFirst(once, "text", "doc_id")
