@@ -80,7 +80,7 @@ object ConnectedComponents {
     * Dataset.unpersist only covers cacheManager entries, not the RDD a
     * checkpoint pins, so reach through the LogicalRDD leaf instead.
     */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => ()

@@ -125,10 +125,7 @@ object DeltaState {
     */
   def asOf(spark: SparkSession, outDir: String, table: Table,
       cutoffExclusive: Option[Long] = None): Option[DataFrame] = {
-    val c = chain(outDir)
-    val pieces = c.scan(spark).visible(cutoffExclusive.getOrElse(Long.MaxValue))
-      .map { case (p, v) => v -> s"${c.path(p, v)}/${table.name}" }
-      .filter { case (_, p) => ArtifactIO.exists(spark, p) }
+    val pieces = visiblePieces(spark, outDir, table, cutoffExclusive)
     if (pieces.isEmpty) None
     else {
       val u = pieces.map { case (v, path) =>
@@ -136,6 +133,29 @@ object DeltaState {
       }.reduce(_ unionByName _)
       Some(applyKind(table.kind, u))
     }
+  }
+
+  /** The same visible pieces as [[asOf]], read as ONE multi-path scan
+    * with no merge: the state's rows as a multiset (a [[SetU]] key
+    * carried by two pieces appears twice). Only for readers whose
+    * result is the same over the multiset and its set — an anti-join
+    * screen — so they skip the merge's shuffle.
+    */
+  private[streaming] def unmerged(spark: SparkSession, outDir: String, table: Table,
+      cutoffExclusive: Option[Long]): Option[DataFrame] = {
+    val pieces = visiblePieces(spark, outDir, table, cutoffExclusive)
+    if (pieces.isEmpty) None else Some(readTable(spark, outDir, table.name, pieces.map(_._2)))
+  }
+
+  /** (version, path) of each visible piece that carries `table`, below
+    * the cutoff — the one listing rule of [[asOf]] and [[unmerged]].
+    */
+  private def visiblePieces(spark: SparkSession, outDir: String, table: Table,
+      cutoffExclusive: Option[Long]): Seq[(Long, String)] = {
+    val c = chain(outDir)
+    c.scan(spark).visible(cutoffExclusive.getOrElse(Long.MaxValue))
+      .map { case (p, v) => v -> s"${c.path(p, v)}/${table.name}" }
+      .filter { case (_, p) => ArtifactIO.exists(spark, p) }
   }
 
   /** Highest committed version id — the "current" version readers see.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -651,7 +651,8 @@ object StreamingJobs {
     * batch's chunks plus keyed merges into the touched df/ids rows.
     */
   def boilerMaintSink(outDir: String, c: Int = 5)(batch: DataFrame, batchId: Long): Unit = {
-    boilerMaintIngest(outDir, c)(batch, batchId).unpersist(); ()
+    graft.operators.ConnectedComponents.unpersistCheckpoint(
+      boilerMaintIngest(outDir, c)(batch, batchId))
   }
 
   /** [[boilerMaintSink]]'s body, returning the batch's NOVEL documents
@@ -661,15 +662,18 @@ object StreamingJobs {
     * PREDECESSOR state (versions < batchId) by path — those pieces stay
     * on disk after this version's write (compaction never folds past
     * the replay predecessor), so consuming it after the state commit
-    * is sound.
+    * is sound. It comes back pinned as a local checkpoint: free it with
+    * [[graft.operators.ConnectedComponents.unpersistCheckpoint]]
+    * (`Dataset.unpersist` does not reach a checkpoint's blocks).
     *
     * Delta storage ([[DeltaState]]): the version holds only the batch's
     * df INCREMENTS and its novel ids — O(batch) bytes. The served-ids
-    * screen reads the merged id set; the df table merges by sum. This
-    * also bounds the served-ids chain on disk (the round-9 NOTES item):
-    * the old full-copy layout rewrote the whole id set every batch —
-    * O(batches × ids) — where the delta chain totals O(ids) between
-    * compactions.
+    * screen anti-joins the ids pieces unmerged ([[DeltaState.unmerged]]:
+    * same rows as against their set, without its shuffle); the df table
+    * merges by sum. This also bounds the served-ids chain on disk (the
+    * round-9 NOTES item): the old full-copy layout rewrote the whole id
+    * set every batch — O(batches × ids) — where the delta chain totals
+    * O(ids) between compactions.
     */
   private val boilerMaintLayoutT = Seq(
     DeltaState.Table("df", DeltaState.Sum(Seq("h"))),
@@ -684,16 +688,19 @@ object StreamingJobs {
     // row per doc_id before anything else.
     val batch = batch0.dropDuplicates("doc_id")
     val spark = batch.sparkSession
-    val prevIds = DeltaState.asOf(spark, outDir, boilerMaintLayoutT(1), Some(batchId))
-    // Persisted HERE (returned persisted; callers unpersist): the
-    // anti-join otherwise re-executes for each consumer — the df delta
-    // write, the ids delta write, and every downstream use the caller
-    // makes (curateStream's raw archive + clean + gate) — 3-4 full
-    // recomputations of the admission DAG per batch (guide §1/§5).
+    val prevIds = DeltaState.unmerged(spark, outDir, boilerMaintLayoutT(1), Some(batchId))
+    // Pinned HERE (returned pinned; callers free it): the anti-join
+    // otherwise re-executes for each consumer — both delta writes and
+    // the caller's raw archive + clean + gate (guide §1/§5). A lazy local
+    // checkpoint, not persist(): each of the two overlapped writes would
+    // run its own job to fill a persisted frame, while a checkpoint is
+    // filled inside the tasks of whichever write reaches a partition
+    // first. Its blocks do not survive an executor loss; the batch then
+    // fails and its replay rebuilds them (the body is replay-idempotent).
     val novel = (prevIds match {
       case Some(pi) => batch.join(pi, Seq("doc_id"), "left_anti")
       case None => batch
-    }).persist()
+    }).localCheckpoint(eager = false)
     // per-row distinct (array_distinct in chunkDocFreq) replaces the old
     // (doc_id, h) distinct exchange — one shuffle of (h, count) longs
     val bdf = graft.dedup.Dedup.chunkDocFreq(novel, c)
@@ -769,13 +776,15 @@ object StreamingJobs {
     * across the stores.
     *
     * The returned count is the batch's admitted-survivor count, for
-    * operator telemetry.
+    * operator telemetry. It is observed on the curated write
+    * (`Dataset.observe`), so it costs no job of its own and is read
+    * only after that write has returned.
     */
   def curateStream(outDir: String, c: Int = 5, minDocs: Int = 3,
       gate: DataFrame => DataFrame)(batch: DataFrame, batchId: Long): Long = {
     val spark = batch.sparkSession
-    // admitted comes back persisted from boilerMaintIngest; the narrow
-    // select below reads that cache, so no second persist is needed
+    // admitted comes back pinned from boilerMaintIngest; the raw
+    // archive and the cleaning both read those blocks
     val admitted = boilerMaintIngest(s"$outDir/boiler", c)(batch, batchId)
     val novel = admitted.select("doc_id", "text")
     try {
@@ -783,22 +792,19 @@ object StreamingJobs {
       val cleaned = graft.dedup.Dedup.applyBoilerplate(novel, view, c)
         .select(col("doc_id"), col("clean_text").as("text"),
           col("n_tokens"), col("n_removed"))
-      // Persisted across the write and the telemetry count — without it
-      // the whole admission DAG (anti-join, chunk hashing, cleaning,
-      // gate) executes twice per batch.
-      val kept = gate(cleaned).persist()
-      try {
-        // the raw archive and the curated table are different dirs fed
-        // from the same cached admission frame — two independent writes,
-        // overlapped (guide §2.6). Replay idempotency is unchanged: both
-        // writes overwrite their own batch dir, and the body's crash
-        // contract never ordered them (see the doc above).
-        graft.core.ArtifactIO.inParallel(Seq(
-          () => idempotentParquetSink(s"$outDir/raw")(novel, batchId),
-          () => idempotentParquetSink(s"$outDir/curated")(kept, batchId)))
-        kept.count()
-      } finally kept.unpersist()
-    } finally admitted.unpersist()
+      // not cached: the curated write is its only consumer (see the doc)
+      val written = Observation()
+      val kept = gate(cleaned).observe(written, count(lit(1)).as("n"))
+      // the raw archive and the curated table are different dirs fed
+      // from the same admission frame — two independent writes,
+      // overlapped (guide §2.6). Replay idempotency is unchanged: both
+      // writes overwrite their own batch dir, and the body's crash
+      // contract never ordered them (see the doc above).
+      graft.core.ArtifactIO.inParallel(Seq(
+        () => idempotentParquetSink(s"$outDir/raw")(novel, batchId),
+        () => idempotentParquetSink(s"$outDir/curated")(kept, batchId)))
+      written.get("n").asInstanceOf[Long]
+    } finally graft.operators.ConnectedComponents.unpersistCheckpoint(admitted)
   }
 
   /** The curated table: union of all committed batch directories. */
@@ -821,7 +827,7 @@ object StreamingJobs {
     * a batch whose documents now ALL fail the gate must end up empty,
     * and dynamic mode would leave its old directory untouched); rerun
     * after a crash converges. Returns the number of curated documents
-    * after the re-clean.
+    * after the re-clean, observed on the rewrite itself.
     */
   def recleanCurated(spark: SparkSession, outDir: String, c: Int = 5,
       minDocs: Int = 3, gate: DataFrame => DataFrame): Long = {
@@ -833,14 +839,13 @@ object StreamingJobs {
     // the gate is column-preserving (a semi-join filter), so batch
     // attribution re-joins by doc_id — unique across batches by the
     // served-ids admission contract
-    val kept = gate(cleaned)
+    val written = Observation()
+    gate(cleaned)
       .join(raw.select("doc_id", "__batch_id"), Seq("doc_id"))
-      .persist()
-    try {
-      kept.write.mode("overwrite").partitionBy("__batch_id")
-        .parquet(s"$outDir/curated")
-      kept.count()
-    } finally kept.unpersist()
+      .observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").partitionBy("__batch_id")
+      .parquet(s"$outDir/curated")
+    written.get("n").asInstanceOf[Long]
   }
 
   /** MULTI-TABLE incremental view maintenance — the JOIN-view extension

@@ -856,6 +856,86 @@ class StreamingSpec extends SparkSpec {
     assert(curated(out).nonEmpty)
   }
 
+  test("Observation on a DataFrameWriter parquet write: exact row count when non-empty, empty at run time, and two in parallel") {
+    // curateStream and recleanCurated take their returned counts from an
+    // Observation on the write itself; this pins the Spark behaviour they
+    // rely on. Every wait is bounded: a regression fails, never hangs.
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.{DataFrame, Observation}
+    val docs = graft.core.Tables(spark, sf("sf0.001"), "documents").select("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-observe").toString
+    def observedWrite(df: DataFrame, name: String): Observation = {
+      val o = Observation()
+      df.observe(o, count(lit(1)).as("n")).write.mode("overwrite").parquet(s"$dir/$name")
+      o
+    }
+    def observed(o: Observation): Long = Await.result(o.future, 60.seconds).getAs[Long]("n")
+    def written(name: String): Long = spark.read.parquet(s"$dir/$name").count()
+
+    val all = observed(observedWrite(docs, "all"))
+    assert(all == docs.count() && all == written("all") && all > 0)
+    // a left_anti that removes every row: empty only at run time, so
+    // AQE may replace the plan with an empty relation
+    val none = observed(observedWrite(
+      docs.join(docs.select("doc_id"), Seq("doc_id"), "left_anti"), "none"))
+    assert(none == 0L && written("none") == 0L)
+    val (even, odd) = graft.core.ArtifactIO.inParallel2(
+      () => observedWrite(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "even"),
+      () => observedWrite(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "odd"))
+    assert(observed(even) == written("even") && observed(odd) == written("odd"))
+    assert(observed(even) + observed(odd) == all)
+  }
+
+  test("curateStream job budget: a steady-state batch stays within its Spark job budget, the same on a repeat; curate and re-clean pin nothing") {
+    val docs = graft.core.Tables(spark, sf("sf0.001"), "documents").select("doc_id", "text")
+    val gate = graft.queries.QueriesText.repetitionKeep _
+    val out = java.nio.file.Files.createTempDirectory("graft-curate-budget").toString
+    def part(b: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
+    (0 until 2).foreach(b => StreamingJobs.curateStream(out, gate = gate)(part(b), b.toLong))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    import org.apache.spark.sql.graft.SparkInternals
+    // (jobs run, cache-manager entries added, RDDs left persisted) by one call
+    def measured[T](body: => T): (T, Int, Int, Set[Int]) = {
+      SparkInternals.drainListeners(sc)
+      val (entries, rdds) = (SparkInternals.cachedEntries(spark), sc.getPersistentRDDs.keySet.toSet)
+      jobs.set(0)
+      sc.addSparkListener(listener)
+      val r = try body finally {
+        SparkInternals.drainListeners(sc)
+        sc.removeSparkListener(listener)
+      }
+      (r, jobs.get, SparkInternals.cachedEntries(spark) - entries,
+        sc.getPersistentRDDs.keySet.toSet -- rdds)
+    }
+    // the third batch, then its replay: the same predecessor state, so
+    // the same plan and the same job count
+    val (n, first, entries, pinned) =
+      measured(StreamingJobs.curateStream(out, gate = gate)(part(2), 2L))
+    val (nReplay, replay, _, _) =
+      measured(StreamingJobs.curateStream(out, gate = gate)(part(2), 2L))
+    assert(n > 0 && nReplay == n)
+    // the served-ids screen (batch dedup shuffle, ids broadcast), the two
+    // delta writes with the chunk-df shuffle, the raw archive write, and
+    // the curated write with its view and boilerplate joins; the count
+    // is observed on the curated write, so it runs no job of its own
+    val budget = 11
+    assert(first <= budget, s"a steady-state curate batch ran $first jobs (budget $budget)")
+    assert(replay == first, s"identical curate calls ran $first and $replay jobs")
+    assert(entries == 0 && pinned.isEmpty,
+      s"curateStream left $entries cache entries and persisted RDDs $pinned")
+    val (total, _, recleanEntries, recleanPinned) =
+      measured(StreamingJobs.recleanCurated(spark, out, gate = gate))
+    assert(total == StreamingJobs.curatedDocs(spark, out).count())
+    assert(recleanEntries == 0 && recleanPinned.isEmpty,
+      s"recleanCurated left $recleanEntries cache entries and persisted RDDs $recleanPinned")
+  }
+
   test("retention composes with replays: randomized delivery/replay/compaction schedules converge") {
     // Fixed-seed random schedules over four disjoint document batches:
     // each step delivers the next batch, MAY immediately redeliver it
