@@ -94,22 +94,6 @@ object ArtifactIO {
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new Path(path), true)
 
-  /** Version-chain shortcuts ([[CommitLog]]): publish / test a version's
-    * marker; list `dir`'s committed `<prefix><id>` ids ascending (all of
-    * them with `markerGated = false`, for unmarked single-table chains).
-    */
-  def commit(spark: SparkSession, versionDir: String): Unit =
-    CommitLog.publish(spark, versionDir)
-
-  def isCommitted(spark: SparkSession, versionDir: String): Boolean =
-    CommitLog.isCommitted(spark, versionDir)
-
-  def committedVersions(spark: SparkSession, dir: String, prefix: String,
-      markerGated: Boolean = true): Seq[Long] = {
-    val s = CommitLog.Chain(dir, prefix).scan(spark)
-    if (markerGated) s.committed(prefix) else s.all(prefix)
-  }
-
   /** One blob file per row (`<dir>/<id><ext>`), written EXECUTOR-side
     * through the Hadoop [[FileSystem]] API — the per-asset export shape
     * of a multimodal media store (q226's `files` leg). `java.nio` writes

@@ -164,6 +164,15 @@ object CommitLog {
   def isCommitted(spark: SparkSession, versionDir: String): Boolean =
     ArtifactIO.exists(spark, s"$versionDir/$Marker")
 
+  /** `dir`'s committed `<prefix><id>` ids ascending (all of them with
+    * `markerGated = false`, for unmarked single-table chains).
+    */
+  def committedVersions(spark: SparkSession, dir: String, prefix: String,
+      markerGated: Boolean = true): Seq[Long] = {
+    val s = Chain(dir, prefix).scan(spark)
+    if (markerGated) s.committed(prefix) else s.all(prefix)
+  }
+
   /** Ids currently CLAIMED (reserved by a writer that may still be
     * in flight) for `prefix` under `dir`.
     */

@@ -123,16 +123,4 @@ object MapReduce {
       (k, it) => (k, it.sum),
       numBuckets)
   }
-
-  /** In-driver oracle for [[wordCount]] — a port of the reference's
-    * verify.py:6-15, used by the test suite (t1 smoke shape).
-    */
-  def wordCountOracle(lines: Seq[String]): Map[String, Long] =
-    lines
-      .flatMap(_.replaceAll("[^A-Za-z]", " ").split("\\s+"))
-      .filter(_.nonEmpty)
-      .groupBy(identity)
-      .view
-      .mapValues(_.size.toLong)
-      .toMap
 }

@@ -86,24 +86,4 @@ object AsOf {
       .select(lCols.map(c => col(s"__l.`$c`").as(c)) ++
         rPayloadCols.map(c => col(s"__m.`$c`").as(s"$rightPrefix$c")): _*)
   }
-
-  /** The naive interval-join + keep-latest formulation — test twin for
-    * [[asOfJoinBackward]]. O(pairs) join output; never use at scale.
-    */
-  def asOfJoinBackwardNaive(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, rightPrefix: String = "r_",
-      rightTieBreak: Option[String] = None): DataFrame = {
-    val lCols = left.columns.toSeq
-    val rPayloadCols = right.columns.filter(_ != key).toSeq
-    val l = left.select(lCols.map(col): _*)
-    val r = right.select(
-      (col(key).as("__rk") +: col(rightTime).as("__rt") +:
-        rPayloadCols.map(c => col(c).as(s"$rightPrefix$c"))): _*)
-    val joined = l.join(r, col(key) === col("__rk") && col("__rt") <= col(leftTime), "left")
-    val ord = col("__rt").desc_nulls_last +:
-      rightTieBreak.map(c => col(s"$rightPrefix$c").desc_nulls_last).toSeq
-    val w = Window.partitionBy(lCols.map(col): _*).orderBy(ord: _*)
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(lCols.map(col) ++ rPayloadCols.map(c => col(s"$rightPrefix$c")): _*)
-  }
 }

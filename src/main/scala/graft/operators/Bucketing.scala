@@ -23,26 +23,4 @@ object Bucketing {
       .sortBy(key)
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
-
-  /** Number of shuffle exchanges in the final physical plan of `df`.
-    * Descends into AQE query stages (materialized shuffles become leaf
-    * QueryStageExec nodes that plain collect() would miss).
-    */
-  def shuffleExchangeCount(df: DataFrame): Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    // Force execution so AQE finalizes the plan it actually ran.
-    df.write.format("noop").mode("overwrite").save()
-    def count(p: SparkPlan): Int = {
-      val self = p match { case _: ShuffleExchangeLike => 1; case _ => 0 }
-      val kids = p match {
-        case q: QueryStageExec => Seq(q.plan)
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case _ => p.children
-      }
-      self + kids.map(count).sum
-    }
-    count(df.queryExecution.executedPlan)
-  }
 }

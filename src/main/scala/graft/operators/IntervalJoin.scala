@@ -51,17 +51,4 @@ object IntervalJoin {
           col(rightTime) <= col(leftTime) + expr(s"INTERVAL $windowSeconds SECONDS"))
       .drop("__bl", "__br")
   }
-
-  /** The raw range-join formulation — test twin for [[followUpsWithin]].
-    * Equi key = the join key only, so the SMJ enumerates all same-key
-    * pairs before the residual; never use at scale.
-    */
-  def followUpsWithinNaive(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      windowSeconds: Long): DataFrame =
-    left.join(right,
-      col(leftKey) === col(rightKey) &&
-        col(rightTime) > col(leftTime) &&
-        col(rightTime) <= col(leftTime) + expr(s"INTERVAL $windowSeconds SECONDS"))
 }

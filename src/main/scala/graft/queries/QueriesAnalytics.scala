@@ -694,13 +694,15 @@ ORDER BY d.day"""
         round(col("o_totalprice") * 100).cast("long").as("cents"))
     val idx = (q: Double) =>
       greatest(lit(1), ceil(size(col("vals")) * lit(q)).cast("int"))
-    base
-      .groupBy("prio")
-      .agg(count(lit(1)).as("n_orders"),
-        org.apache.spark.sql.graft.TopKAgg.topk(-col("h").cast("double"), col("cents"), k).as("samp"),
+    // the exact columns ride the sample's aggregate; the regroup by the
+    // same keys reads its partitioning, so the plan keeps one exchange
+    org.apache.spark.sql.graft.TopKAgg.topKRows(base.withColumn("negh", -col("h").cast("double")),
+        Seq(col("prio")), "negh", "cents", k,
+        count(lit(1)).as("n_orders"),
         expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY cents)").cast("long").as("exact_p50"),
         expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY cents)").cast("long").as("exact_p95"))
-      .withColumn("vals", array_sort(transform(col("samp"), x => x.getField("id"))))
+      .groupBy("prio", "n_orders", "exact_p50", "exact_p95")
+      .agg(array_sort(collect_list(col("cents"))).as("vals"))
       .select(col("prio"), col("n_orders"),
         size(col("vals")).cast("long").as("n_sample"),
         element_at(col("vals"), idx(0.5)).as("est_p50"),

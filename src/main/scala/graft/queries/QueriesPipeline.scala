@@ -180,14 +180,9 @@ ORDER BY scope"""
   def q47_stratified_sample(s: SparkSession, dir: String): DataFrame = {
     val k = 10
     val h = PortableHash.asciiPolyHash(col("doc_id").cast("string"))
-    docs(s, dir)
-      .select(col("lang"), col("doc_id"), (-h.cast("double")).as("negh"))
-      .groupBy("lang")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("negh"), col("doc_id"), k).as("top"))
-      .select(col("lang"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("lang"), col("__kv.id").as("doc_id"),
-        (-col("__kv.score")).cast("long").as("h"),
-        (col("__r") + 1).cast("long").as("rnk"))
+    val negh = docs(s, dir).select(col("lang"), col("doc_id"), (-h.cast("double")).as("negh"))
+    org.apache.spark.sql.graft.TopKAgg.topKRows(negh, Seq(col("lang")), "negh", "doc_id", k)
+      .select(col("lang"), col("doc_id"), (-col("negh")).cast("long").as("h"), col("rnk"))
       .orderBy("lang", "rnk")
   }
 

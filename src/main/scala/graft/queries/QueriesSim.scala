@@ -16,6 +16,10 @@ import graft.sim.{IvfIndex, PqIndex, Similarity}
 object QueriesSim {
   private def emb(s: SparkSession, dir: String) = Tables(s, dir, "embeddings")
 
+  /** The query panel: the vectors with id below `n`, as (query_id, query_vec). */
+  private def panel(e: DataFrame, n: Int): DataFrame =
+    e.filter(col("vec_id") < n).select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+
   /** DuckDB fragment: round(cosine(a, b), 6) for two double-list exprs. */
   private def cosSql(a: String, b: String): String =
     raw"""round(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i]))
@@ -58,8 +62,7 @@ SELECT vec_id_a, vec_id_b, cosine_sim FROM p WHERE cosine_sim >= 0.45 ORDER BY v
     * partition, not the whole similarity matrix).
     */
   def q26_knn_join(s: SparkSession, dir: String): DataFrame = {
-    val queries = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(emb(s, dir), 10)
     Similarity.knnJoinAgg(emb(s, dir), queries, k = 5)
       .select(col("query_id"), col("vec_id"), col("cosine_sim"), col("rnk"))
       .orderBy("query_id", "rnk")
@@ -238,8 +241,7 @@ SELECT vec_id_a, vec_id_b, cosine_sim FROM p WHERE cosine_sim >= $Q98Tau ORDER B
   def q34_ann_ivf(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val model = IvfIndex.train(e, k = 16, iters = 0)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(IvfIndex.assign(e, model), queries, model, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -263,8 +265,7 @@ SELECT vec_id_a, vec_id_b, cosine_sim FROM p WHERE cosine_sim >= $Q98Tau ORDER B
   def q41_ann_ivf_trained(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val model = IvfIndex.train(e, k = 8, iters = 2)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(IvfIndex.assign(e, model), queries, model, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -418,8 +419,7 @@ FROM e ORDER BY vec_id"""
     */
   def q112_ann_recall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val queries = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 8)
     val ann = Similarity.annLshTopK(e, queries, k = 10).select("query_id", "vec_id")
     val exact = Similarity.knnJoinAgg(e, queries, k = 10).select("query_id", "vec_id")
     val hits = exact.join(ann, Seq("query_id", "vec_id"))
@@ -523,8 +523,7 @@ SELECT vec_id, kept_by, cosine_sim FROM d WHERE rn = 1 ORDER BY vec_id"""
   def q119_pq_ann(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val model = PqIndex.train(e, numSub = 8, ksub = 16, iters = 0)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopK(PqIndex.encode(e, model), queries, model, k = 10)
       .orderBy("query_id", "rnk")
   }
@@ -594,8 +593,7 @@ SELECT query_id, vec_id, adc_dist, cosine_sim, rnk FROM f ORDER BY query_id, rnk
           .as("qv"))
     val queries = quantized.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
-        col("qv").as("qq"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__qn"))
+        col("qv").as("qq"))
     val screen = quantized
       .select(col("vec_id"), col("qv"))
       .crossJoin(broadcast(queries.select("query_id", "qq")))
@@ -603,26 +601,8 @@ SELECT query_id, vec_id, adc_dist, cosine_sim, rnk FROM f ORDER BY query_id, rnk
       .select(col("query_id"), col("vec_id"),
         aggregate(zip_with(col("qv"), col("qq"), (a, b) => (a * b).cast("long")),
           lit(0L), (acc, x) => acc + x).as("qdot"))
-    val top20 = screen
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(
-        col("qdot").cast("double"), col("vec_id"), 20).as("top"))
-      .select(col("query_id"), explode(col("top")).as("__kv"))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        col("__kv.score").cast("long").as("qdot"))
-    import org.apache.spark.sql.expressions.Window
-    val reranked = quantized.select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__n"))
-      .join(broadcast(top20), Seq("vec_id"))
-      .join(broadcast(queries.select("query_id", "query_vec", "__qn")), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("qdot"),
-        round(org.apache.spark.sql.graft.VectorExpressions.dotF32(col("embedding"), col("query_vec"))
-          / (col("__n") * col("__qn")), 6).as("cosine_sim"))
-    reranked
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rnk") <= 10)
-      .orderBy("query_id", "rnk")
+    Similarity.rerankScreen(screen, "qdot", e, queries, screenK = 20, k = 10)
+      .withColumn("qdot", col("qdot").cast("long"))
   }
 
   /** Oracle: same global max-|x| bound, same symmetric −127..127
@@ -668,8 +648,7 @@ SELECT query_id, vec_id, qdot, cosine_sim, rnk FROM f WHERE rnk <= 10 ORDER BY q
     val ivf = IvfIndex.train(e, k = 16, iters = 0)
     val pq = PqIndex.train(e, numSub = 8, ksub = 16, iters = 0)
     val indexed = PqIndex.encode(IvfIndex.assign(e, ivf), pq)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopKIvf(indexed, queries, ivf, pq, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -733,8 +712,7 @@ SELECT query_id, vec_id, adc_dist, cosine_sim, rnk FROM f ORDER BY query_id, rnk
     */
   def q126_compressed_recall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     // Persisted: the exact top-10 table (50 rows) is joined by all FIVE
     // method branches of the final union — without the cache the
     // brute-force kNN scan-aggregate re-executes per branch (guide §1.2).
@@ -834,8 +812,7 @@ pc$n AS (SELECT p.m, p.cid, coalesce(pn$n.c, p.c) AS c
   def q127_pq_trained(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val model = PqIndex.train(e, numSub = 8, ksub = 16, iters = 2)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopK(PqIndex.encode(e, model), queries, model, k = 10)
       .orderBy("query_id", "rnk")
   }
@@ -900,8 +877,7 @@ SELECT query_id, vec_id, adc_dist, cosine_sim, rnk FROM f ORDER BY query_id, rnk
     val indexed = IvfIndex.assign(e, ivf)
       .withColumn("codes", PqIndex.codesCol(
         PqIndex.residualCol(col("embedding"), col("cluster"), ivf), pqRes))
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopKIvfResidual(indexed, queries, ivf, pqRes, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -974,24 +950,12 @@ $residualIvfPqBodySql"""
     * candidate generators; the mining filter composes unchanged.
     */
   def q134_hard_negatives(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
-    val queries = emb(s, dir).filter(col("vec_id") < 10)
+    val (e, queries) = Similarity.withNorms(emb(s, dir), emb(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("label").as("query_label"),
-        col("embedding").as("query_vec"))
-      .withColumn("__qn", normF32(col("query_vec")))
-    val e = emb(s, dir).withColumn("__n", normF32(col("embedding")))
-    e.crossJoin(broadcast(queries)) // bounded 10-row query panel
-      .filter(col("label") =!= col("query_label"))
-      .select(col("query_id"), col("query_label"), col("vec_id"), col("label"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-      .groupBy("query_id", "query_label")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), 5).as("top"))
-      .select(col("query_id"), col("query_label"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("query_label"),
-        col("__kv.id").as("vec_id"),
-        col("__kv.score").as("cosine_sim"),
-        (col("__r") + 1).cast("long").as("rnk"))
+        col("embedding").as("query_vec")))
+    Similarity.cosineTopK(
+        e.crossJoin(broadcast(queries)) // bounded 10-row query panel
+          .filter(col("label") =!= col("query_label")), 5, col("query_label"))
       .join(emb(s, dir).select(col("vec_id"), col("label").as("neg_label")), Seq("vec_id"))
       .select(col("query_id"), col("query_label").cast("long").as("query_label"),
         col("vec_id"), col("neg_label").cast("long").as("neg_label"),
@@ -1141,8 +1105,7 @@ FROM r WHERE rnk <= 5 ORDER BY query_id, rnk"""
   def q138_residual_clustered(s: SparkSession, dir: String): DataFrame = {
     val clustered = clusteredFixture(s, dir).persist()
     val ivf = labelCentroidModel(clustered)
-    val queries = clustered.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(clustered, 5)
     val pqRaw = PqIndex.train(clustered, numSub = 8, ksub = 16, iters = 0)
     val idxRaw = IvfIndex.assign(clustered, ivf)
       .withColumn("codes", PqIndex.codesCol(col("embedding"), pqRaw))
@@ -1365,8 +1328,7 @@ ORDER BY cell"""
   def q147_ann_ivf_hash(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val model = IvfIndex.initHash(e, 16)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(IvfIndex.assign(e, model), queries, model, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -1417,8 +1379,7 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM r WHERE rnk <= 10 ORDER BY query_i
     val path = QueriesSources.tmp("graft_q148_ivf_", dir)
     IvfIndex.save(IvfIndex.assign(e, model), model, path)
     val (loaded, codes) = IvfIndex.load(s, path)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(codes, queries, loaded, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -1442,8 +1403,7 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM r WHERE rnk <= 10 ORDER BY query_i
     val path = QueriesSources.tmp("graft_q153_pq_", dir)
     PqIndex.save(PqIndex.encode(e, model), model, path)
     val (loaded, codes) = PqIndex.load(s, path)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopKSplit(codes, e, queries, loaded, k = 10)
       .orderBy("query_id", "rnk")
   }
@@ -1492,8 +1452,7 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM r WHERE rnk <= 10 ORDER BY query_i
     */
   private def pqRecallPanels(fix: DataFrame,
       variants: Seq[(String, DataFrame)]): DataFrame = {
-    def queriesOf(df: DataFrame) = df.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    def queriesOf(df: DataFrame) = panel(df, 5)
     val exact = Similarity.knnJoinAgg(fix, queriesOf(fix), k = 10)
       .select("query_id", "vec_id")
     variants.map { case (method, corpus) =>
@@ -1725,8 +1684,7 @@ ORDER BY cell"""
     val path = QueriesSources.tmp("graft_q160_pq_", dir)
     PqIndex.save(PqIndex.encode(e, model), model, path)
     val (loaded, codes) = PqIndex.load(s, path)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     PqIndex.adcTopKSplitLut(codes, e, queries, loaded, k = 10)
       .orderBy("query_id", "rnk")
   }
@@ -2120,8 +2078,7 @@ ORDER BY cell"""
     IvfIndex.save(IvfIndex.assign(base, model), model, path)
     IvfIndex.appendToArtifact(s, path, delta)
     val (loaded, codes) = IvfIndex.load(s, path)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(codes, queries, loaded, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -2242,21 +2199,15 @@ FROM f, tot ORDER BY f.cell"""
     * with: shard locally, append locally, merge globally.
     */
   def q194_sharded_ann(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(s, dir)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     val perShard = Seq(0, 1).map { p =>
       val shard = e.filter(pmod(col("vec_id"), lit(2)) === p)
       val model = IvfIndex.initHash(shard, 16)
       IvfIndex.annTopK(IvfIndex.assign(shard, model), queries, model, k = 10, nprobe = 4)
         .select("query_id", "vec_id", "cosine_sim")
     }
-    val w = Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))
-    perShard.reduce(_ unionByName _)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 10)
-      .orderBy("query_id", "rnk")
+    Similarity.rankByCosine(perShard.reduce(_ unionByName _), 10).orderBy("query_id", "rnk")
   }
 
   /** Per-shard oracle CTEs (parity `p`): hash-init seeds and assignment
@@ -2318,8 +2269,7 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM r WHERE rnk <= 10 ORDER BY query_i
     val e = emb(s, dir)
     val model = IvfIndex.initHash(e, 16)
     val qualifying = IvfIndex.assign(e, model).filter(pmod(col("vec_id"), lit(3)) === 0)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(qualifying, queries, model, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -2367,8 +2317,7 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM r WHERE rnk <= 10 ORDER BY query_i
     */
   def q199_diverse_topk(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     Similarity.diverseTopK(e, queries, "label", k = 10, perGroup = 2)
       .select(col("query_id"), col("vec_id"), col("label"), col("cosine_sim"), col("rnk"))
       .orderBy("query_id", "rnk")
@@ -2403,8 +2352,7 @@ ORDER BY query_id, rnk"""
     */
   def q200_mmr_rerank(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     val pool = Similarity.knnJoinAgg(e, queries, k = 8)
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("query_id"), col("vec_id"), col("cosine_sim"), col("embedding"))
@@ -2482,8 +2430,7 @@ ORDER BY query_id, rnk"""
     DeletionVectors.deleteWhere(s, out, pmod(col("vec_id"), lit(9)) === 4, 1L)
     val live = DeletionVectors.read(s, out).select("vec_id")
     val qualifying = codes.join(live, Seq("vec_id"), "left_semi")
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     IvfIndex.annTopK(qualifying, queries, model, k = 10, nprobe = 4)
       .orderBy("query_id", "rnk")
   }
@@ -2625,7 +2572,6 @@ ORDER BY per.query_id"""
     * reads only k' raw vectors per query.
     */
   def q208_binary_ann(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(s, dir)
     // Pack sign bits: bit i set iff dim i > 0 (disjoint bits, so | folds
     // them without carries). shiftleft(1L, 63) lands on the sign bit —
@@ -2638,33 +2584,17 @@ ORDER BY per.query_id"""
         |          CAST(0 AS BIGINT), (acc, b) -> acc | b)""".stripMargin).as("sig"))
     val queries = signed.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
-        col("sig").as("qsig"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__qn"))
+        col("sig").as("qsig"))
+    // The screen keeps -hamming: its DESC order is hamming ASC, id ASC
+    // — the integer order.
     val screen = signed.select(col("vec_id"), col("sig"))
       .crossJoin(broadcast(queries.select("query_id", "qsig")))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        expr("CAST(bit_count(sig ^ qsig) AS BIGINT)").as("hamming"))
-    // Bounded-heap screen: -hamming DESC == hamming ASC, id ASC — the
-    // integer order, map-side partial, k' rows per query per partition.
-    val top20 = screen.groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(
-        -col("hamming").cast("double"), col("vec_id"), 20).as("top"))
-      .select(col("query_id"), explode(col("top")).as("__kv"))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        (-col("__kv.score")).cast("long").as("hamming"))
-    val reranked = e.select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__n"))
-      .join(broadcast(top20), Seq("vec_id"))
-      .join(broadcast(queries.select("query_id", "query_vec", "__qn")), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("hamming"),
-        round(org.apache.spark.sql.graft.VectorExpressions.dotF32(col("embedding"), col("query_vec"))
-          / (col("__n") * col("__qn")), 6).as("cosine_sim"))
-    reranked
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rnk") <= 10)
-      .orderBy("query_id", "rnk")
+        expr("-CAST(bit_count(sig ^ qsig) AS BIGINT)").as("neg_hamming"))
+    Similarity.rerankScreen(screen, "neg_hamming", e, queries, screenK = 20, k = 10)
+      .select(col("query_id"), col("vec_id"), (-col("neg_hamming")).cast("long").as("hamming"),
+        col("cosine_sim"), col("rnk"))
   }
 
   /** Oracle: the identical Hamming count spelled as a per-dimension
@@ -2719,8 +2649,9 @@ SELECT query_id, vec_id, hamming, cosine_sim, rnk FROM f WHERE rnk <= 10 ORDER B
     val micro = docs
       .crossJoin(broadcast(qtokens))
       .select(col("query_id"), col("qvec_id"), col("label"),
-        round(round(org.apache.spark.sql.graft.VectorExpressions.dotF32(col("embedding"), col("query_vec"))
-          / (col("__n") * col("__qn")), 6) * lit(1000000.0)).cast("long").as("micro"))
+        round(org.apache.spark.sql.graft.VectorExpressions.roundedCosine(
+          col("embedding"), col("query_vec"), col("__n"), col("__qn")) * lit(1000000.0))
+          .cast("long").as("micro"))
     val best = micro.groupBy("query_id", "qvec_id", "label")
       .agg(max("micro").as("mx"))
     val scored = best.groupBy("query_id", "label")
@@ -2762,40 +2693,20 @@ SELECT query_id, label, score_micro, rnk FROM r WHERE rnk <= 5 ORDER BY query_id
     * convention), and both tie-break on vec_id.
     */
   def q210_matryoshka_ann(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graft.VectorExpressions.{normF32, roundedCosine}
     val e = emb(s, dir)
     val withPrefix = e.select(col("vec_id"), col("embedding"),
       slice(col("embedding"), 1, 16).as("prefix"))
     val queries = withPrefix.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"),
-        col("prefix").as("qprefix"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__qn"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("prefix")).as("__qpn"))
+        col("prefix").as("qprefix"), normF32(col("prefix")).as("__qpn"))
     val screen = withPrefix.select(col("vec_id"), col("prefix"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("prefix")).as("__pn"))
+        normF32(col("prefix")).as("__pn"))
       .crossJoin(broadcast(queries.select("query_id", "qprefix", "__qpn")))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(org.apache.spark.sql.graft.VectorExpressions.dotF32(col("prefix"), col("qprefix"))
-          / (col("__pn") * col("__qpn")), 6).as("prefix_sim"))
-    val top20 = screen.groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(
-        col("prefix_sim"), col("vec_id"), 20).as("top"))
-      .select(col("query_id"), explode(col("top")).as("__kv"))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        col("__kv.score").as("prefix_sim"))
-    val reranked = e.select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")).as("__n"))
-      .join(broadcast(top20), Seq("vec_id"))
-      .join(broadcast(queries.select("query_id", "query_vec", "__qn")), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("prefix_sim"),
-        round(org.apache.spark.sql.graft.VectorExpressions.dotF32(col("embedding"), col("query_vec"))
-          / (col("__n") * col("__qn")), 6).as("cosine_sim"))
-    reranked
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rnk") <= 10)
-      .orderBy("query_id", "rnk")
+        roundedCosine(col("prefix"), col("qprefix"), col("__pn"), col("__qpn")).as("prefix_sim"))
+    Similarity.rerankScreen(screen, "prefix_sim", e, queries, screenK = 20, k = 10)
   }
 
   /** Oracle: prefix cosine over dims 1..16 (rounded 6 before the
@@ -2866,8 +2777,7 @@ SELECT query_id, vec_id, prefix_sim, cosine_sim, rnk FROM f WHERE rnk <= 10 ORDE
       .select(col("vec_id"), col("rev"))
       .unionByName(delta.select(col("vec_id"), col("rev")))
     val qualifying = codes.join(live, Seq("vec_id", "rev"), "left_semi")
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = panel(e, 5)
     val served = IvfIndex.annTopK(qualifying, queries, model, k = 10, nprobe = 4)
     val audit = qualifying.groupBy("rev").agg(count(lit(1)).as("n_live"))
       .select(lit(-1L).as("query_id"), col("rev").as("vec_id"),

@@ -693,11 +693,8 @@ FROM s ORDER BY doc_id, chunk_idx"""
           .as("term_score"))
       .groupBy("query_id", "doc_id")
       .agg(round(sum("term_score"), 6).as("bm25"))
-    val bmRank = bm25.groupBy("query_id")
-      .agg(TopKAgg.topk(col("bm25"), col("doc_id"), 20).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("doc_id"),
-        (col("__r") + 1).cast("long").as("bm25_rnk"))
+    val bmRank = TopKAgg.topKRows(bm25, Seq(col("query_id")), "bm25", "doc_id", 20)
+      .select(col("query_id"), col("doc_id"), col("rnk").as("bm25_rnk"))
     val e = Tables(s, dir, "embeddings")
     val queries = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -712,11 +709,8 @@ FROM s ORDER BY doc_id, chunk_idx"""
             .otherwise(lit(0.0)) +
           when(col("dense_rnk").isNotNull, lit(1.0) / (lit(60.0) + col("dense_rnk")))
             .otherwise(lit(0.0)), 6).as("rrf"))
-    fused.groupBy("query_id")
-      .agg(TopKAgg.topk(col("rrf"), col("doc_id"), 10).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("doc_id"),
-        (col("__r") + 1).cast("long").as("rnk"))
+    TopKAgg.topKRows(fused, Seq(col("query_id")), "rrf", "doc_id", 10)
+      .select("query_id", "doc_id", "rnk")
       .join(fused, Seq("query_id", "doc_id"))
       .select(col("query_id"), col("doc_id"), col("bm25_rnk"), col("dense_rnk"),
         col("rrf"), col("rnk"))

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.VectorExpressions.dotF32
+import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
 
 /** IVF-style ANN: partition the vector space with k-means centroids,
   * assign every vector to its nearest centroid (the "inverted file"),
@@ -281,16 +281,9 @@ object IvfIndex {
       (cid, fineIds.toSeq.map(i => pts(i).toSeq.map(_.toFloat)), fineIds.toSeq,
         fineIds.toSeq.map(i => pts(i).map(x => x * x).sum))
     }.toDF("__coarse", "__matrix", "__ids", "__norms")
-    // per-row array of (coarse score, coarse id) structs — the annTopK
-    // probe pattern; coarseK is ~√k so the literal tree stays small
-    val coarseScores: Seq[Column] = coarse.toSeq.zipWithIndex.map { case (ctr, j) =>
-      val cLit = array(ctr.map(x => lit(x.toFloat)): _*)
-      struct((lit(ctr.map(x => x * x).sum) - lit(2.0) * dotF32(col("embedding"), cLit)).as("s"),
-        lit(j).as("c"))
-    }
+    // coarseK is ~√k, so the probe's literal tree stays small
     val cand = embeddings
-      .withColumn("__probe", explode(slice(array_sort(array(coarseScores: _*)), 1, probes)))
-      .withColumn("__coarse", col("__probe.c"))
+      .withColumn("__coarse", explode(nearestCells(col("embedding"), coarse, probes)))
       .join(broadcast(mapping), Seq("__coarse"))
       .withColumn("__cand", org.apache.spark.sql.graft.NearestCentroidDyn.nearest(
         col("embedding"), col("__matrix"), col("__ids"), col("__norms")))
@@ -459,6 +452,18 @@ object IvfIndex {
     } finally assigned.unpersist()
   }
 
+  /** The `nprobe` cells nearest `vec` among `centroids`, nearest first
+    * (by |c|² − 2·v·c, ties by cell id), as an array of cell ids — the
+    * probe every IVF lookup routes through.
+    */
+  def nearestCells(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
+    val scores = centroids.toSeq.zipWithIndex.map { case (ctr, j) =>
+      val cLit = array(ctr.map(x => lit(x.toFloat)): _*)
+      struct((lit(ctr.map(x => x * x).sum) - lit(2.0) * dotF32(vec, cLit)).as("s"), lit(j).as("c"))
+    }
+    transform(slice(array_sort(array(scores: _*)), 1, nprobe), _.getField("c"))
+  }
+
   /** Top-k neighbors for the query vectors, probing each query's nprobe
     * nearest cells only, exact cosine re-rank within (bounded-heap
     * top-k aggregate). The candidate join is (cluster ⋈ cluster) against
@@ -466,33 +471,13 @@ object IvfIndex {
     */
   def annTopK(assigned: DataFrame, queries: DataFrame, model: Model,
       k: Int, nprobe: Int): DataFrame = {
-    // per-query array of (cellScore, cellId) structs; sort, keep nprobe
-    val cellScores: Seq[Column] = model.centroids.toSeq.zipWithIndex.map { case (ctr, j) =>
-      val cLit = array(ctr.map(x => lit(x.toFloat)): _*)
-      struct((lit(ctr.map(x => x * x).sum) - lit(2.0) * dotF32(col("query_vec"), cLit)).as("s"),
-        lit(j).as("c"))
-    }
-    val probes = queries
-      .withColumn("probe", explode(slice(array_sort(array(cellScores: _*)), 1, nprobe)))
-      .select(col("query_id"), col("query_vec"), col("probe.c").as("cluster"),
-        org.apache.spark.sql.graft.VectorExpressions.normF32(col("query_vec")).as("__qn"))
-
+    val probes = queries.select(col("query_id"), col("query_vec"),
+      explode(nearestCells(col("query_vec"), model.centroids, nprobe)).as("cluster"),
+      normF32(col("query_vec")).as("__qn"))
     // No broadcast hint: AQE picks broadcast-vs-shuffle from the probe
     // side's RUNTIME size — a huge query batch shuffles on `cluster`
     // instead of OOMing the driver.
-    val candidates = assigned
-      .withColumn("__n", org.apache.spark.sql.graft.VectorExpressions.normF32(col("embedding")))
-      .join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-
-    candidates
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("vec_id"), col("__kv.score").as("cosine_sim"),
-        (col("__r") + 1).cast("long").as("rnk"))
+    Similarity.cosineTopK(assigned.withColumn("__n", normF32(col("embedding")))
+      .join(probes, Seq("cluster")), k)
   }
 }

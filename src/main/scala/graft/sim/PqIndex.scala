@@ -170,23 +170,12 @@ object PqIndex {
     */
   private def rankAndRerank(candidates: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int): DataFrame = {
-    val top = candidates
-      .groupBy("query_id")
-      .agg(TopKAgg.topk(-col("adc_dist"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        (-col("__kv.score")).as("adc_dist"),
-        (col("__r") + 1).cast("long").as("rnk"))
-    val c = corpus.select(col("vec_id"), col("embedding"),
-      VectorExpressions.normF32(col("embedding")).as("__n"))
-    val qn = queries.select(col("query_id"), col("query_vec"),
-      VectorExpressions.normF32(col("query_vec")).as("__qn"))
-    c.join(broadcast(top), Seq("vec_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("adc_dist"),
-        round(VectorExpressions.dotF32(col("embedding"), col("query_vec"))
-          / (col("__n") * col("__qn")), 6).as("cosine_sim"),
-        col("rnk"))
+    val top = TopKAgg.topKRows(
+        candidates.select(col("query_id"), col("vec_id"), (-col("adc_dist")).as("adc_dist")),
+        Seq(col("query_id")), "adc_dist", "vec_id", k)
+      .withColumn("adc_dist", -col("adc_dist"))
+    Similarity.withExactCosine(top, corpus, queries)
+      .select("query_id", "vec_id", "adc_dist", "cosine_sim", "rnk")
   }
 
   /** Flat (exhaustive-codes) ADC top-k: every corpus row's codes are
@@ -592,23 +581,31 @@ object PqIndex {
     * equality), so the q119/q153 oracles replay this path verbatim.
     */
   def adcTopKSplitLut(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
-      model: Model, k: Int): DataFrame = {
-    val spark = codes.sparkSession
+      model: Model, k: Int): DataFrame =
+    lutRank(codes.select(col("vec_id"), col("codes"))
+      .crossJoin(broadcast(queryLuts(queries, model))), corpus, queries, k)
+
+  /** Each query's M×ksub table, built once driver-side from the bounded
+    * query batch: (query_id, __lut).
+    */
+  private def queryLuts(queries: DataFrame, model: Model): DataFrame = {
+    val spark = queries.sparkSession
     import spark.implicits._
-    val qRows = queries.select("query_id", "query_vec").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val lutDf = qRows.toSeq
-      .map { case (qid, q) => (qid, queryLut(q, model)) }
-      .toDF("query_id", "__lut")
-    val candidates = codes
-      .select(col("vec_id"), col("codes"))
-      .crossJoin(broadcast(lutDf))
-      .filter(col("vec_id") =!= col("query_id"))
+    queries.select("query_id", "query_vec").collect()
+      .map(r => (r.getLong(0), queryLut(r.getSeq[Float](1).toArray, model)))
+      .toSeq.toDF("query_id", "__lut")
+  }
+
+  /** The LUT paths' shared tail: `pairs` carry (query_id, vec_id, codes,
+    * __lut); self-matches drop, the native lookup scores each pair, and
+    * [[rankAndRerank]] ranks them.
+    */
+  private def lutRank(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    rankAndRerank(pairs.filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(org.apache.spark.sql.graft.AdcLookup.adc(col("codes"), col("__lut")), 6)
-          .as("adc_dist"))
-    rankAndRerank(candidates, corpus, queries, k)
-  }
+          .as("adc_dist")), corpus, queries, k)
 
   /** Persist the PQ index artifacts: `$path/codebooks` holds
     * (m, j, centroid array<double>) — numSub×ksub rows, and
@@ -683,14 +680,8 @@ object PqIndex {
       .collect().map(r => (r.getLong(0), r.getInt(1),
         queryLut(r.getSeq[Float](2).toArray, pq)))
     val lutDf = probeRows.toSeq.toDF("query_id", "cluster", "__lut")
-    val candidates = indexed
-      .select(col("vec_id"), col("cluster"), col("codes"))
-      .join(broadcast(lutDf), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(org.apache.spark.sql.graft.AdcLookup.adc(col("codes"), col("__lut")), 6)
-          .as("adc_dist"))
-    rankAndRerank(candidates, indexed, queries, k)
+    lutRank(indexed.select(col("vec_id"), col("cluster"), col("codes"))
+      .join(broadcast(lutDf), Seq("cluster")), indexed, queries, k)
   }
 
   /** Expression-arithmetic residual IVF-PQ (unbounded query batches /
@@ -711,15 +702,8 @@ object PqIndex {
     */
   private def residualProbes(queries: DataFrame, ivf: IvfIndex.Model,
       nprobe: Int): DataFrame = {
-    val cellScores: Seq[Column] = ivf.centroids.toSeq.zipWithIndex.map { case (ctr, j) =>
-      val cLit = array(ctr.map(x => lit(x.toFloat)): _*)
-      struct((lit(ctr.map(x => x * x).sum) -
-        lit(2.0) * VectorExpressions.dotF32(col("query_vec"), cLit)).as("s"),
-        lit(j).as("c"))
-    }
     queries
-      .withColumn("__probe", explode(slice(array_sort(array(cellScores: _*)), 1, nprobe)))
-      .withColumn("cluster", col("__probe.c"))
+      .withColumn("cluster", explode(IvfIndex.nearestCells(col("query_vec"), ivf.centroids, nprobe)))
       .select(col("query_id"), col("cluster"),
         residualCol(col("query_vec"), col("cluster"), ivf).as("query_vec"))
   }
@@ -734,25 +718,13 @@ object PqIndex {
     * (from [[IvfIndex.assign]]) and `codes` (from [[encode]]).
     */
   def adcTopKIvf(indexed: DataFrame, queries: DataFrame,
-      ivf: IvfIndex.Model, pq: Model, k: Int, nprobe: Int): DataFrame = {
-    val spark = indexed.sparkSession
-    import spark.implicits._
+      ivf: IvfIndex.Model, pq: Model, k: Int, nprobe: Int): DataFrame =
     // Raw-vector PQ: the lookup table depends on the query alone (not
     // the probed cell), so one M×ksub table per query broadcasts next
     // to the in-plan probe join — per-candidate work is M array reads.
-    val lutDf = queries.select(col("query_id"), col("query_vec")).collect()
-      .map(r => (r.getLong(0), queryLut(r.getSeq[Float](1).toArray, pq)))
-      .toSeq.toDF("query_id", "__lut")
-    val candidates = indexed
-      .select(col("vec_id"), col("cluster"), col("codes"))
+    lutRank(indexed.select(col("vec_id"), col("cluster"), col("codes"))
       .join(ivfProbes(queries, ivf, nprobe), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lutDf), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(org.apache.spark.sql.graft.AdcLookup.adc(col("codes"), col("__lut")), 6)
-          .as("adc_dist"))
-    rankAndRerank(candidates, indexed, queries, k)
-  }
+      .join(broadcast(queryLuts(queries, pq)), Seq("query_id")), indexed, queries, k)
 
   /** Expression-arithmetic IVF-PQ (unbounded query batches / the LUT
     * cross-check reference).
@@ -769,17 +741,10 @@ object PqIndex {
 
   private def ivfProbes(queries: DataFrame, ivf: IvfIndex.Model,
       nprobe: Int): DataFrame = {
-    val cellScores: Seq[Column] = ivf.centroids.toSeq.zipWithIndex.map { case (ctr, j) =>
-      val cLit = array(ctr.map(x => lit(x.toFloat)): _*)
-      struct((lit(ctr.map(x => x * x).sum) -
-        lit(2.0) * VectorExpressions.dotF32(col("query_vec"), cLit)).as("s"),
-        lit(j).as("c"))
-    }
     // No broadcast hint: AQE sizes the probe side at runtime (the
     // IvfIndex.annTopK convention — a huge query batch shuffles on
     // `cluster` instead of OOMing the driver).
-    queries
-      .withColumn("__probe", explode(slice(array_sort(array(cellScores: _*)), 1, nprobe)))
-      .select(col("query_id"), col("query_vec"), col("__probe.c").as("cluster"))
+    queries.select(col("query_id"), col("query_vec"),
+      explode(IvfIndex.nearestCells(col("query_vec"), ivf.centroids, nprobe)).as("cluster"))
   }
 }

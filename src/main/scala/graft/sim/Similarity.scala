@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
+import org.apache.spark.sql.graft.TopKAgg
+import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32, roundedCosine}
 
 
 /** Similarity search over an `ArrayType(FloatType)` embedding column
@@ -22,6 +23,18 @@ import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
   *    self-join — the communication-optimal exact plan when τ is low.
   *  - [[srpNearDupPairs]]: banded-SRP candidates + exact verify — the
   *    sub-quadratic approximate plan when τ is high (≥ ~0.9).
+  *
+  * Every vector top-k path — the brute and SRP paths here, the IVF and
+  * PQ indexes, the catalog's quantized/binary/prefix screens and the
+  * streaming ANN sinks — keeps its own candidate generator and shares
+  * the pieces that carry the oracle contract (cosine rounded HALF_UP to
+  * 6 dp from precomputed norms; top-k by score desc, then id asc):
+  *  - `VectorExpressions.roundedCosine`, the one rounded cosine;
+  *  - `TopKAgg.topKRows`, the one bounded-heap top-k tail;
+  *  - [[cosineTopK]], the exact re-rank of (query, vector) candidates;
+  *  - [[rerankScreen]], the screen → exact-cosine re-rank;
+  *  - [[srpIndex]] / [[srpProbes]], the SRP bucket sides, and
+  *    [[IvfIndex.nearestCells]], the IVF cell probe.
   */
 object Similarity {
   /** Broadcast-hint `df` only when the optimizer's size estimate fits
@@ -43,6 +56,33 @@ object Similarity {
     else df
   }
 
+  /** The exact re-rank every candidate generator ends in: `pairs`
+    * carries (query_id, query_vec, __qn) beside (vec_id, embedding, __n);
+    * self-matches drop, the rounded cosine scores each pair, and the
+    * bounded-heap top-k keeps `k` per (query_id, `keys`). Map-side
+    * partial heaps mean the shuffle carries O(queries × k × partitions),
+    * never all candidates of a query into one reducer.
+    * Output: query_id, keys…, vec_id, cosine_sim, rnk.
+    */
+  private[graft] def cosineTopK(pairs: DataFrame, k: Int, keys: Column*): DataFrame =
+    TopKAgg.topKRows(
+      pairs.filter(col("vec_id") =!= col("query_id"))
+        .withColumn("cosine_sim",
+          roundedCosine(col("embedding"), col("query_vec"), col("__n"), col("__qn"))),
+      col("query_id") +: keys, "cosine_sim", "vec_id", k)
+
+  /** The window twin of the top-k tail: `rnk` by (cosine_sim desc,
+    * vec_id) per query, cut at `k`.
+    */
+  private[graft] def rankByCosine(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+  }
+
+  private[graft] def withNorms(embeddings: DataFrame, queries: DataFrame): (DataFrame, DataFrame) =
+    (embeddings.withColumn("__n", normF32(col("embedding"))),
+      queries.withColumn("__qn", normF32(col("query_vec"))))
+
   /** Exact top-k cosine neighbors for every vector in `queries`
     * (a small DataFrame of (query_id, query_vec)); excludes self-matches
     * by id. Output: query_id, vec_id, cosine_sim (rounded for stable
@@ -51,18 +91,13 @@ object Similarity {
   def knnJoin(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     // Precompute each side's norm once before the join — cosine inside the
     // pair loop then costs a single dot product, not three.
-    val e = embeddings.withColumn("__n", normF32(col("embedding")))
-    val q = queries.withColumn("__qn", normF32(col("query_vec")))
-    val sim = e
+    val (e, q) = withNorms(embeddings, queries)
+    rankByCosine(e
       .crossJoin(broadcastIfSmall(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))
-    sim
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+        roundedCosine(col("embedding"), col("query_vec"), col("__n"), col("__qn"))
+          .as("cosine_sim")), k)
   }
 
   /** knnJoin re-expressed with the custom top-k aggregate
@@ -73,20 +108,38 @@ object Similarity {
     * tie-break by vec_id).
     */
   def knnJoinAgg(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val e = embeddings.withColumn("__n", normF32(col("embedding")))
-    val q = queries.withColumn("__qn", normF32(col("query_vec")))
-    e.crossJoin(broadcastIfSmall(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"),
-        col("__kv.id").as("vec_id"),
-        col("__kv.score").as("cosine_sim"),
-        (col("__r") + 1).cast("long").as("rnk"))
+    val (e, q) = withNorms(embeddings, queries)
+    cosineTopK(e.crossJoin(broadcastIfSmall(q)), k)
+  }
+
+  /** Screen → exact re-rank: the `screenK` best candidates per query by
+    * the screen's own `score` column (desc, vec_id asc), then ranked by
+    * the exact rounded cosine (desc, vec_id) and cut at `k`. `screen` is
+    * (query_id, vec_id, score); only the survivors pay a float cosine.
+    * Output, ordered by (query_id, rnk): query_id, vec_id, score (as
+    * double), cosine_sim, rnk.
+    */
+  private[graft] def rerankScreen(screen: DataFrame, score: String, corpus: DataFrame,
+      queries: DataFrame, screenK: Int, k: Int): DataFrame = {
+    val top = TopKAgg.topKRows(screen, Seq(col("query_id")), score, "vec_id", screenK)
+    rankByCosine(withExactCosine(top, corpus, queries)
+      .select(col("query_id"), col("vec_id"), col(score), col("cosine_sim")), k)
+      .orderBy("query_id", "rnk")
+  }
+
+  /** Candidate survivors `top` (query_id, vec_id, …) joined back to the
+    * raw `corpus` (vec_id, embedding) and `queries` (query_id,
+    * query_vec), with their exact rounded `cosine_sim`. The survivors
+    * and the query panel are small, so both joins broadcast them.
+    */
+  private[graft] def withExactCosine(top: DataFrame, corpus: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val (c, q) = withNorms(corpus.select("vec_id", "embedding"),
+      queries.select("query_id", "query_vec"))
+    c.join(broadcast(top), Seq("vec_id"))
+      .join(broadcast(q), Seq("query_id"))
+      .withColumn("cosine_sim",
+        roundedCosine(col("embedding"), col("query_vec"), col("__n"), col("__qn")))
   }
 
   /** Deterministic hyperplanes for sign-random-projection LSH: gaussian
@@ -115,46 +168,42 @@ object Similarity {
   def probeMasks(numPlanes: Int, maxHamming: Int): Seq[Long] =
     (0L until (1L << numPlanes)).filter(m => java.lang.Long.bitCount(m) <= maxHamming)
 
-  /** ANN top-k for the query vectors: each query EXPLODES to its probe
-    * bucket ids (its own bucket XOR every mask within the Hamming
-    * radius), then candidates come from an equi-join on `bucket` — the
-    * shuffle/broadcast key is the small bucket id, never a pair predicate.
-    * At 1000 executors this hash-joins co-located by bucket; no per-pair
-    * scan exists anywhere in the plan (asserted in PlanAssertionsSpec).
-    * Exact cosine re-ranks within the probed buckets.
+  /** The SRP index side: each corpus vector with its `bucket` (sign bits
+    * against the fixed-seed planes) and its norm `__n`.
     */
-  def annLshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int = 6, probeHamming: Int = 2, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim)
-    val emb = embeddings
-      .withColumn("bucket", bucketId(col("embedding"), planes))
+  private[graft] def srpIndex(corpus: DataFrame, numPlanes: Int, dim: Int): DataFrame =
+    corpus
+      .withColumn("bucket", bucketId(col("embedding"), hyperplanes(numPlanes, dim)))
       .withColumn("__n", normF32(col("embedding")))
+
+  /** The SRP probe side: each query vector with its norm `__qn`,
+    * EXPLODED to its probe buckets — its own bucket XOR every mask
+    * within the Hamming radius.
+    */
+  private[graft] def srpProbes(queries: DataFrame, numPlanes: Int, probeHamming: Int,
+      dim: Int): DataFrame = {
     val masks = probeMasks(numPlanes, probeHamming)
-    val probes = queries
-      .withColumn("qbucket", bucketId(col("query_vec"), planes))
+    queries
+      .withColumn("qbucket", bucketId(col("query_vec"), hyperplanes(numPlanes, dim)))
       .withColumn("__qn", normF32(col("query_vec")))
       .withColumn("bucket", explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
+  }
+
+  /** ANN top-k for the query vectors: each query EXPLODES to its probe
+    * bucket ids, then candidates come from an equi-join on `bucket` —
+    * the shuffle/broadcast key is the small bucket id, never a pair
+    * predicate. At 1000 executors this hash-joins co-located by bucket;
+    * no per-pair scan exists anywhere in the plan (asserted in
+    * PlanAssertionsSpec). Exact cosine re-ranks within the probed
+    * buckets.
+    */
+  def annLshTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
+      numPlanes: Int = 6, probeHamming: Int = 2, dim: Int = 64): DataFrame =
     // No broadcast hint: AQE picks broadcast-vs-shuffle from the probe
     // side's RUNTIME size — the equi-join on `bucket` supports both, so
     // a huge query batch shuffles instead of OOMing the driver.
-    val cand = emb
-      .join(probes, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-    // Bounded-heap re-rank (TopKAgg): map-side partial top-k means the
-    // final shuffle carries O(queries × k × partitions), never all
-    // candidates of a query into one reducer like a row_number window.
-    // Identical output to the window (same NaN/tie total order — proven
-    // in TopKAndSourcesSpec).
-    cand
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        col("__kv.score").as("cosine_sim"), (col("__r") + 1).cast("long").as("rnk"))
-  }
+    cosineTopK(srpIndex(embeddings, numPlanes, dim)
+      .join(srpProbes(queries, numPlanes, probeHamming, dim), Seq("bucket")), k)
 
   /** EXACT embedding-cosine near-duplicate pairs (a < b, cosine ≥
     * threshold) via a blocked grid self-join — no CartesianProduct/BNLJ
@@ -196,22 +245,7 @@ object Similarity {
       .select(
         least(col("vec_id_a"), col("vec_id_b")).as("vec_id_a"),
         greatest(col("vec_id_a"), col("vec_id_b")).as("vec_id_b"),
-        round(dotF32(col("ea"), col("eb")) / (col("__na") * col("__nb")), 6).as("cosine_sim"))
-      .filter(col("cosine_sim") >= threshold)
-  }
-
-  /** Brute-force all-pairs formulation — the test twin for
-    * [[cosineNearDupPairs]] (identical results; O(n²) theta join, never
-    * use beyond test scale).
-    */
-  def cosineNearDupPairsBrute(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val withNorm = embeddings
-      .select(col("vec_id"), col("embedding"), normF32(col("embedding")).as("__n"))
-    val a = withNorm.select(col("vec_id").as("vec_id_a"), col("embedding").as("ea"), col("__n").as("__na"))
-    val b = withNorm.select(col("vec_id").as("vec_id_b"), col("embedding").as("eb"), col("__n").as("__nb"))
-    a.join(b, col("vec_id_a") < col("vec_id_b"))
-      .select(col("vec_id_a"), col("vec_id_b"),
-        round(dotF32(col("ea"), col("eb")) / (col("__na") * col("__nb")), 6).as("cosine_sim"))
+        roundedCosine(col("ea"), col("eb"), col("__na"), col("__nb")).as("cosine_sim"))
       .filter(col("cosine_sim") >= threshold)
   }
 
@@ -341,7 +375,7 @@ object Similarity {
       .join(e.toDF("vec_id_a", "ea", "__na"), Seq("vec_id_a"))
       .join(e.toDF("vec_id_b", "eb", "__nb"), Seq("vec_id_b"))
       .select(col("vec_id_a"), col("vec_id_b"),
-        round(dotF32(col("ea"), col("eb")) / (col("__na") * col("__nb")), 6).as("cosine_sim"))
+        roundedCosine(col("ea"), col("eb"), col("__na"), col("__nb")).as("cosine_sim"))
       .filter(col("cosine_sim") >= threshold)
   }
 
@@ -431,7 +465,7 @@ object Similarity {
     a.as("x").join(a.as("y"),
         col("x.cluster") === col("y.cluster") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("vec_id"), col("x.vec_id").as("kept_by"),
-        round(dotF32(col("x.embedding"), col("y.embedding")) / (col("x.__n") * col("y.__n")), 6)
+        roundedCosine(col("x.embedding"), col("y.embedding"), col("x.__n"), col("y.__n"))
           .as("cosine_sim"))
       .filter(col("cosine_sim") >= tau)
       .groupBy("vec_id")
@@ -453,21 +487,9 @@ object Similarity {
     */
   def diverseTopK(embeddings: DataFrame, queries: DataFrame, groupCol: String,
       k: Int, perGroup: Int): DataFrame = {
-    val e = embeddings.withColumn("__n", normF32(col("embedding")))
-    val q = queries.withColumn("__qn", normF32(col("query_vec")))
-    val sims = e.crossJoin(broadcastIfSmall(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col(groupCol), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-    val capped = sims.groupBy("query_id", groupCol)
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), perGroup).as("top"))
-      .select(col("query_id"), col(groupCol), explode(col("top")).as("__kv"))
-      .select(col("query_id"), col(groupCol),
-        col("__kv.id").as("vec_id"), col("__kv.score").as("cosine_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine_sim").desc, col("vec_id"))
-    capped.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    val (e, q) = withNorms(embeddings, queries)
+    rankByCosine(cosineTopK(e.crossJoin(broadcastIfSmall(q)), perGroup, col(groupCol))
+      .drop("rnk"), k)
   }
 
   /** MAXIMAL-MARGINAL-RELEVANCE rerank over a bounded per-query

@@ -337,7 +337,7 @@ object SkippingIndex {
 
   /** The live layout generations of a multi-spec table, oldest first. */
   def liveSpecs(spark: SparkSession, outDir: String): Seq[Long] =
-    ArtifactIO.committedVersions(spark, outDir, "spec=", markerGated = false)
+    CommitLog.committedVersions(spark, outDir, "spec=", markerGated = false)
 
   /** Range read ACROSS every live layout generation: each spec prunes
     * from its OWN |files|-row zone-map sidecar, each admitted set

@@ -322,30 +322,12 @@ object StreamingJobs {
       numPlanes: Int = 6, probeHamming: Int = 2, dim: Int = 64,
       window: String = "1 minute", delay: String = "2 minutes"): DataFrame = {
     import graft.sim.Similarity
-    import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
-    val planes = Similarity.hyperplanes(numPlanes, dim)
-    val indexed = corpus
-      .withColumn("bucket", Similarity.bucketId(col("embedding"), planes))
-      .withColumn("__n", normF32(col("embedding")))
-    val masks = Similarity.probeMasks(numPlanes, probeHamming)
-    val probes = queryStream
-      .withColumn("qbucket", Similarity.bucketId(col("query_vec"), planes))
-      .withColumn("__qn", normF32(col("query_vec")))
-      .withColumn("bucket", explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
+    val probes = Similarity.srpProbes(queryStream, numPlanes, probeHamming, dim)
       .withWatermark("ts", delay)
-    probes
-      .join(indexed, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("ts"), col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("query_id"))
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), k).as("top"))
+    Similarity.cosineTopK(probes.join(Similarity.srpIndex(corpus, numPlanes, dim), Seq("bucket")),
+        k, org.apache.spark.sql.functions.window(col("ts"), window))
       .select(col("window.start").as("win_start"), col("query_id"),
-        posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("win_start"), col("query_id"),
-        col("__kv.id").as("vec_id"), col("__kv.score").as("cosine_sim"),
-        (col("__r") + 1).cast("long").as("rnk"))
+        col("vec_id"), col("cosine_sim"), col("rnk"))
   }
 
   /** Streaming CDC APPLY — the other half of q96's snapshot DIFF: an
@@ -378,8 +360,7 @@ object StreamingJobs {
     // Hadoop FileSystem listing (object-store-safe); single-table
     // versions need no commit marker — the one parquet write is the
     // version (Spark's own _SUCCESS covers partial-write detection).
-    val prev = graft.core.ArtifactIO
-      .committedVersions(spark, outDir, "v=", markerGated = false)
+    val prev = graft.core.CommitLog.committedVersions(spark, outDir, "v=", markerGated = false)
       .filter(_ < batchId).lastOption
     val merged = prev match {
       case Some(v) =>
@@ -409,8 +390,7 @@ object StreamingJobs {
     val batch = batch0.select("lang", "doc_id", "size_bytes")
     val spark = batch.sparkSession
     // committed versions only: inventory/ and plan/ are two writes
-    val prev = graft.core.ArtifactIO
-      .committedVersions(spark, outDir, "v=")
+    val prev = graft.core.CommitLog.committedVersions(spark, outDir, "v=")
       .filter(_ < batchId).lastOption
     val prevInv = prev.map(v => spark.read.parquet(s"$outDir/v=$v/inventory"))
     val inv = prevInv match {
@@ -451,7 +431,7 @@ object StreamingJobs {
     spark.read.parquet(s"$outDir/v=${latestVersion(spark, outDir)}/plan")
 
   private def latestVersion(spark: SparkSession, outDir: String): Long =
-    graft.core.ArtifactIO.committedVersions(spark, outDir, "v=").max
+    graft.core.CommitLog.committedVersions(spark, outDir, "v=").max
 
   /** Incremental VIEW MAINTENANCE of a grouped aggregate under a keyed
     * upsert stream — the warehouse-side IVM shape: the maintained view
@@ -831,7 +811,9 @@ object StreamingJobs {
     */
   def recleanCurated(spark: SparkSession, outDir: String, c: Int = 5,
       minDocs: Int = 3, gate: DataFrame => DataFrame): Long = {
-    val raw = spark.read.parquet(s"$outDir/raw")
+    // the archive's data schema is fixed by curateStream, so no schema
+    // inference job; `__batch_id` is left to partition discovery
+    val raw = spark.read.schema("doc_id LONG, text STRING").parquet(s"$outDir/raw")
     val view = boilerMaintView(spark, s"$outDir/boiler", minDocs)
     val cleaned = graft.dedup.Dedup.applyBoilerplate(raw.select("doc_id", "text"), view, c)
       .select(col("doc_id"), col("clean_text").as("text"),
@@ -1018,8 +1000,7 @@ object StreamingJobs {
 
   /** The current CDC snapshot: the highest version directory. */
   def cdcSnapshot(spark: SparkSession, outDir: String): DataFrame = {
-    val latest = graft.core.ArtifactIO
-      .committedVersions(spark, outDir, "v=", markerGated = false).max
+    val latest = graft.core.CommitLog.committedVersions(spark, outDir, "v=", markerGated = false).max
     spark.read.parquet(s"$outDir/v=$latest")
   }
 
@@ -1036,7 +1017,7 @@ object StreamingJobs {
     require(keepVersions >= 2,
       s"keepVersions must be >= 2 (replay rebuilds from the predecessor), got $keepVersions")
     val spark = SparkSession.active
-    graft.core.ArtifactIO.committedVersions(spark, outDir, "v=", markerGated = false)
+    graft.core.CommitLog.committedVersions(spark, outDir, "v=", markerGated = false)
       .dropRight(keepVersions)
       .foreach(v => graft.core.ArtifactIO.delete(spark, s"$outDir/v=$v"))
   }
@@ -1130,12 +1111,7 @@ object StreamingJobs {
 
   def annIndexSink(indexDir: String, numPlanes: Int = 6, dim: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.sim.Similarity
-    import org.apache.spark.sql.graft.VectorExpressions.normF32
-    val planes = Similarity.hyperplanes(numPlanes, dim)
-    batch
-      .withColumn("bucket", Similarity.bucketId(col("embedding"), planes))
-      .withColumn("__n", normF32(col("embedding")))
+    graft.sim.Similarity.srpIndex(batch, numPlanes, dim)
       .write.mode("overwrite").parquet(s"$indexDir/part=$batchId")
   }
 
@@ -1156,7 +1132,7 @@ object StreamingJobs {
     val spark = org.apache.spark.sql.SparkSession.active
     val parts = graft.core.ArtifactIO.list(spark, indexDir).filter(_.startsWith("part="))
     val numeric =
-      graft.core.ArtifactIO.committedVersions(spark, indexDir, "part=", markerGated = false)
+      graft.core.CommitLog.committedVersions(spark, indexDir, "part=", markerGated = false)
     if (numeric.isEmpty) return
     val newest = s"part=${numeric.max}"
     val toMerge = parts.filterNot(_ == newest)
@@ -1182,9 +1158,7 @@ object StreamingJobs {
       numPlanes: Int = 6, probeHamming: Int = 2, dim: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.sim.Similarity
-    import org.apache.spark.sql.graft.VectorExpressions.{dotF32, normF32}
     val spark = batch.sparkSession
-    val planes = Similarity.hyperplanes(numPlanes, dim)
     val parts = graft.core.ArtifactIO.list(spark, indexDir).filter(_.startsWith("part="))
     val out = s"$outDir/part=$batchId"
     if (parts.isEmpty) {
@@ -1195,21 +1169,8 @@ object StreamingJobs {
       return
     }
     val index = spark.read.parquet(parts.map(p => s"$indexDir/$p"): _*)
-    val masks = Similarity.probeMasks(numPlanes, probeHamming)
-    val probes = batch
-      .withColumn("qbucket", Similarity.bucketId(col("query_vec"), planes))
-      .withColumn("__qn", normF32(col("query_vec")))
-      .withColumn("bucket", explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
-    index.join(probes, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotF32(col("embedding"), col("query_vec")) / (col("__n") * col("__qn")), 6)
-          .as("cosine_sim"))
-      .groupBy("query_id")
-      .agg(org.apache.spark.sql.graft.TopKAgg.topk(col("cosine_sim"), col("vec_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("__r", "__kv")))
-      .select(col("query_id"), col("__kv.id").as("vec_id"),
-        col("__kv.score").as("cosine_sim"), (col("__r") + 1).cast("long").as("rnk"))
+    Similarity.cosineTopK(
+        index.join(Similarity.srpProbes(batch, numPlanes, probeHamming, dim), Seq("bucket")), k)
       .write.mode("overwrite").parquet(out)
   }
 }

@@ -4,13 +4,14 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.types._
 
 /** Top-k (score desc, id asc) per group as a custom aggregate.
@@ -116,4 +117,20 @@ object TopKAgg {
   def topk(score: Column, id: Column, k: Int): Column =
     ExpressionUtils.column(
       TopKAgg(ExpressionUtils.expression(score), ExpressionUtils.expression(id), k).toAggregateExpression())
+
+  /** The bounded-heap top-k as rows: per `keys` group of `df`, its `k`
+    * best rows by (`score` desc, `id` asc), returned as the keys, then
+    * `id`, `score` (as double) and the 1-based `rnk`. Each `carry`
+    * aggregate is computed in the same aggregate over the whole group
+    * and repeats on every row of it.
+    */
+  def topKRows(df: DataFrame, keys: Seq[Column], score: String, id: String, k: Int,
+      carry: Column*): DataFrame = {
+    val top = df.groupBy(keys: _*)
+      .agg(topk(col(score).cast(DoubleType), col(id), k).as("__top"), carry: _*)
+    val kept = top.columns.toSeq.filter(_ != "__top").map(c => col(s"`$c`"))
+    top.select(kept :+ posexplode(col("__top")).as(Seq("__r", "__kv")): _*)
+      .select(kept ++ Seq(col("__kv.id").as(id), col("__kv.score").as(score),
+        (col("__r") + 1).cast(LongType).as("rnk")): _*)
+  }
 }

@@ -176,6 +176,12 @@ object VectorExpressions {
     ExpressionUtils.column(DotF32(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
   def normF32(a: Column): Column =
     ExpressionUtils.column(NormF32(ExpressionUtils.expression(a)))
+  /** The catalog's cosine: the dot product over the two precomputed
+    * norms, rounded HALF_UP to 6 dp — the score every kNN/ANN path and
+    * its DuckDB oracle order by.
+    */
+  def roundedCosine(a: Column, b: Column, normA: Column, normB: Column): Column =
+    org.apache.spark.sql.functions.round(dotF32(a, b) / (normA * normB), 6)
   def matVecF32(a: Column, matrix: Array[Array[Double]]): Column =
     ExpressionUtils.column(MatVecF32(ExpressionUtils.expression(a), matrix.map(_.toSeq).toSeq))
 }

@@ -62,7 +62,7 @@ class AsOfSpec extends SparkSpec {
       assert(got == Set((100L, 903L), (101L, 903L)),
         "the kept duplicate must be the max-rid row under every run")
     }
-    val naive = AsOf.asOfJoinBackwardNaive(left, right, "k", "t", "t", rightTieBreak = Some("rid"))
+    val naive = Oracles.asOfJoinBackwardNaive(left, right, "k", "t", "t", rightTieBreak = Some("rid"))
       .select("lid", "r_rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(naive == Set((100L, 903L), (101L, 903L)))
   }
@@ -75,7 +75,7 @@ class AsOfSpec extends SparkSpec {
       df.select(col("event_id"), col("view_event_id"))
         .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
     val fast = rows(AsOf.asOfJoinBackward(purchases, views, "user_id", "ts", "ts", "view_"))
-    val naive = rows(AsOf.asOfJoinBackwardNaive(purchases, views, "user_id", "ts", "ts", "view_"))
+    val naive = rows(Oracles.asOfJoinBackwardNaive(purchases, views, "user_id", "ts", "ts", "view_"))
     assert(fast.nonEmpty && fast == naive)
   }
 

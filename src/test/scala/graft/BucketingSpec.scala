@@ -33,7 +33,7 @@ class BucketingSpec extends SparkSpec {
     try {
       val bucketed = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      val shuffles = Bucketing.shuffleExchangeCount(bucketed)
+      val shuffles = Oracles.shuffleExchangeCount(bucketed)
       // join needs none; only the groupBy on a different key shuffles
       assert(shuffles <= 1, s"expected at most the aggregation shuffle, got $shuffles")
 
@@ -43,7 +43,7 @@ class BucketingSpec extends SparkSpec {
       val want = unbucketed.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == want)
 
-      val unbucketedShuffles = Bucketing.shuffleExchangeCount(unbucketed)
+      val unbucketedShuffles = Oracles.shuffleExchangeCount(unbucketed)
       assert(unbucketedShuffles > shuffles, "bucketing should remove join shuffles")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }

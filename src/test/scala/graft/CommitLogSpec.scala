@@ -26,7 +26,7 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.allocate(spark, dir, "v=") == 6L)
     // a committed version also conflicts (double-commit guard at claim time)
     ArtifactIO.mkdirs(spark, s"$dir/v=9")
-    ArtifactIO.commit(spark, s"$dir/v=9")
+    CommitLog.publish(spark, s"$dir/v=9")
     intercept[CommitLog.CommitConflict] { CommitLog.claim(spark, dir, "v=", 9L) }
   }
 
@@ -34,7 +34,7 @@ class CommitLogSpec extends SparkSpec {
     val dir = tmp("graft-cl-pub")
     ArtifactIO.mkdirs(spark, s"$dir/v=1")
     CommitLog.publishExclusive(spark, s"$dir/v=1")
-    assert(ArtifactIO.isCommitted(spark, s"$dir/v=1"))
+    assert(CommitLog.isCommitted(spark, s"$dir/v=1"))
     intercept[CommitLog.CommitConflict] { CommitLog.publishExclusive(spark, s"$dir/v=1") }
   }
 
@@ -57,7 +57,7 @@ class CommitLogSpec extends SparkSpec {
     val dir = tmp("graft-cl-stale")
     CommitLog.claim(spark, dir, "v=", 1L) // crashed writer: claimed, never committed
     ArtifactIO.mkdirs(spark, s"$dir/v=4")
-    ArtifactIO.commit(spark, s"$dir/v=4")
+    CommitLog.publish(spark, s"$dir/v=4")
     CommitLog.claim(spark, dir, "v=", 7L) // in-flight writer above the floor: kept
     assert(CommitLog.releaseStaleClaims(spark, dir, "v=") == Seq(1L))
     assert(CommitLog.claimed(spark, dir, "v=") == Seq(7L))
@@ -129,7 +129,7 @@ class CommitLogSpec extends SparkSpec {
       // full exclusive publication lifecycle on the same scheme
       ArtifactIO.mkdirs(spark, s"$dir/v=1")
       CommitLog.publishExclusive(spark, s"$dir/v=1")
-      assert(ArtifactIO.isCommitted(spark, s"$dir/v=1"))
+      assert(CommitLog.isCommitted(spark, s"$dir/v=1"))
       intercept[CommitLog.CommitConflict] { CommitLog.publishExclusive(spark, s"$dir/v=1") }
       assert(CommitLog.claimed(spark, dir, "v=").isEmpty, "publish must release the claim")
     } finally {
@@ -148,11 +148,11 @@ class CommitLogSpec extends SparkSpec {
     // retention window: the folded sidecar is INVISIBLE (version
     // arithmetic) but still on disk, so a reader that listed the chain
     // just before the fold can still open every file it saw
-    assert(ArtifactIO.committedVersions(spark, dir, DeletionVectors.DvPrefix).nonEmpty,
+    assert(CommitLog.committedVersions(spark, dir, DeletionVectors.DvPrefix).nonEmpty,
       "folded DV sidecars must survive one retention window")
     // the NEXT pass vacuums them (and has nothing new to fold)
     assert(CommitLog.janitor(spark, dir).removed.isEmpty)
-    assert(ArtifactIO.committedVersions(spark, dir, DeletionVectors.DvPrefix).isEmpty,
+    assert(CommitLog.committedVersions(spark, dir, DeletionVectors.DvPrefix).isEmpty,
       "second pass should vacuum the folded sidecars")
     assert(liveIds(dir) == view, "vacuum changed the view")
   }

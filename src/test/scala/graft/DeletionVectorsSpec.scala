@@ -264,13 +264,13 @@ class DeletionVectorsSpec extends SparkSpec {
     val view = liveIds(dir)
     DeletionVectors.compactApply(spark, dir, 5L, gc = false)
     // folded but within the retention window: still on disk, view unchanged
-    assert(graft.core.ArtifactIO.committedVersions(spark, dir, DeletionVectors.DvPrefix) == Seq(1L))
+    assert(graft.core.CommitLog.committedVersions(spark, dir, DeletionVectors.DvPrefix) == Seq(1L))
     assert(liveIds(dir) == view)
     // a post-fold sidecar is NOT retired by the vacuum
     DeletionVectors.deleteWhere(spark, dir, col("n_chars") < 160, 6L)
     val view2 = liveIds(dir)
     assert(DeletionVectors.vacuumSidecars(spark, dir) == Seq(1L))
-    assert(graft.core.ArtifactIO.committedVersions(spark, dir, DeletionVectors.DvPrefix) == Seq(6L))
+    assert(graft.core.CommitLog.committedVersions(spark, dir, DeletionVectors.DvPrefix) == Seq(6L))
     assert(liveIds(dir) == view2, "vacuum changed the view")
   }
 

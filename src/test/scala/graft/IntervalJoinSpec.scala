@@ -42,7 +42,7 @@ class IntervalJoinSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select("id_a", "id_b").collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       val fast = rows(IntervalJoin.followUpsWithin(l, r, "k", "k2", "t_a", "t_b", w))
-      val naive = rows(IntervalJoin.followUpsWithinNaive(l, r, "k", "k2", "t_a", "t_b", w))
+      val naive = rows(Oracles.followUpsWithinNaive(l, r, "k", "k2", "t_a", "t_b", w))
       assert(fast == naive, s"window ${w}s diverged: ${fast.size} vs ${naive.size} pairs")
       assert(fast.nonEmpty, s"window ${w}s: degenerate empty twin test")
     }
@@ -55,7 +55,7 @@ class IntervalJoinSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fast = rows(IntervalJoin.followUpsWithin(a, b, "user_id", "user_b", "ts_a", "ts_b", 1800L))
-    val naive = rows(IntervalJoin.followUpsWithinNaive(a, b, "user_id", "user_b", "ts_a", "ts_b", 1800L))
+    val naive = rows(Oracles.followUpsWithinNaive(a, b, "user_id", "user_b", "ts_a", "ts_b", 1800L))
     assert(fast.nonEmpty && fast == naive)
     // exactly-once: the two probed buckets are distinct, so no pair dups
     assert(fast == fast.distinct)

@@ -506,13 +506,13 @@ class PlanAssertionsSpec extends SparkSpec {
     try {
       // q116's plan carries exactly 2 exchanges: the aggregation hash
       // and the final sort's range partitioning — the join adds NONE.
-      val bucketed = graft.operators.Bucketing.shuffleExchangeCount(
+      val bucketed = Oracles.shuffleExchangeCount(
         graft.queries.QueriesSources.q116_bucketed_join(spark, sf("sf0.001")))
       assert(bucketed <= 2,
         s"bucket co-location must eliminate the join shuffles (got $bucketed exchanges)")
       // the same query over the raw tables pays both join-side shuffles
       import org.apache.spark.sql.functions._
-      val raw = graft.operators.Bucketing.shuffleExchangeCount(
+      val raw = Oracles.shuffleExchangeCount(
         graft.core.Tables(spark, sf("sf0.001"), "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .join(graft.core.Tables(spark, sf("sf0.001"), "customer")

@@ -29,8 +29,8 @@ class PropertySpec extends SparkSpec {
 
   test("word count distributes over concatenation of corpora") {
     forAllN(Gen.zip(corpus, corpus)) { case (a, b) =>
-      val merged = MapReduce.wordCountOracle(a ++ b)
-      val partwise = (MapReduce.wordCountOracle(a).toSeq ++ MapReduce.wordCountOracle(b).toSeq)
+      val merged = Oracles.wordCountOracle(a ++ b)
+      val partwise = (Oracles.wordCountOracle(a).toSeq ++ Oracles.wordCountOracle(b).toSeq)
         .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
       assert(merged == partwise)
     }
@@ -38,13 +38,13 @@ class PropertySpec extends SparkSpec {
 
   test("word count is permutation-invariant") {
     forAllN(corpus) { a =>
-      assert(MapReduce.wordCountOracle(a) == MapReduce.wordCountOracle(a.reverse))
+      assert(Oracles.wordCountOracle(a) == Oracles.wordCountOracle(a.reverse))
     }
   }
 
   test("tokens are always non-empty pure-ASCII-letter runs") {
     forAllN(line) { l =>
-      val toks = MapReduce.wordCountOracle(Seq(l)).keys
+      val toks = Oracles.wordCountOracle(Seq(l)).keys
       assert(toks.forall(t => t.nonEmpty && t.forall(c => c.isLetter && c < 128)))
     }
   }

@@ -108,7 +108,7 @@ class SimilaritySpec extends SparkSpec {
   test("blocked near-dup pairs == brute-force twin (every block size)") {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id_a", "vec_id_b", "cosine_sim").as[(Long, Long, Double)].collect().sorted.toSeq
-    val brute = key(Similarity.cosineNearDupPairsBrute(emb, 0.35))
+    val brute = key(Oracles.cosineNearDupPairsBrute(emb, 0.35))
     assert(brute.nonEmpty, "twin test needs a non-empty pair set")
     for (blocks <- Seq(1, 3, 16))
       assert(key(Similarity.cosineNearDupPairs(emb, 0.35, numBlocks = blocks)) == brute,
@@ -128,7 +128,7 @@ class SimilaritySpec extends SparkSpec {
     val df = (base ++ dups).toDF("vec_id", "embedding")
     def key(d: org.apache.spark.sql.DataFrame) =
       d.select("vec_id_a", "vec_id_b", "cosine_sim").as[(Long, Long, Double)].collect().sorted.toSeq
-    val brute = key(Similarity.cosineNearDupPairsBrute(df, 0.95))
+    val brute = key(Oracles.cosineNearDupPairsBrute(df, 0.95))
     assert(brute.size >= 10, s"expected the 10 planted pairs, brute found ${brute.size}")
     assert(key(Similarity.srpNearDupPairs(df, 0.95)) == brute)
   }
@@ -227,7 +227,7 @@ class SimilaritySpec extends SparkSpec {
     val df = (base ++ dups).toDF("vec_id", "embedding")
     def key(d: org.apache.spark.sql.DataFrame) =
       d.select("vec_id_a", "vec_id_b", "cosine_sim").as[(Long, Long, Double)].collect().sorted.toSeq
-    val brute = key(Similarity.cosineNearDupPairsBrute(df, 0.95))
+    val brute = key(Oracles.cosineNearDupPairsBrute(df, 0.95))
     assert(brute.size >= 10)
     assert(key(Similarity.srpNearDupPairsAuto(df, 0.95)) == brute)
   }
@@ -414,5 +414,38 @@ class SimilaritySpec extends SparkSpec {
     assert(picks(0)._3 == 0.7 * rel101)
     // selections are distinct and exactly k
     assert(picks.map(_._2).distinct.length == 3)
+  }
+
+  test("exhaustive SRP and IVF probes equal knnJoin row for row, exact ties broken by vec_id") {
+    // Crafted corpus: 24 gaussian vectors, then exact copies under new
+    // ids — 3 copies of vector 0 (a tie inside the top-4) and 5 copies of
+    // vector 1 (a tie that crosses the k = 4 cut) — so cosines tie
+    // bit for bit and only the vec_id tie-break decides the order.
+    val rng = new scala.util.Random(7)
+    val base = (0 until 24).map(i => (i.toLong, Seq.fill(64)(rng.nextGaussian().toFloat)))
+    val copies = (Seq.fill(3)(0) ++ Seq.fill(5)(1)).zipWithIndex
+      .map { case (src, j) => (100L + j, base(src)._2) }
+    val corpus = (base ++ copies).toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id").isin(0L, 1L, 5L, 102L))
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val k = 4
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "vec_id", "cosine_sim", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .sortBy(r => (r._1, r._4)).toSeq
+    val exact = rows(Similarity.knnJoin(corpus, queries, k))
+    assert(exact.length == 4 * k)
+    // the fixture really ties: query 0 sees its 3 copies at cosine 1.0,
+    // query 1 keeps the 4 lowest ids of its 5 copies
+    assert(exact.filter(_._1 == 0L).take(3).map(r => (r._2, r._3)) ==
+      Seq((100L, 1.0), (101L, 1.0), (102L, 1.0)))
+    assert(exact.filter(_._1 == 1L).map(_._2) == Seq(103L, 104L, 105L, 106L))
+    // pruning off: every SRP bucket probed, every IVF cell probed
+    val lsh = Similarity.annLshTopK(corpus, queries, k, numPlanes = 6, probeHamming = 6)
+    assert(rows(lsh) == exact)
+    val model = graft.sim.IvfIndex.train(corpus, k = 4, iters = 0)
+    val ivf = graft.sim.IvfIndex.annTopK(graft.sim.IvfIndex.assign(corpus, model), queries,
+      model, k, nprobe = model.k)
+    assert(rows(ivf) == exact)
   }
 }

@@ -469,7 +469,7 @@ class StreamingSpec extends SparkSpec {
       .exists(t => String.valueOf(t.getMessage).contains("injected write failure")),
       s"the sink must fail on the injected error, got $e")
     // the served version is committed and every one of its tables reads back
-    val served = graft.core.ArtifactIO.committedVersions(spark, out, "v=").max
+    val served = graft.core.CommitLog.committedVersions(spark, out, "v=").max
     val servedPlan = rows(s"$out/v=$served", "plan")
     assert(rows(s"$out/v=$served", "inventory").nonEmpty, s"served version $served lost its inventory")
     assert(plan(out) == servedPlan)
@@ -580,7 +580,7 @@ class StreamingSpec extends SparkSpec {
       assert(est == want(g)._2, s"group $g estimate not bit-equal")
     }
     // idempotence: redeliver EVERY row as one more batch — state unchanged
-    val lastV = graft.core.ArtifactIO.committedVersions(spark, out, "v=").max
+    val lastV = graft.core.CommitLog.committedVersions(spark, out, "v=").max
     StreamingJobs.hllMaintSink(out)(
       graft.core.Tables.events(spark, sf("sf0.001")), lastV + 1)
     assert(state() == got, "re-merging already-seen rows changed the registers")
@@ -676,9 +676,9 @@ class StreamingSpec extends SparkSpec {
     val wantDf = dfState()
     val deleted = StreamingJobs.compactVersions(spark, out, keep = 2)
     assert(deleted == Seq(0L, 2L, 3L), s"unexpected deletions: $deleted")
-    assert(graft.core.ArtifactIO.committedVersions(spark, out, "v=") == Seq(4L),
+    assert(graft.core.CommitLog.committedVersions(spark, out, "v=") == Seq(4L),
       "only the newest delta should remain")
-    assert(graft.core.ArtifactIO.committedVersions(spark, out, "base_v=") == Seq(2L),
+    assert(graft.core.CommitLog.committedVersions(spark, out, "base_v=") == Seq(2L),
       "the fold target must be a committed base at the second-newest version")
     assert(graft.core.ArtifactIO.exists(spark, s"$out/v=9"),
       "compaction removed the in-flight (uncommitted, newest) version")
@@ -706,7 +706,7 @@ class StreamingSpec extends SparkSpec {
     // into base_v=4; the view is still bit-identical
     val deleted2 = StreamingJobs.compactVersions(spark, out, keep = 2)
     assert(deleted2 == Seq(2L, 4L), s"second fold deletions: $deleted2")
-    assert(graft.core.ArtifactIO.committedVersions(spark, out, "base_v=") == Seq(4L))
+    assert(graft.core.CommitLog.committedVersions(spark, out, "base_v=") == Seq(4L))
     assert(dfState() == merged, "second compaction changed the df state")
   }
 
@@ -929,9 +929,14 @@ class StreamingSpec extends SparkSpec {
     assert(replay == first, s"identical curate calls ran $first and $replay jobs")
     assert(entries == 0 && pinned.isEmpty,
       s"curateStream left $entries cache entries and persisted RDDs $pinned")
-    val (total, _, recleanEntries, recleanPinned) =
+    val (total, recleanJobs, recleanEntries, recleanPinned) =
       measured(StreamingJobs.recleanCurated(spark, out, gate = gate))
     assert(total == StreamingJobs.curatedDocs(spark, out).count())
+    // the raw archive is read with its known data schema: no footer
+    // inference job before the rewrite
+    val recleanBudget = 6
+    assert(recleanJobs <= recleanBudget,
+      s"a re-clean ran $recleanJobs jobs (budget $recleanBudget)")
     assert(recleanEntries == 0 && recleanPinned.isEmpty,
       s"recleanCurated left $recleanEntries cache entries and persisted RDDs $recleanPinned")
   }
@@ -1014,7 +1019,7 @@ class StreamingSpec extends SparkSpec {
     // state totals are already pinned by the other suites; here pin that
     // compaction folds the tiny deltas away and bytes return to O(state)
     StreamingJobs.compactVersions(spark, bout, keep = 2)
-    val base = graft.core.ArtifactIO.committedVersions(spark, bout, "base_v=")
+    val base = graft.core.CommitLog.committedVersions(spark, bout, "base_v=")
     assert(base.nonEmpty && dirBytes(s"$bout/base_v=${base.max}") * 2 > bBig,
       "the folded base should carry the accumulated state")
   }

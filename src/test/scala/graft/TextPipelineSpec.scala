@@ -26,7 +26,7 @@ class TextPipelineSpec extends SparkSpec {
     TextPipeline.run(spark, s"$in/*.txt", out, numBuckets = 3)
     val got = TextPipeline.readResult(spark, out).as[(String, Long)].collect().toMap
     val lines = spark.read.textFile(s"$in/*.txt").collect().toSeq
-    assert(got == MapReduce.wordCountOracle(lines))
+    assert(got == Oracles.wordCountOracle(lines))
   }
 
   test("readResult drops malformed lines, like the reference's parser (A8)") {
@@ -65,7 +65,7 @@ class TextPipelineSpec extends SparkSpec {
       (k, it) => (k, it.sum),
       numBuckets = 2).collect().toMap
     val lines = spark.read.textFile(s"$in/*.txt").collect().toSeq
-    assert(whole == MapReduce.wordCountOracle(lines))
+    assert(whole == Oracles.wordCountOracle(lines))
   }
 
   test("sink produces numBuckets files, each internally sorted") {

@@ -17,7 +17,7 @@ class ServedIdsScreenSpec extends SparkSpec {
     def part(b: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === b)
     (0 until 4).foreach(b => StreamingJobs.curateStream(out, gate = gate)(part(b), b.toLong))
     assert(StreamingJobs.compactVersions(spark, boiler).nonEmpty, "compaction folded nothing")
-    assert(graft.core.ArtifactIO.committedVersions(spark, boiler, DeltaState.BasePrefix).nonEmpty)
+    assert(graft.core.CommitLog.committedVersions(spark, boiler, DeltaState.BasePrefix).nonEmpty)
 
     val ids = DeltaState.Table("ids", DeltaState.SetU(Seq("doc_id")))
     def rows(df: Option[org.apache.spark.sql.DataFrame]) =
