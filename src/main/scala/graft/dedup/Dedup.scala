@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
+import graft.operators.ConnectedComponents
 import graft.text.Text
 
 /** Deduplication operators for document corpora (SURVEY.md §2.C).
@@ -369,17 +370,25 @@ object Dedup {
   def softDedup(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame = {
     val p = PortableHash.MinHashP
     val (a, b) = PortableHash.minHashCoeffs(0)
-    val pairs = ngramJaccardPairsPrefix(docs, shingleN, threshold)
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
-    val members = cc.join(cc.groupBy("cluster").agg(count(lit(1)).as("n_members")), Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
-    docs.select("doc_id")
-      .join(members, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
-      .withColumn("n_members", coalesce(col("n_members"), lit(1L)))
+    clustered(docs, shingleN, threshold)
       .withColumn("h", (pmod(col("doc_id"), lit(p)) * lit(a) + lit(b)) % lit(p))
       .filter(col("h") * col("n_members") < lit(p))
       .select("doc_id", "cluster", "n_members")
+  }
+
+  /** (doc_id, cluster, n_members) for EVERY document of `docs`: connected
+    * components over the prefix-filtered exact Jaccard pair graph, sized
+    * by [[graft.operators.ConnectedComponents.members]]; a document in no
+    * pair is its own cluster of one. The labeling [[softDedup]] and
+    * [[bestExemplar]] share.
+    */
+  private def clustered(docs: DataFrame, shingleN: Int, threshold: Double): DataFrame = {
+    val cc = ConnectedComponents.run(ngramJaccardPairsPrefix(docs, shingleN, threshold),
+      "doc_id_a", "doc_id_b")
+    docs.select("doc_id")
+      .join(ConnectedComponents.members(cc), Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
+      .withColumn("n_members", coalesce(col("n_members"), lit(1L)))
   }
 
   /** 32-bit SimHash fingerprint per document over its distinct token set,
@@ -500,14 +509,7 @@ object Dedup {
     */
   def bestExemplar(docs: DataFrame, shingleN: Int, threshold: Double,
       quality: DataFrame): DataFrame = {
-    val pairs = ngramJaccardPairsPrefix(docs, shingleN, threshold)
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
-    val members = cc.join(cc.groupBy("cluster").agg(count(lit(1)).as("n_members")), Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
-    val labeled = docs.select("doc_id")
-      .join(members, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
-      .withColumn("n_members", coalesce(col("n_members"), lit(1L)))
+    val labeled = clustered(docs, shingleN, threshold)
       .join(quality.select(col("doc_id"), col("z")), Seq("doc_id"))
     val w = Window.partitionBy("cluster").orderBy(col("z").desc, col("doc_id").asc)
     labeled.withColumn("rn", row_number().over(w))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Rounds
+
 /** Connected components by iterative min-label propagation — the
   * operator that turns near-duplicate PAIRS into duplicate CLUSTERS
   * (every member labeled with the smallest id reachable from it), so a
@@ -12,9 +14,12 @@ import org.apache.spark.sql.functions._
   * a node's label becomes min(own, neighbors' labels); stop when no
   * label changes. Convergence in graph-diameter rounds — near-dup
   * clusters are dense and shallow, so typically 2–4 rounds. Each round
-  * is one shuffle join on node id (never an edge-pair blow-up), and the
-  * label frame is localCheckpoint()ed so lineage doesn't grow with the
-  * iteration count — the standard BSP formulation. For adversarially
+  * is one shuffle join on node id (never an edge-pair blow-up). Both
+  * algorithms run in the round loop [[graft.core.Rounds.iterate]]: each
+  * round is localCheckpoint()ed so lineage doesn't grow with the
+  * iteration count — the standard BSP formulation — and the round it
+  * supersedes is freed by [[graft.core.Rounds.unpersistCheckpoint]].
+  * [[members]] adds cluster sizes. For adversarially
   * deep graphs (long chains) the doubling variants (Hash-to-Min /
   * small-star large-star, Kiveris et al. 2014) bound rounds by
   * O(log d); the per-round join shape below is unchanged.
@@ -31,8 +36,8 @@ object ConnectedComponents {
     * Throws IllegalStateException if labels have not converged after
     * `maxIter` rounds (a component with diameter > maxIter) — partially
     * propagated labels are wrong answers and must never be returned
-    * silently. The returned frame is a materialized localCheckpoint;
-    * superseded per-round checkpoints are unpersisted as the loop
+    * silently. The returned frame reads the last round's materialized
+    * localCheckpoint; superseded rounds are released as the loop
     * advances, so executor storage stays O(|nodes|), not O(iters·|nodes|).
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 50): DataFrame = {
@@ -40,51 +45,44 @@ object ConnectedComponents {
       .union(edges.select(col(dstCol).as("__s"), col(srcCol).as("__d")))
       .distinct()
       .localCheckpoint()
-    // labelsCp is always the round's materialized checkpoint — kept
-    // separate from the projected view so it can be unpersisted once the
-    // next round's checkpoint exists.
-    var labelsCp = sym.select(col("__s").as("node")).distinct()
+    val init = sym.select(col("__s").as("node")).distinct()
       .withColumn("cluster", col("node"))
       .localCheckpoint()
-    var labels = labelsCp
     var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    // each round carries a __chg flag beside (node, cluster); the next
+    // round reads only the labels
+    val (last, converged) = Rounds.iterate(init, maxIter) { prev =>
+      val labels = prev.select(col("node"), col("cluster"))
       // min label over each node's neighborhood, joined on the node id
       val neighborMin = sym
         .join(labels.withColumnRenamed("node", "__d"), Seq("__d"))
         .groupBy(col("__s").as("node"))
         .agg(min("cluster").as("__nmin"))
-      val updated = labels.join(neighborMin, Seq("node"), "left")
+      labels.join(neighborMin, Seq("node"), "left")
         .select(col("node"),
           least(col("cluster"), coalesce(col("__nmin"), col("cluster"))).as("cluster"),
           (col("__nmin") < col("cluster")).as("__chg"))
-        .localCheckpoint() // eager: materialized before the old one is dropped
-      changed = updated.filter(col("__chg")).count()
-      unpersistCheckpoint(labelsCp)
-      labelsCp = updated
-      labels = updated.drop("__chg")
-      iter += 1
+    } { round =>
+      changed = round.filter(col("__chg")).count()
+      changed == 0
     }
-    unpersistCheckpoint(sym)
-    if (changed > 0) {
-      unpersistCheckpoint(labelsCp)
+    Rounds.unpersistCheckpoint(sym)
+    if (!converged) {
+      Rounds.unpersistCheckpoint(last)
       throw new IllegalStateException(
         s"ConnectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still changing) — raise maxIter for graphs of diameter > $maxIter")
     }
-    labels
+    last.drop("__chg")
   }
 
-  /** Frees the block-manager storage behind a localCheckpoint()ed frame.
-    * Dataset.unpersist only covers cacheManager entries, not the RDD a
-    * checkpoint pins, so reach through the LogicalRDD leaf instead.
+  /** (doc_id, cluster, n_members): every labeled node of a [[run]] /
+    * [[runAlternating]] result with the size of its cluster — one keyed
+    * size aggregate joined back on the cluster id.
     */
-  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  def members(cc: DataFrame): DataFrame =
+    cc.join(cc.groupBy("cluster").agg(count(lit(1)).as("n_members")), Seq("cluster"))
+      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
 
   /** Log-depth variant: alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -142,25 +140,20 @@ object ConnectedComponents {
       (r.getLong(0), r.getLong(1))
     }
 
-    var e = edges
+    val init = edges
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint()
-    var sig = signature(e)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
+    var sig = signature(init)
+    val (e, converged) = Rounds.iterate(init, maxIter)(prev => smallStar(largeStar(prev))) { next =>
       val nextSig = signature(next)
-      unpersistCheckpoint(e)
-      e = next
-      converged = nextSig == sig
+      val same = nextSig == sig
       sig = nextSig
-      iter += 1
+      same
     }
     if (!converged) {
-      unpersistCheckpoint(e)
+      Rounds.unpersistCheckpoint(e)
       throw new IllegalStateException(
         s"ConnectedComponents.runAlternating did not converge in $maxIter rounds")
     }

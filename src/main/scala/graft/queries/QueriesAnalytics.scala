@@ -505,21 +505,20 @@ GROUP BY event_type ORDER BY event_type"""
     // The rank vector is |nations|-sized, so each iteration BROADCASTS it
     // onto the (persisted, src-partitioned) edge list: the per-round work
     // is a map-side join + one tiny keyed agg — the edge table never
-    // re-shuffles. Each round is localCheckpoint()ed (the CC pattern):
+    // re-shuffles. Each round is localCheckpoint()ed (Rounds.iterate):
     // a broadcast collects its input eagerly, so without truncation every
     // round would re-execute all previous rounds' lineage — compounding.
     // For graphs whose node set outgrows a broadcast, drop the hints and
     // the same loop runs as co-partitioned shuffle joins.
-    var ranks = nodes.withColumn("pr", lit(1000000000000L)).localCheckpoint()
-    for (_ <- 1 to 5) {
-      val contrib = e2.join(broadcast(ranks), e2("src") === ranks("node"))
+    val (ranks, _) = graft.core.Rounds.iterate(
+        nodes.withColumn("pr", lit(1000000000000L)).localCheckpoint(), 5) { prev =>
+      val contrib = e2.join(broadcast(prev), e2("src") === prev("node"))
         .select(col("dst"), expr("(pr * w) div ow").as("c"))
         .groupBy("dst").agg(sum("c").as("inbound"))
-      ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           expr("150000000000 + (85 * coalesce(inbound, 0)) div 100").as("pr"))
-        .localCheckpoint()
-    }
+    }(_ => false)
     ranks.join(broadcast(t(s, dir, "nation")),
         col("node") === col("n_nationkey"))
       .select(col("n_name"), col("pr").as("rank_fp"))

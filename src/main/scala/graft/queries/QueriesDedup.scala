@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.dedup.Dedup
 import graft.functions.PortableHash
+import graft.operators.ConnectedComponents
 import graft.text.Text
 
 /** Deduplication / fingerprinting queries (SURVEY.md §2.C-D Q15–Q16 and
@@ -37,22 +38,47 @@ FROM kept GROUP BY lang ORDER BY lang"""
 
   /** DuckDB fragment: exact n-token-shingle Jaccard pairs ≥ threshold.
     * Any pair with J > 0 shares a shingle, so the inverted-index join is
-    * exact; Jaccard is a ratio of exact integers — no float drift.
+    * exact; Jaccard is a ratio of exact integers — no float drift. With
+    * `maxDf` > 0 the shingle universe is df-capped first, mirroring
+    * Dedup.ngramJaccardPairsCapped.
     */
-  private def jaccardOracle(n: Int, threshold: String, table: String = "documents"): String = {
-    val last = n - 1
-    raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM $table),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+$last], ' ') AS s
-       FROM (SELECT doc_id, t, unnest(range(1, len(t) - ${last - 1})) AS i FROM toks WHERE len(t) >= $n)),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
+  private def jaccardOracle(n: Int, threshold: String, table: String = "documents",
+      maxDf: Int = 0): String =
+    raw"""WITH ${shingleOverlapCtes(n, table, maxDf, "<")}
 SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) AS jaccard
 FROM common
 JOIN sizes sa ON sa.doc_id = doc_id_a
 JOIN sizes sb ON sb.doc_id = doc_id_b
 WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= $threshold
 ORDER BY doc_id_a, doc_id_b"""
+
+  /** DuckDB fragment: shingle containment |A∩B| / |A| ≥ threshold per
+    * ordered pair, the df cap as in [[jaccardOracle]].
+    */
+  private def containmentOracle(n: Int, threshold: String, maxDf: Int = 0): String =
+    raw"""WITH ${shingleOverlapCtes(n, "documents", maxDf, "<>")}
+SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / sa.n, 6) AS containment
+FROM common JOIN sizes sa ON sa.doc_id = doc_id_a
+WHERE CAST(c AS DOUBLE) / sa.n >= $threshold
+ORDER BY doc_id_a, doc_id_b"""
+
+  /** The CTEs both pair oracles open with: `sh` (doc_id, s), the distinct
+    * n-token shingles of `table`, less those in more than `maxDf`
+    * documents when `maxDf` > 0; `sizes` (doc_id, n); and `common`
+    * (doc_id_a, doc_id_b, c), the shared-shingle count of every pair
+    * with `doc_id_a pairOrder doc_id_b`.
+    */
+  private def shingleOverlapCtes(n: Int, table: String, maxDf: Int, pairOrder: String): String = {
+    val last = n - 1
+    val (all, cap) = if (maxDf > 0) ("sh_all", raw""",
+sh AS (SELECT doc_id, s FROM sh_all
+       WHERE s IN (SELECT s FROM sh_all GROUP BY s HAVING count(*) <= $maxDf))""") else ("sh", "")
+    raw"""toks AS (SELECT doc_id, $ToksSql AS t FROM $table),
+$all AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+$last], ' ') AS s
+       FROM (SELECT doc_id, t, unnest(range(1, len(t) - ${last - 1})) AS i FROM toks WHERE len(t) >= $n))$cap,
+sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
+           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id $pairOrder b.doc_id GROUP BY 1, 2)"""
   }
 
   /** MinHash + LSH banding for candidates, exact 5-shingle Jaccard ≥ 0.8
@@ -104,6 +130,17 @@ ORDER BY doc_id_a, doc_id_b"""
     list_transform(list_filter(string_split($strExpr, ''), c -> c <> ''), c -> CAST(ascii(c) AS BIGINT))),
   (a, b) -> (a * 31 + b) % 1000000007)"""
 
+  /** DuckDB fragment: the w-token window hashes of the token-hash list
+    * `hh` (empty below w tokens), mirroring WindowHashes.windowHashes:
+    * a polynomial fold over each window's token hashes.
+    */
+  private def windowHashesSql(w: Int): String =
+    raw"""CASE WHEN len(hh) >= $w
+  THEN list_transform(range(0, len(hh) - $w + 1),
+         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + $w)),
+                          (a, b) -> (a * 31 + b) % 1000000007))
+  ELSE CAST([] AS BIGINT[]) END"""
+
   val q21Sql: String =
     raw"""WITH toks AS (SELECT DISTINCT doc_id, unnest($ToksSql) AS tok FROM documents),
 h AS (SELECT doc_id, ${polyHashSql("tok")} AS hv FROM toks),
@@ -114,6 +151,34 @@ SELECT doc_id,
        CAST(sum(CASE WHEN sgn > 0 THEN (CAST(1 AS BIGINT) << CAST(bit AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
 FROM sums GROUP BY doc_id ORDER BY doc_id"""
 
+  /** DuckDB fragment: the connected-components oracle, a CTE list over a
+    * `pairs` (doc_id_a, doc_id_b) CTE the caller defines before it —
+    * `e` (symmetric edges), `n` (nodes), `r` (recursive reachability),
+    * `c` (doc_id, cluster = min reachable id) and `m` (c with its
+    * cluster's `n_members`, through `sz`). The caller's statement opens
+    * with WITH RECURSIVE and brings its own tail.
+    */
+  private def ClusterOracleCtes: String =
+    raw"""e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
+      UNION SELECT doc_id_b, doc_id_a FROM pairs),
+n AS (SELECT DISTINCT s AS node FROM e),
+r AS (SELECT node, node AS reach FROM n
+      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
+c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
+sz AS (SELECT cluster, count(*) AS n_members FROM c GROUP BY cluster),
+m AS (SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster))"""
+
+  /** [[ClusterOracleCtes]] plus `ad` (doc_id, cluster, n_members) for
+    * every document of `docs`, a document in no pair its own cluster of
+    * one: the oracle of the labeller `Dedup.softDedup` and
+    * `Dedup.bestExemplar` share.
+    */
+  private def LabeledOracleCtes(docs: String): String =
+    raw"""$ClusterOracleCtes,
+ad AS (SELECT d.doc_id, coalesce(m.cluster, d.doc_id) AS cluster,
+              CAST(coalesce(m.n_members, 1) AS BIGINT) AS n_members
+       FROM $docs d LEFT JOIN m USING (doc_id))"""
+
   /** Near-duplicate CLUSTERS: connected components over the q19 pair
     * graph (trigram Jaccard ≥ 0.1), every member labeled with its
     * cluster's minimum doc_id — the representative a dedup pipeline
@@ -123,23 +188,14 @@ FROM sums GROUP BY doc_id ORDER BY doc_id"""
     */
   def q46_dup_clusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairs(docs(s, dir), shingleN = 3, threshold = 0.1)
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
-    val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("n_members"))
-    cc.join(sizes, Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
+    ConnectedComponents.members(ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b"))
       .orderBy("doc_id")
   }
 
   val q46Sql: String =
     raw"""WITH RECURSIVE pairs AS (${jaccardOracle(3, "0.1")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM n
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, count(*) AS n_members FROM c GROUP BY cluster)
-SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY c.doc_id"""
+$ClusterOracleCtes
+SELECT doc_id, cluster, n_members FROM m ORDER BY doc_id"""
 
   /** q46's clustering through the LOG-DEPTH connected-components variant
     * (large-star/small-star, ConnectedComponents.runAlternating) — same
@@ -150,10 +206,7 @@ SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY
     */
   def q55_dup_clusters_star(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairs(docs(s, dir), shingleN = 3, threshold = 0.1)
-    val cc = graft.operators.ConnectedComponents.runAlternating(pairs, "doc_id_a", "doc_id_b")
-    val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("n_members"))
-    cc.join(sizes, Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
+    ConnectedComponents.members(ConnectedComponents.runAlternating(pairs, "doc_id_a", "doc_id_b"))
       .orderBy("doc_id")
   }
 
@@ -168,10 +221,7 @@ SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY
     */
   def q91_dup_clusters_prefix(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairsPrefix(docs(s, dir), shingleN = 5, threshold = 0.8)
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
-    val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("n_members"))
-    cc.join(sizes, Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
+    ConnectedComponents.members(ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b"))
       .orderBy("doc_id")
   }
 
@@ -186,28 +236,6 @@ SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY
     * 48·|postings|, linear in the corpus.
     */
   val PairDfCeiling = 96
-
-  /** df-capped Jaccard-pair oracle fragment: [[jaccardOracle]] with the
-    * ceiling applied before sizes/intersections, mirroring
-    * Dedup.ngramJaccardPairsCapped exactly.
-    */
-  private def jaccardOracleCapped(n: Int, threshold: String, maxDf: Int): String = {
-    val last = n - 1
-    raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+$last], ' ') AS s
-       FROM (SELECT doc_id, t, unnest(range(1, len(t) - ${last - 1})) AS i FROM toks WHERE len(t) >= $n)),
-keep AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= $maxDf),
-shc AS (SELECT sh.doc_id, sh.s FROM sh JOIN keep USING (s)),
-sizes AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
-common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
-           FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_id_a
-JOIN sizes sb ON sb.doc_id = doc_id_b
-WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= $threshold
-ORDER BY doc_id_a, doc_id_b"""
-  }
 
   /** q46's dense-threshold (τ=0.1) near-dup clustering behind the df
     * CEILING — the capacity-aware companion that gives the family a
@@ -224,34 +252,19 @@ ORDER BY doc_id_a, doc_id_b"""
   def q233_dup_clusters_capped(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.ngramJaccardPairsCapped(docs(s, dir), shingleN = 3, threshold = 0.1,
       maxDf = PairDfCeiling)
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
-    val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("n_members"))
-    cc.join(sizes, Seq("cluster"))
-      .select(col("node").as("doc_id"), col("cluster"), col("n_members"))
+    ConnectedComponents.members(ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b"))
       .orderBy("doc_id")
   }
 
   val q233Sql: String =
-    raw"""WITH RECURSIVE pairs AS (${jaccardOracleCapped(3, "0.1", PairDfCeiling)}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM n
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, count(*) AS n_members FROM c GROUP BY cluster)
-SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY c.doc_id"""
+    raw"""WITH RECURSIVE pairs AS (${jaccardOracle(3, "0.1", maxDf = PairDfCeiling)}),
+$ClusterOracleCtes
+SELECT doc_id, cluster, n_members FROM m ORDER BY doc_id"""
 
   val q91Sql: String =
     raw"""WITH RECURSIVE pairs AS (${jaccardOracle(5, "0.8")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM n
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, count(*) AS n_members FROM c GROUP BY cluster)
-SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster) ORDER BY c.doc_id"""
+$ClusterOracleCtes
+SELECT doc_id, cluster, n_members FROM m ORDER BY doc_id"""
 
   /** Benchmark-decontamination shape: cross-SOURCE 8-token-shingle
     * overlap — the standard check that training documents don't contain
@@ -401,17 +414,7 @@ SELECT doc_id, count(*) AS n_triangles FROM n GROUP BY doc_id ORDER BY doc_id"""
       .select(col("doc_id_a"), col("doc_id_b"), round(col("containment"), 6).as("containment"))
       .orderBy("doc_id_a", "doc_id_b")
 
-  val q72Sql: String =
-    raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3)),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id GROUP BY 1, 2)
-SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / sa.n, 6) AS containment
-FROM common JOIN sizes sa ON sa.doc_id = doc_id_a
-WHERE CAST(c AS DOUBLE) / sa.n >= 0.5
-ORDER BY doc_id_a, doc_id_b"""
+  val q72Sql: String = containmentOracle(3, "0.5")
 
   /** q72's containment behind the df CEILING — the capacity-aware
     * companion for the containment family (round-13 verdict item 4,
@@ -428,19 +431,7 @@ ORDER BY doc_id_a, doc_id_b"""
   def q234_containment_capped(s: SparkSession, dir: String): DataFrame =
     containmentPairs(s, dir, Dedup.DfCap(PairDfCeiling))
 
-  val q234Sql: String =
-    raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
-       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3)),
-keep AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= $PairDfCeiling),
-shc AS (SELECT sh.doc_id, sh.s FROM sh JOIN keep USING (s)),
-sizes AS (SELECT doc_id, count(*) AS n FROM shc GROUP BY doc_id),
-common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
-           FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id <> b.doc_id GROUP BY 1, 2)
-SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / sa.n, 6) AS containment
-FROM common JOIN sizes sa ON sa.doc_id = doc_id_a
-WHERE CAST(c AS DOUBLE) / sa.n >= 0.5
-ORDER BY doc_id_a, doc_id_b"""
+  val q234Sql: String = containmentOracle(3, "0.5", PairDfCeiling)
 
   /** Rolling-hash document fingerprint over the normalized token stream. */
   def q25_fingerprint(s: SparkSession, dir: String): DataFrame =
@@ -534,17 +525,7 @@ ORDER BY new_id, existing_id"""
       .select(col("doc_id_a"), col("doc_id_b"), round(col("containment"), 6).as("containment"))
       .orderBy("doc_id_a", "doc_id_b")
 
-  val q102Sql: String =
-    raw"""WITH toks AS (SELECT doc_id, $ToksSql AS t FROM documents),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS s
-       FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i FROM toks WHERE len(t) >= 5)),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, count(*) AS c
-           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id GROUP BY 1, 2)
-SELECT doc_id_a, doc_id_b, round(CAST(c AS DOUBLE) / sa.n, 6) AS containment
-FROM common JOIN sizes sa ON sa.doc_id = doc_id_a
-WHERE CAST(c AS DOUBLE) / sa.n >= 0.6
-ORDER BY doc_id_a, doc_id_b"""
+  val q102Sql: String = containmentOracle(5, "0.6")
 
   /** Repeated-span audit (the ExactSubstr motivation of Lee et al. 2022,
     * "Deduplicating Training Data Makes Language Models Better"): for
@@ -600,13 +581,7 @@ ORDER BY doc_id_a, doc_id_b"""
   val q131Sql: String =
     raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
 th AS (SELECT doc_id, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT doc_id,
-             CASE WHEN len(hh) >= 10
-                  THEN list_transform(range(0, len(hh) - 10 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 10)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT doc_id, ${windowHashesSql(10)} AS whs FROM th),
 e AS (SELECT doc_id, unnest(whs) AS h FROM w),
 dk AS (SELECT h FROM e GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
 du AS (SELECT e.doc_id, count(*) AS n_dup FROM e JOIN dk USING (h) GROUP BY e.doc_id),
@@ -645,18 +620,17 @@ FROM f ORDER BY doc_id"""
       .select(col("doc_id_a").as("s"), col("doc_id_b").as("d"))
     val e = pairs.unionByName(pairs.select(col("d").as("s"), col("s").as("d")))
       .localCheckpoint() // edge list is tiny; pinning avoids 6 re-runs of the prefix pipeline
-    var labels = e.select(col("s").as("node")).distinct().withColumn("lbl", col("node"))
-    (1 to 3).foreach { _ =>
-      labels = e.join(labels.withColumnRenamed("node", "d"), Seq("d"))
+    // flat lineage per round (Rounds.iterate, the CC/PageRank loop)
+    val (labels, _) = graft.core.Rounds.iterate(
+        e.select(col("s").as("node")).distinct().withColumn("lbl", col("node")), 3) { prev =>
+      e.join(prev.withColumnRenamed("node", "d"), Seq("d"))
         .groupBy(col("s"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("s"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("s").as("node"), col("m.l").as("lbl"))
-        .localCheckpoint() // flat lineage per round (the CC/PageRank hygiene)
-    }
-    val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("n_members"))
-    labels.join(sizes, Seq("lbl"))
-      .select(col("node").as("doc_id"), col("lbl").as("community"), col("n_members"))
+    }(_ => false)
+    ConnectedComponents.members(labels.withColumnRenamed("lbl", "cluster"))
+      .withColumnRenamed("cluster", "community")
       .orderBy("doc_id")
   }
 
@@ -664,8 +638,8 @@ FROM f ORDER BY doc_id"""
     * (cnt DESC, lbl) argmax — the row_number twin of the engine's
     * min(struct(-cnt, lbl)).
     */
-  private def lpRoundSql(n: Int, prev: String): String =
-    raw"""c$n AS (SELECT e.s, l.lbl, count(*) AS cnt FROM e JOIN $prev l ON l.node = e.d GROUP BY e.s, l.lbl),
+  private def lpRoundSql(n: Int): String =
+    raw"""c$n AS (SELECT e.s, l.lbl, count(*) AS cnt FROM e JOIN l${n - 1} l ON l.node = e.d GROUP BY e.s, l.lbl),
 l$n AS (SELECT s AS node, lbl FROM (
          SELECT s, lbl, row_number() OVER (PARTITION BY s ORDER BY cnt DESC, lbl) AS rn FROM c$n)
        WHERE rn = 1)"""
@@ -675,9 +649,7 @@ l$n AS (SELECT s AS node, lbl FROM (
 e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
       UNION ALL SELECT doc_id_b, doc_id_a FROM pairs),
 l0 AS (SELECT DISTINCT s AS node, s AS lbl FROM e),
-${lpRoundSql(1, "l0")},
-${lpRoundSql(2, "l1")},
-${lpRoundSql(3, "l2")},
+${(1 to 3).map(lpRoundSql).mkString(",\n")},
 sz AS (SELECT lbl, count(*) AS n_members FROM l3 GROUP BY lbl)
 SELECT l3.node AS doc_id, l3.lbl AS community, sz.n_members
 FROM l3 JOIN sz USING (lbl) ORDER BY doc_id"""
@@ -717,13 +689,7 @@ FROM l3 JOIN sz USING (lbl) ORDER BY doc_id"""
   val q149Sql: String =
     raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
 th AS (SELECT doc_id, tk, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT doc_id, tk,
-             CASE WHEN len(hh) >= 10
-                  THEN list_transform(range(0, len(hh) - 10 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 10)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT doc_id, tk, ${windowHashesSql(10)} AS whs FROM th),
 occ AS (SELECT doc_id, i AS pos, whs[i + 1] AS h
         FROM (SELECT doc_id, whs, unnest(range(0, len(whs))) AS i FROM w)),
 rk AS (SELECT doc_id, pos,
@@ -765,13 +731,7 @@ FROM k ORDER BY doc_id"""
     raw"""WITH t AS (SELECT doc_id, CASE WHEN (doc_id % 4 + 4) % 4 = 3 THEN 1 ELSE 0 END AS pri,
                  $ToksSql AS tk FROM documents),
 th AS (SELECT doc_id, pri, tk, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT doc_id, pri, tk,
-             CASE WHEN len(hh) >= 10
-                  THEN list_transform(range(0, len(hh) - 10 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 10)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT doc_id, pri, tk, ${windowHashesSql(10)} AS whs FROM th),
 occ AS (SELECT doc_id, pri, i AS pos, whs[i + 1] AS h
         FROM (SELECT doc_id, pri, whs, unnest(range(0, len(whs))) AS i FROM w)),
 rk AS (SELECT doc_id, pri, pos,
@@ -848,13 +808,7 @@ FROM k ORDER BY doc_id"""
   val q164Sql: String =
     raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
 th AS (SELECT doc_id, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT doc_id,
-             CASE WHEN len(hh) >= 8
-                  THEN list_transform(range(0, len(hh) - 8 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 8)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT doc_id, ${windowHashesSql(8)} AS whs FROM th),
 e AS (SELECT doc_id, unnest(whs) AS h FROM w),
 ev AS (SELECT DISTINCT h FROM e WHERE doc_id % 97 = 0),
 hits AS (SELECT e.doc_id, count(*) AS n_hits FROM e JOIN ev USING (h)
@@ -917,13 +871,7 @@ FROM tot t LEFT JOIN hits h USING (doc_id) ORDER BY t.doc_id"""
   val q188Sql: String =
     raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
 th AS (SELECT doc_id, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT doc_id,
-             CASE WHEN len(hh) >= 4
-                  THEN list_transform(range(0, len(hh) - 4 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 4)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT doc_id, ${windowHashesSql(4)} AS whs FROM th),
 e AS (SELECT doc_id, unnest(whs) AS h FROM w),
 ev AS (SELECT DISTINCT CAST((doc_id // 97) % 3 AS INTEGER) AS benchmark, h
        FROM e WHERE doc_id % 97 = 0),
@@ -986,23 +934,13 @@ FROM hits h JOIN tot t USING (doc_id) ORDER BY h.doc_id, h.benchmark"""
     * the kept array verbatim.
     */
   val q190Sql: String =
-    raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents WHERE doc_id < 1500),
-n AS (SELECT doc_id, tk, CAST((len(tk) + 4) // 5 AS BIGINT) AS nch FROM t),
-ch AS (SELECT doc_id, ci, array_to_string(list_slice(tk, ci * 5 + 1, ci * 5 + 5), ' ') AS chunk
-       FROM (SELECT doc_id, tk, unnest(range(0, nch)) AS ci FROM n)),
-hh AS (SELECT doc_id, ci, ${polyHashSql("chunk")} AS h FROM ch),
-boiler AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM hh GROUP BY h) WHERE df >= 3),
-rem AS (SELECT doc_id, list_sort(list(DISTINCT ci)) AS rem FROM hh JOIN boiler USING (h) GROUP BY doc_id),
-fin AS (SELECT n.doc_id, n.tk, coalesce(rem.rem, CAST([] AS BIGINT[])) AS rem
-        FROM n LEFT JOIN rem USING (doc_id)),
-k AS (SELECT doc_id, tk,
-             list_filter(tk, (x, i) -> NOT list_contains(rem, (i - 1) // 5)) AS kept
-      FROM fin),
+    raw"""WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 1500),
+${BoilerplateCtes("d")},
 c AS (SELECT doc_id, kept,
              CAST(len(tk) AS BIGINT) AS n_tokens,
              CAST(len(tk) - len(kept) AS BIGINT) AS n_removed,
              coalesce(array_to_string(kept, ' '), '') AS text
-      FROM k),
+      FROM ck),
 cb AS (SELECT doc_id, kept AS btk, CAST(len(kept) AS BIGINT) AS bn FROM c),
 bg2 AS (SELECT doc_id, array_to_string(btk[i:i+1], ' ') AS g
         FROM (SELECT doc_id, btk, unnest(range(1, len(btk))) AS i FROM cb WHERE len(btk) >= 2)),
@@ -1066,20 +1004,9 @@ FROM c JOIN keepd USING (doc_id) ORDER BY c.doc_id"""
   val q172Sql: String = {
     val (a, b) = PortableHash.minHashCoeffs(0)
     raw"""WITH RECURSIVE pairs AS (${jaccardOracle(5, "0.8")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM n
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_members FROM c GROUP BY cluster),
-m AS (SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster)),
-ad AS (SELECT d.doc_id, coalesce(m.cluster, d.doc_id) AS cluster,
-              CAST(coalesce(m.n_members, 1) AS BIGINT) AS n_members,
-              ((d.doc_id % 2147483647) * $a + $b) % 2147483647 AS h
-       FROM documents d LEFT JOIN m USING (doc_id))
+${LabeledOracleCtes("documents")}
 SELECT doc_id, cluster, n_members FROM ad
-WHERE h * n_members < 2147483647 ORDER BY doc_id"""
+WHERE ((doc_id % 2147483647) * $a + $b) % 2147483647 * n_members < 2147483647 ORDER BY doc_id"""
   }
 
   /** Boilerplate chunk removal — the CCNet "remove duplicated lines"
@@ -1104,23 +1031,36 @@ WHERE h * n_members < 2147483647 ORDER BY doc_id"""
     * the fully-boilerplate document coalesces to ''.
     */
   val q173Sql: String =
-    raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
-n AS (SELECT doc_id, tk, CAST((len(tk) + 4) // 5 AS BIGINT) AS nch FROM t),
-ch AS (SELECT doc_id, ci, array_to_string(list_slice(tk, ci * 5 + 1, ci * 5 + 5), ' ') AS chunk
-       FROM (SELECT doc_id, tk, unnest(range(0, nch)) AS ci FROM n)),
-hh AS (SELECT doc_id, ci, ${polyHashSql("chunk")} AS h FROM ch),
-boiler AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM hh GROUP BY h) WHERE df >= 3),
-rem AS (SELECT doc_id, list_sort(list(DISTINCT ci)) AS rem FROM hh JOIN boiler USING (h) GROUP BY doc_id),
-fin AS (SELECT n.doc_id, n.tk, n.nch, coalesce(rem.rem, CAST([] AS BIGINT[])) AS rem
-        FROM n LEFT JOIN rem USING (doc_id)),
-k AS (SELECT doc_id, tk, nch, rem,
-             list_filter(tk, (x, i) -> NOT list_contains(rem, (i - 1) // 5)) AS kept
-      FROM fin)
+    raw"""WITH ${BoilerplateCtes("documents")}
 SELECT doc_id, nch AS n_chunks, CAST(len(rem) AS BIGINT) AS n_boiler,
        CAST(len(tk) AS BIGINT) AS n_tokens,
        CAST(len(tk) - len(kept) AS BIGINT) AS n_removed,
        coalesce(array_to_string(kept, ' '), '') AS clean_text
-FROM k ORDER BY doc_id"""
+FROM ck ORDER BY doc_id"""
+
+  /** q173's rule (Dedup.removeBoilerplate, minDocs = 3) as [[chunkRemovalCtes]]. */
+  private def BoilerplateCtes(docs: String): String = chunkRemovalCtes(docs,
+    raw"""cboiler AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM chh GROUP BY h) WHERE df >= 3),
+crem AS (SELECT doc_id, list_sort(list(DISTINCT ci)) AS rem FROM chh JOIN cboiler USING (h) GROUP BY doc_id)""")
+
+  /** DuckDB fragment: 5-token chunk removal over the (doc_id, text)
+    * relation `docs`. Chunk hashes `chh` (doc_id, ci, h) feed `removal`,
+    * which ends in `crem` (doc_id, rem = sorted removed chunk indices);
+    * `ck` (doc_id, tk, nch, rem, kept) is the result. c-prefixed names,
+    * so q173, q176, q178 and q190 splice it beside their own CTEs.
+    */
+  private def chunkRemovalCtes(docs: String, removal: String): String =
+    raw"""ct AS (SELECT doc_id, $ToksSql AS tk FROM $docs),
+cn AS (SELECT doc_id, tk, CAST((len(tk) + 4) // 5 AS BIGINT) AS nch FROM ct),
+cch AS (SELECT doc_id, ci, array_to_string(list_slice(tk, ci * 5 + 1, ci * 5 + 5), ' ') AS chunk
+        FROM (SELECT doc_id, tk, unnest(range(0, nch)) AS ci FROM cn)),
+chh AS (SELECT doc_id, ci, ${polyHashSql("chunk")} AS h FROM cch),
+$removal,
+cfin AS (SELECT cn.doc_id, cn.tk, cn.nch, coalesce(crem.rem, CAST([] AS BIGINT[])) AS rem
+         FROM cn LEFT JOIN crem USING (doc_id)),
+ck AS (SELECT doc_id, tk, nch, rem,
+              list_filter(tk, (x, i) -> NOT list_contains(rem, (i - 1) // 5)) AS kept
+       FROM cfin)"""
 
   /** Quality-arg-max dedup: every τ=0.8 duplicate cluster keeps its
     * HIGHEST-quality member (q140's logit score z, doc_id on ties)
@@ -1139,18 +1079,8 @@ FROM k ORDER BY doc_id"""
     */
   val q174Sql: String =
     raw"""WITH RECURSIVE pairs AS (${jaccardOracle(5, "0.8")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-nn AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM nn
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_members FROM c GROUP BY cluster),
-m AS (SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster)),
-${QueriesText.QualityZSql},
-ad AS (SELECT d.doc_id, coalesce(m.cluster, d.doc_id) AS cluster,
-              CAST(coalesce(m.n_members, 1) AS BIGINT) AS n_members
-       FROM documents d LEFT JOIN m USING (doc_id)),
+${LabeledOracleCtes("documents")},
+${QueriesText.QualityZSql("documents")},
 j AS (SELECT ad.doc_id, ad.cluster, ad.n_members, z.z FROM ad JOIN z USING (doc_id)),
 k AS (SELECT *, row_number() OVER (PARTITION BY cluster ORDER BY z DESC, doc_id) AS rn FROM j)
 SELECT doc_id, cluster, n_members, z FROM k WHERE rn = 1 ORDER BY doc_id"""
@@ -1184,51 +1114,17 @@ SELECT doc_id, cluster, n_members, z FROM k WHERE rn = 1 ORDER BY doc_id"""
       .orderBy("doc_id")
   }
 
-  /** Oracle: the q173 chain (b-prefixed CTEs) materializes the cleaned
-    * table; pairs/clusters/z replay the q174 CTEs against it (the z
-    * chain restated q-prefixed because its canonical fragment is bound
-    * to `documents`).
+  /** Oracle: the q173 chain materializes the cleaned table;
+    * pairs/clusters/z replay the q174 CTEs against it.
     */
   val q176Sql: String =
-    raw"""WITH RECURSIVE bt AS (SELECT doc_id, $ToksSql AS tk FROM documents),
-bn AS (SELECT doc_id, tk, CAST((len(tk) + 4) // 5 AS BIGINT) AS nch FROM bt),
-bch AS (SELECT doc_id, ci, array_to_string(list_slice(tk, ci * 5 + 1, ci * 5 + 5), ' ') AS chunk
-        FROM (SELECT doc_id, tk, unnest(range(0, nch)) AS ci FROM bn)),
-bhh AS (SELECT doc_id, ci, ${polyHashSql("chunk")} AS h FROM bch),
-bboiler AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM bhh GROUP BY h) WHERE df >= 3),
-brem AS (SELECT doc_id, list(DISTINCT ci) AS rem FROM bhh JOIN bboiler USING (h) GROUP BY doc_id),
-bfin AS (SELECT bn.doc_id, bn.tk, coalesce(brem.rem, CAST([] AS BIGINT[])) AS rem
-         FROM bn LEFT JOIN brem USING (doc_id)),
-cd AS (SELECT doc_id,
-              coalesce(array_to_string(
-                list_filter(tk, (x, i) -> NOT list_contains(rem, (i - 1) // 5)), ' '), '') AS text
-       FROM bfin),
+    raw"""WITH RECURSIVE ${BoilerplateCtes("documents")},
+cd AS (SELECT doc_id, coalesce(array_to_string(kept, ' '), '') AS text FROM ck),
 cdn AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n_chars FROM cd),
 pairs AS (${jaccardOracle(5, "0.8", "cdn")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-nn AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM nn
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
-sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_members FROM c GROUP BY cluster),
-m AS (SELECT c.doc_id, c.cluster, sz.n_members FROM c JOIN sz USING (cluster)),
-qt AS (SELECT doc_id, n_chars,
-              length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-              len($ToksSql) AS n_tokens,
-              len(list_filter($ToksSql, w -> list_contains(['the', 'a', 'and', 'of', 'is'], w))) AS n_stop
-       FROM cdn),
-qfeat AS (SELECT doc_id,
-                 CASE WHEN n_chars = 0 THEN 0.0 ELSE CAST(alpha AS DOUBLE) / n_chars END AS alpha_ratio,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(n_stop AS DOUBLE) / n_tokens END AS stop_ratio,
-                 least((CASE WHEN n_tokens = 0 THEN 0.0 ELSE CAST(alpha AS DOUBLE) / n_tokens END) / 10.0, 1.0) AS len_feat,
-                 least(CAST(n_tokens AS DOUBLE) / 200.0, 1.0) AS size_feat
-          FROM qt),
-qz AS (SELECT doc_id, round(-2.0 + 3.0 * alpha_ratio + 2.0 * stop_ratio + 1.5 * len_feat + 0.5 * size_feat, 6) AS z FROM qfeat),
-ad AS (SELECT cdn.doc_id, coalesce(m.cluster, cdn.doc_id) AS cluster,
-              CAST(coalesce(m.n_members, 1) AS BIGINT) AS n_members
-       FROM cdn LEFT JOIN m USING (doc_id)),
-j AS (SELECT ad.doc_id, ad.cluster, ad.n_members, qz.z FROM ad JOIN qz USING (doc_id)),
+${LabeledOracleCtes("cdn")},
+${QueriesText.QualityZSql("cdn")},
+j AS (SELECT ad.doc_id, ad.cluster, ad.n_members, z.z FROM ad JOIN z USING (doc_id)),
 k AS (SELECT *, row_number() OVER (PARTITION BY cluster ORDER BY z DESC, doc_id) AS rn FROM j)
 SELECT doc_id, cluster, n_members, z FROM k WHERE rn = 1 ORDER BY doc_id"""
 
@@ -1253,23 +1149,14 @@ SELECT doc_id, cluster, n_members, z FROM k WHERE rn = 1 ORDER BY doc_id"""
     * reconstruction with the q149/q173 empty-list coalesce.
     */
   val q178Sql: String =
-    raw"""WITH t AS (SELECT doc_id, $ToksSql AS tk FROM documents),
-n AS (SELECT doc_id, tk, CAST((len(tk) + 4) // 5 AS BIGINT) AS nch FROM t),
-ch AS (SELECT doc_id, ci, array_to_string(list_slice(tk, ci * 5 + 1, ci * 5 + 5), ' ') AS chunk
-       FROM (SELECT doc_id, tk, unnest(range(0, nch)) AS ci FROM n)),
-hh AS (SELECT doc_id, ci, ${polyHashSql("chunk")} AS h FROM ch),
-mn AS (SELECT doc_id, ci, min(ci) OVER (PARTITION BY doc_id, h) AS first_ci FROM hh),
-rem AS (SELECT doc_id, list_sort(list(ci)) AS rem FROM mn WHERE ci > first_ci GROUP BY doc_id),
-fin AS (SELECT n.doc_id, n.tk, n.nch, coalesce(rem.rem, CAST([] AS BIGINT[])) AS rem
-        FROM n LEFT JOIN rem USING (doc_id)),
-k AS (SELECT doc_id, tk, nch, rem,
-             list_filter(tk, (x, i) -> NOT list_contains(rem, (i - 1) // 5)) AS kept
-      FROM fin)
+    raw"""WITH ${chunkRemovalCtes("documents",
+      """cmn AS (SELECT doc_id, ci, min(ci) OVER (PARTITION BY doc_id, h) AS first_ci FROM chh),
+crem AS (SELECT doc_id, list_sort(list(ci)) AS rem FROM cmn WHERE ci > first_ci GROUP BY doc_id)""")}
 SELECT doc_id, nch AS n_chunks, CAST(len(rem) AS BIGINT) AS n_dup_chunks,
        CAST(len(tk) AS BIGINT) AS n_tokens,
        CAST(len(tk) - len(kept) AS BIGINT) AS n_removed,
        coalesce(array_to_string(kept, ' '), '') AS clean_text
-FROM k ORDER BY doc_id"""
+FROM ck ORDER BY doc_id"""
 
   /** Cross-SOURCE novelty — the between-dump diversity report a curation
     * run consults before paying for another crawl snapshot: for every
@@ -1307,13 +1194,7 @@ FROM k ORDER BY doc_id"""
   val q180Sql: String =
     raw"""WITH t AS (SELECT doc_id, source, $ToksSql AS tk FROM documents),
 th AS (SELECT source, list_transform(tk, s -> ${polyHashSql("s")}) AS hh FROM t),
-w AS (SELECT source,
-             CASE WHEN len(hh) >= 8
-                  THEN list_transform(range(0, len(hh) - 8 + 1),
-                         i -> list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(hh, i + 1, i + 8)),
-                                          (a, b) -> (a * 31 + b) % 1000000007))
-                  ELSE CAST([] AS BIGINT[]) END AS whs
-      FROM th),
+w AS (SELECT source, ${windowHashesSql(8)} AS whs FROM th),
 e AS (SELECT DISTINCT source, h FROM (SELECT source, unnest(whs) AS h FROM w)),
 df AS (SELECT h, count(*) AS nsrc FROM e GROUP BY h),
 agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_windows,
@@ -1357,7 +1238,7 @@ FROM agg ORDER BY source"""
     // audit; without the cache it re-executes per consumer
     val pairs = Dedup.ngramJaccardPairs(docs(s, dir), shingleN = 3, threshold = 0.1)
       .select("doc_id_a", "doc_id_b").persist()
-    val cc = graft.operators.ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
+    val cc = ConnectedComponents.run(pairs, "doc_id_a", "doc_id_b")
     val keyed = d.join(cc.select(col("node").as("doc_id"), col("cluster")), Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_chars"), coalesce(col("cluster"), col("doc_id")).as("rep"))
       .select(col("doc_id"), col("n_chars"),
@@ -1387,12 +1268,7 @@ FROM agg ORDER BY source"""
     def splitOf(b: String) =
       s"CASE WHEN $b < 8 THEN 'train' WHEN $b = 8 THEN 'val' ELSE 'test' END"
     raw"""WITH RECURSIVE pairs AS (${jaccardOracle(3, "0.1")}),
-e AS (SELECT doc_id_a AS s, doc_id_b AS d FROM pairs
-      UNION SELECT doc_id_b, doc_id_a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-r AS (SELECT node, node AS reach FROM n
-      UNION SELECT e.s, r.reach FROM e JOIN r ON r.node = e.d),
-c AS (SELECT node AS doc_id, min(reach) AS cluster FROM r GROUP BY node),
+$ClusterOracleCtes,
 k AS (SELECT d.doc_id, d.n_chars,
              ${splitOf(bucket("COALESCE(c.cluster, d.doc_id)"))} AS split,
              ${splitOf(bucket("d.doc_id"))} AS naive_split

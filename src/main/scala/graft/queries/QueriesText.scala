@@ -801,19 +801,20 @@ FROM r WHERE rnk <= 10 ORDER BY query_id, rnk"""
       .select("doc_id", "z")
   }
 
-  /** The matching DuckDB CTE chain (t, feat, z) producing (doc_id, z) —
-    * the fragment form so q140 and q174 splice identical score SQL.
+  /** The matching DuckDB CTE chain (t, feat, z) producing (doc_id, z)
+    * over the (doc_id, text, n_chars) relation `docs` — the fragment form
+    * so q140, q174 and q176 splice identical score SQL.
     * A def, not a val: QueriesDedup.q174Sql splices it while QueriesText
     * itself splices QueriesDedup.polyHashSql — a val on either side of
     * that cycle is null during the other object's initialization.
     */
-  private[queries] def QualityZSql: String =
+  private[queries] def QualityZSql(docs: String): String =
     raw"""t AS (
   SELECT doc_id, n_chars,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
          len($ToksSql) AS n_tokens,
          len(list_filter($ToksSql, w -> list_contains(['the', 'a', 'and', 'of', 'is'], w))) AS n_stop
-  FROM documents),
+  FROM $docs),
 feat AS (
   SELECT doc_id,
          CASE WHEN n_chars = 0 THEN 0.0 ELSE CAST(alpha AS DOUBLE) / n_chars END AS alpha_ratio,
@@ -836,7 +837,7 @@ z AS (SELECT doc_id, round(-2.0 + 3.0 * alpha_ratio + 2.0 * stop_ratio + 1.5 * l
   }
 
   val q140Sql: String =
-    raw"""WITH $QualityZSql,
+    raw"""WITH ${QualityZSql("documents")},
 p AS (SELECT doc_id, z, round(1.0 / (1.0 + exp(-z)), 6) AS p FROM z),
 b AS (SELECT least(CAST(floor(p * 10) AS BIGINT), 9) AS bucket, z, p FROM p)
 SELECT bucket, count(*) AS n_docs, round(avg(p), 6) AS avg_p,
@@ -1370,7 +1371,7 @@ GROUP BY d.source ORDER BY d.source"""
   }
 
   val q220Sql: String =
-    raw"""WITH $QualityZSql,
+    raw"""WITH ${QualityZSql("documents")},
 p AS (SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS p FROM z),
 pm AS (SELECT doc_id, p, CAST(round(p * 1000000.0) AS BIGINT) AS p_micro FROM p),
 y AS (SELECT doc_id, CASE WHEN len($ToksSql) >= 45 THEN 1 ELSE 0 END AS y FROM documents),

@@ -631,7 +631,7 @@ object StreamingJobs {
     * batch's chunks plus keyed merges into the touched df/ids rows.
     */
   def boilerMaintSink(outDir: String, c: Int = 5)(batch: DataFrame, batchId: Long): Unit = {
-    graft.operators.ConnectedComponents.unpersistCheckpoint(
+    graft.core.Rounds.unpersistCheckpoint(
       boilerMaintIngest(outDir, c)(batch, batchId))
   }
 
@@ -643,7 +643,7 @@ object StreamingJobs {
     * on disk after this version's write (compaction never folds past
     * the replay predecessor), so consuming it after the state commit
     * is sound. It comes back pinned as a local checkpoint: free it with
-    * [[graft.operators.ConnectedComponents.unpersistCheckpoint]]
+    * [[graft.core.Rounds.unpersistCheckpoint]]
     * (`Dataset.unpersist` does not reach a checkpoint's blocks).
     *
     * Delta storage ([[DeltaState]]): the version holds only the batch's
@@ -784,7 +784,7 @@ object StreamingJobs {
         () => idempotentParquetSink(s"$outDir/raw")(novel, batchId),
         () => idempotentParquetSink(s"$outDir/curated")(kept, batchId)))
       written.get("n").asInstanceOf[Long]
-    } finally graft.operators.ConnectedComponents.unpersistCheckpoint(admitted)
+    } finally graft.core.Rounds.unpersistCheckpoint(admitted)
   }
 
   /** The curated table: union of all committed batch directories. */

@@ -74,6 +74,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.values.toSet == Set(0L) && got.size == 200)
   }
 
+  test("the alternating variant throws when its rounds run out") {
+    // a 200-node chain needs several star rounds; one is never a fixpoint
+    val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    val ex = intercept[IllegalStateException] {
+      ConnectedComponents.runAlternating(edges, "a", "b", maxIter = 1).collect()
+    }
+    assert(ex.getMessage.contains("did not converge"), ex.getMessage)
+  }
+
   test("every label is the true minimum of its component (vs driver-side union-find)") {
     val rng = new scala.util.Random(5)
     val edges = Seq.fill(80)((rng.nextInt(200).toLong, rng.nextInt(200).toLong))

@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard for the vector top-k path: the oracle contract (cosine
-  * rounded HALF_UP to 6 dp from precomputed norms; top-k by score desc,
-  * then id asc) lives in one helper per piece, and `src/main` may not
-  * grow a second copy of any of them.
+/** Source guards for pieces written once. The vector top-k path: the
+  * oracle contract (cosine rounded HALF_UP to 6 dp from precomputed
+  * norms; top-k by score desc, then id asc) lives in one helper per
+  * piece. The near-duplicate graph family: one round loop with one
+  * checkpoint release, one cluster-size tail and one reachability
+  * oracle. `src/main` may not grow a second copy of any of them.
   */
 class SourceScanSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -55,5 +57,24 @@ class SourceScanSpec extends AnyFunSuite {
     // q121, q208 and q210 re-rank their screens through the one helper
     assert(hits("""Similarity\.rerankScreen\(""").map(_._1) ==
       Seq.fill(3)("graft/queries/QueriesSim.scala"))
+  }
+
+  test("one round loop: localCheckpoint blocks are released only in Rounds") {
+    val releases = hits("""lr\.rdd\.unpersist""")
+    assert(releases.map(_._1) == Seq("graft/core/Rounds.scala"),
+      s"checkpoint releases outside Rounds.unpersistCheckpoint: $releases")
+    assert(hits("""def iterate\(""").map(_._1) == Seq("graft/core/Rounds.scala"))
+  }
+
+  test("one cluster-size tail: the n_members aggregate keyed on cluster is ConnectedComponents.members") {
+    val tails = hits("""groupBy\("cluster"\)\.agg\(count\(lit\(1\)\)\.as\("n_members"\)\)""")
+    assert(tails.map(_._1) == Seq("graft/operators/ConnectedComponents.scala"),
+      s"cluster-size tails outside ConnectedComponents.members: $tails")
+  }
+
+  test("one reachability oracle: the recursive reach clause is written once") {
+    val clauses = hits("""UNION SELECT e\.s, r\.reach""")
+    assert(clauses.map(_._1) == Seq("graft/queries/QueriesDedup.scala"),
+      s"reachability CTEs outside ClusterOracleCtes: $clauses")
   }
 }
